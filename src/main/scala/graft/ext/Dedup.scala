@@ -362,7 +362,7 @@ object Dedup {
     // the old form paid is a per-partition hash set
     var labels = edgesByDst.mapPartitions({ it =>
       val seen = new java.util.HashSet[Long]()
-      it.collect { case (dst, _) if seen.add(dst) => (dst, dst) }
+      it.filter { case (dst, _) => seen.add(dst) }.map { case (dst, _) => (dst, dst) }
     }, preservesPartitioning = true).cache()
     var labelsCheckpointed = false // never unpersist a checkpointed generation
     var iter = 0
@@ -738,6 +738,21 @@ object Dedup {
     */
   private val NearDupFormat = "2"
 
+  /** The near-dup index's [[StoredIndex]] declaration: three data
+    * tables compacted per table, `doc_id` tombstones, `shingles` (the
+    * largest; the three grow in lockstep) as the file-count gauge, and
+    * every verb but the rebuild gated on the `_format` stamp. No reader
+    * registry-persists a frame over the live tables (the screen's
+    * memoized batch-side frame reads only the frozen hot list), so a
+    * takedown releases only `deletes/` and a compaction only what it
+    * swapped. Builds and appends call no release.
+    */
+  private[graft] val NearDupIndex = new StoredIndex(
+    tables = Seq("shingles", "sizes", "hashes"),
+    tombstones = Some(StoredIndex.Tombstones("doc_id", StoredIndex.Changed)),
+    compactRelease = StoredIndex.Changed,
+    guard = requireNearDupFormat)
+
   private def requireNearDupFormat(spark: SparkSession, indexDir: String): Unit =
     if (IndexFs.exists(spark, s"$indexDir/hashes") &&
         !IndexFs.readSmall(spark, s"$indexDir/_format").contains(NearDupFormat))
@@ -768,8 +783,7 @@ object Dedup {
     // heal a crashed compaction swap BEFORE appending: mode("append")
     // into a missing live table would mint a batch-only table and fork
     // the index away from the orphaned .compact copy
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
+    NearDupIndex.open(spark, indexDir)
     val hot = spark.read.parquet(s"$indexDir/hot")
     val capped = graft.tools.InternalCaches.persist(
       hashedShingleSet(batch, n).join(broadcast(hot), Seq("sh"), "left_anti"))
@@ -786,62 +800,32 @@ object Dedup {
       },
       () => batch.select(col("doc_id"), md5(col("text")).as("h")).distinct()
         .repartition(1).write.mode("append").parquet(s"$indexDir/hashes")))
-    if (maxFilesPerTable > 0 &&
-        countDataFiles(spark, s"$indexDir/shingles") > maxFilesPerTable.toLong)
-      compactNearDupIndex(spark, indexDir)
+    NearDupIndex.compactIfOver(spark, indexDir, maxFilesPerTable)(
+      compactNearDupIndex(spark, indexDir))
   }
 
   /** [[appendNearDupIndex]] under an at-least-once delivery contract
     * (the x114 streaming gate): near-dup appends are NOT replay-safe —
     * duplicated shingle rows inflate intersection counts (the x104
     * nuance) — so each append commits a per-batch marker
-    * (`_batch_commits/b<id>`) and a redelivered batch whose marker
-    * exists is skipped outright. The marker writes AFTER the data (a
-    * crash between them makes the redelivery double-append — the
+    * ([[StoredIndex.once]]) and a redelivered batch whose marker
+    * exists is skipped outright. A crash between the data and the
+    * marker makes the redelivery double-append — the
     * over-approximation [[compactNearDupIndex]]'s distinct-rewrite
-    * repairs, spec-gated), never before (marker-first would LOSE the
-    * batch). Marker I/O goes through [[IndexFs]] (the Hadoop API), so
-    * the exactly-once contract holds on whatever filesystem `indexDir`
-    * names — hdfs/s3a index dirs included, not just local disk.
-    * Returns whether the append ran.
+    * repairs, spec-gated. Marker I/O goes through [[IndexFs]] (the
+    * Hadoop API), so the exactly-once contract holds on whatever
+    * filesystem `indexDir` names — hdfs/s3a index dirs included, not
+    * just local disk. Returns whether the append ran.
     */
   def appendNearDupIndexOnce(batch: DataFrame, indexDir: String,
-      batchId: Long, n: Int = 3, maxFilesPerTable: Int = 64): Boolean = {
-    val spark = batch.sparkSession
-    // heal a crashed whole-index rebuild swap BEFORE the marker probe:
-    // the markers live inside the swapped directory
-    IndexFs.recoverSwap(spark, indexDir)
-    val marker = s"$indexDir/_batch_commits/b$batchId"
-    if (IndexFs.exists(spark, marker)) false
-    else {
-      appendNearDupIndex(batch, indexDir, n, maxFilesPerTable)
-      IndexFs.touch(spark, marker)
-      true
-    }
-  }
-
-  /** A stored near-dup table with takedown tombstones applied — the
-    * per-doc_id anti-join every index reader routes through
-    * (merge-on-read, the [[graft.ext.Similarity]] `liveVectors`
-    * discipline at the document grain). The tombstone table is
-    * takedown-request-sized and broadcasts; physical removal is
-    * deferred to [[compactNearDupIndex]] (applies and clears) or
-    * [[rebuildNearDupIndex]] (whole-directory swap — the swapped-in
-    * index starts with no tombstones).
-    */
-  private def ndLive(table: DataFrame, spark: SparkSession,
-      indexDir: String): DataFrame = {
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      table.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("doc_id"), "left_anti")
-    else table
-  }
+      batchId: Long, n: Int = 3, maxFilesPerTable: Int = 64): Boolean =
+    NearDupIndex.once(batch.sparkSession, indexDir, batchId)(
+      appendNearDupIndex(batch, indexDir, n, maxFilesPerTable))
 
   /** Takedown at the document grain — the right-to-be-forgotten verb
     * for the stored near-dup index: doc_ids land as TOMBSTONES
-    * (`deletes/`, one tiny file per request) that every reader
-    * anti-joins out of `hashes`/`shingles`/`sizes`, so the delete is
+    * ([[StoredIndex.tombstone]], one tiny file per request) that every
+    * reader anti-joins out of `hashes`/`shingles`/`sizes`, so the delete is
     * effective at the next screen for O(|request|) I/O — never an
     * index-sized rewrite on the takedown path. The exact gate stays
     * correct for OTHER copies of the same text because `hashes`
@@ -855,36 +839,19 @@ object Dedup {
     * compaction clears the applied set (the semantic-index rule;
     * spec-pinned in TakedownSpec).
     */
-  def deleteFromNearDupIndex(docIds: DataFrame, indexDir: String): Unit = {
-    val spark = docIds.sparkSession
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
-    docIds.select(col("doc_id")).filter(col("doc_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
+  def deleteFromNearDupIndex(docIds: DataFrame, indexDir: String): Unit =
     // a frame memoized over the OLD tombstone set would keep matching
     // against the deleted documents — the rebuild staleness class. The
     // release is scoped to the tombstone dir (round 19 — was the whole
-    // indexDir): a takedown changes no stored artifact except
-    // `deletes/` (hot/hashes/shingles/sizes files are immutable until
+    // indexDir): a takedown changes no stored artifact except the
+    // tombstones (hot/hashes/shingles/sizes files are immutable until
     // a compaction, which releases its swapped tables itself), and
     // the screen's memoized batch-side frame reads only the
     // frozen hot list — the whole-prefix release forced every
-    // subsequent screen of the same probe to re-shingle it.
-    graft.tools.InternalCaches.releaseByPath(spark, s"$indexDir/deletes")
-  }
-
-  /** Heal any crashed tmp → old → live swap on the near-dup index —
-    * the whole-directory rebuild swap first ([[rebuildNearDupIndex]]),
-    * then the three per-table compaction swaps
-    * ([[IndexFs.recoverSwap]]); called at the top of every
-    * read/append/compact entry so "crash anywhere, re-run to finish"
-    * is true of the whole lifecycle, not just the compactor.
-    */
-  private def recoverNearDupSwap(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir)
-    Seq("shingles", "sizes", "hashes")
-      .foreach(t => IndexFs.recoverSwap(spark, s"$indexDir/$t"))
-  }
+    // subsequent screen of the same probe to re-shingle it. Safe only
+    // because no near-dup reader memoizes a live-table frame (the
+    // [[StoredIndex]] memoization invariant).
+    NearDupIndex.tombstone(docIds, indexDir)
 
   /** Retrain-and-migrate for the near-dup index's FROZEN hot-shingle
     * list — the x116 discipline at the document grain: the hot list is
@@ -899,7 +866,7 @@ object Dedup {
     * WHOLE index directory as one unit (hot and shingles must change
     * together: a screen capping the incoming batch under one list
     * against stored shingles capped under another would systematically
-    * under-count intersections). `_batch_commits` markers move into
+    * under-count intersections). Batch markers move into
     * the new directory before the swap so post-rebuild redeliveries
     * still skip; the memoized screens reading the old directory are
     * invalidated ([[graft.tools.InternalCaches.releaseByPath]] — the
@@ -910,80 +877,45 @@ object Dedup {
   def rebuildNearDupIndex(corpus: DataFrame, indexDir: String, n: Int = 3,
       maxShingleDf: Int = Int.MaxValue): Unit = {
     val spark = corpus.sparkSession
-    recoverNearDupSwap(spark, indexDir)
-    val tmp = s"$indexDir.compact"
-    // a PRIOR rebuild may have crashed after moving the live markers
-    // into tmp but before the swap — tmp then holds the ONLY copy, and
-    // the wholesale delete below would degrade every committed batch
-    // to at-least-once (double-appended intersection counts until the
-    // next compaction). Rescue them back into the live directory first
-    // (the round-14 advisory: the two rebuild lifecycles' recovery
-    // guarantees must be symmetric).
-    IndexFs.mergeMarkers(spark, s"$tmp/_batch_commits",
-      s"$indexDir/_batch_commits")
-    IndexFs.fs(spark, tmp).delete(new org.apache.hadoop.fs.Path(tmp), true)
     // takedowns stay durable across a rebuild even if the caller hands
     // back a corpus that still contains the tombstoned documents: the
     // live tombstone set filters the retrain input, and the swapped-in
-    // directory starts clean (deletes/ stays behind in .old)
-    writeNearDupIndex(ndLive(corpus, spark, indexDir), tmp, n, maxShingleDf)
-    // per-file move with asserted renames, not a directory rename: see
-    // [[IndexFs.mergeMarkers]] for the two silent-degrade shapes a bare
-    // rename has here
-    IndexFs.mergeMarkers(spark, s"$indexDir/_batch_commits",
-      s"$tmp/_batch_commits")
-    IndexFs.swapCompact(spark, indexDir)
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    // directory starts clean
+    NearDupIndex.rebuild(spark, indexDir)(tmp => writeNearDupIndex(
+      NearDupIndex.live(spark, indexDir, corpus), tmp, n, maxShingleDf))
   }
 
   /** Offline maintenance for the near-dup index: distinct-rewrite
     * `shingles` and `hashes` (repairing any accidental double-append —
     * the duplicates that would inflate intersection counts), recompute
     * `sizes` from the compacted set, then swap each table tmp → old →
-    * live ([[IndexFs.swapCompact]]). Every step leaves a complete copy
-    * of each table on disk; the one step with no LIVE directory (between
-    * the two renames) is detected and completed by
-    * [[IndexFs.recoverSwap]], which every lifecycle entry point runs
-    * first — so a crash at any point is healed by the next read, append,
-    * or compaction re-run. The hot list is left as built — refreshing it
+    * live ([[StoredIndex.compact]]). Every step leaves a complete copy
+    * of each table on disk, and every lifecycle entry point heals a
+    * crash between the two renames first —
+    * so a crash at any point is healed by the next read, append, or
+    * compaction re-run. Takedown tombstones apply durably and clear
+    * after the last swap; only the swapped tables and the tombstones
+    * are released, so batch-side shingle caps keyed on the untouched
+    * hot list stay warm. The hot list is left as built — refreshing it
     * is a REBUILD (it changes which shingles the whole index stores),
     * not a compaction.
     */
-  def compactNearDupIndex(spark: SparkSession, indexDir: String): Unit = {
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
-    def swap(table: String): Unit =
-      IndexFs.swapCompact(spark, s"$indexDir/$table")
-    // local persist, not the memoized registry: the frame reads the very
-    // directory the swap replaces (the compactGramIndex argument).
-    // Takedown tombstones apply DURABLY here (ndLive anti-joins them
-    // out of every rewrite) and clear only after the LAST table swap:
-    // a crash between leaves tombstones anti-joining already-absent
-    // doc_ids — a no-op, never a resurrected document.
-    // the hashes rewrite shares nothing with the shingle chain — the
-    // two rewrite chains overlap from a driver pool (guide §2.6);
-    // every swap still happens strictly AFTER both chains complete
-    val sh = ndLive(spark.read.parquet(s"$indexDir/shingles"), spark, indexDir)
-      .distinct().persist()
-    graft.tools.DriverPool.awaitAll(Seq(
-      () => {
-        sh.write.mode("overwrite").parquet(s"$indexDir/shingles.compact")
-        sh.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
-          .write.mode("overwrite").parquet(s"$indexDir/sizes.compact")
-        sh.unpersist(blocking = false)
-      },
-      () => ndLive(spark.read.parquet(s"$indexDir/hashes"), spark, indexDir)
-        .distinct()
-        .write.mode("overwrite").parquet(s"$indexDir/hashes.compact")))
-    swap("shingles"); swap("sizes"); swap("hashes")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-    // the swaps replaced the three tables' files and cleared the
-    // tombstones — drop any memoized frame reading them (scoped: the
-    // frozen hot list is untouched, so batch-side shingle caps keyed
-    // on it stay warm)
-    Seq("shingles", "sizes", "hashes", "deletes").foreach(t =>
-      graft.tools.InternalCaches.releaseByPath(spark, s"$indexDir/$t"))
-  }
+  def compactNearDupIndex(spark: SparkSession, indexDir: String): Unit =
+    NearDupIndex.compact(spark, indexDir) { to =>
+      // the hashes rewrite shares nothing with the shingle chain — the
+      // two rewrite chains overlap from a driver pool (guide §2.6);
+      // every swap still happens strictly AFTER both chains complete
+      val sh = NearDupIndex.read(spark, indexDir, "shingles").distinct().persist()
+      graft.tools.DriverPool.awaitAll(Seq(
+        () => {
+          sh.write.mode("overwrite").parquet(to("shingles"))
+          sh.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
+            .write.mode("overwrite").parquet(to("sizes"))
+          sh.unpersist(blocking = false)
+        },
+        () => NearDupIndex.read(spark, indexDir, "hashes").distinct()
+          .write.mode("overwrite").parquet(to("hashes"))))
+    }
 
   /** x104 screen half — [[incrementalScreen]] semantics (same output
     * contract, same verdict rules) reading ONLY the stored artifacts:
@@ -999,15 +931,14 @@ object Dedup {
     val spark = incoming.sparkSession
     // a reader after a mid-swap compactor crash self-heals (one rename)
     // instead of failing on the missing live table
-    recoverNearDupSwap(spark, indexDir)
-    requireNearDupFormat(spark, indexDir)
+    NearDupIndex.open(spark, indexDir)
     // tombstones out first, then project to the distinct-h probe set:
     // the projection both defends the exact gate against duplicate
     // hash rows from appends (a duplicate would duplicate incoming
     // rows through the left join) and keeps a hash alive while ANY
     // live document carries it — deleting one of two identical docs
     // must not un-gate the other
-    val exHash = ndLive(spark.read.parquet(s"$indexDir/hashes"), spark, indexDir)
+    val exHash = NearDupIndex.read(spark, indexDir, "hashes")
       .select(col("h")).distinct()
       .withColumn("ex", lit(true))
     val exactFlag = incoming.select(col("doc_id"), md5(col("text")).as("h"))
@@ -1016,8 +947,8 @@ object Dedup {
     val hot = spark.read.parquet(s"$indexDir/hot")
     val inSh = graft.tools.InternalCaches.persist(
       hashedShingleSet(incoming, n).join(broadcast(hot), Seq("sh"), "left_anti"))
-    val exSh = ndLive(spark.read.parquet(s"$indexDir/shingles"), spark, indexDir)
-    val exSizes = ndLive(spark.read.parquet(s"$indexDir/sizes"), spark, indexDir)
+    val exSh = NearDupIndex.read(spark, indexDir, "shingles")
+    val exSizes = NearDupIndex.read(spark, indexDir, "sizes")
       .withColumnRenamed("doc_id", "ex_doc")
     screenVerdict(exactFlag, inSh, exSh, exSizes, minJaccard)
   }
@@ -1552,11 +1483,15 @@ object Dedup {
     val spark = docs.sparkSession
     val g = graft.tools.InternalCaches.persist(
       gramStream(docs, k).select("g").distinct())
-    val items = math.max(expectedItems.getOrElse(g.count()), 64L)
+    // the count materializes the cached gram set unconditionally: the
+    // pooled Bloom build and bucketed write below both read it, and
+    // without a prior action each would compute the distinct itself.
+    // `expectedItems`, when given, only sizes the filter and buckets.
+    val distinctGrams = g.count()
+    val items = math.max(expectedItems.getOrElse(distinctGrams), 64L)
     val nBuckets = if (buckets > 0) buckets else autoBucketCount(items)
     val numBits = BloomFilter.optimalNumOfBits(items, fpp)
-    // the Bloom build and the bucketed write both read the cached gram
-    // set (materialized by the count above) and share nothing else —
+    // the Bloom build and the bucketed write share nothing else —
     // overlap them (guide §2.6). The sidecar still writes strictly
     // AFTER the parquet write below: overwrite mode clears the
     // directory, so a sidecar written first would be deleted with it.

@@ -305,6 +305,17 @@ object LanguageModel {
   // on purpose.
   // ---------------------------------------------------------------------
 
+  /** The stored LM's [[StoredIndex]] declaration: one batch-stamped
+    * `bigrams` table and no tombstones (a takedown appends negated
+    * counts). [[storedCounts]] memoizes the merged model, so every
+    * mutation — build, append, takedown, compaction — releases the
+    * whole index: a memoized model cached before it would silently
+    * serve stale counts after it.
+    */
+  private[graft] val LmIndex = new StoredIndex(
+    tables = Seq("bigrams"), tombstones = None,
+    compactRelease = StoredIndex.Whole)
+
   /** Build the stored model: the corpus's bigram counts as parquet
     * under `indexDir/bigrams`, stamped batch_id='build'. */
   def writeLmIndex(docs: DataFrame, indexDir: String): Unit = {
@@ -315,6 +326,28 @@ object LanguageModel {
     graft.tools.InternalCaches.releaseByPath(docs.sparkSession, indexDir)
   }
 
+  /** One batch's per-(lang, w1, w2) counts, negated for a takedown,
+    * stamped `batchId` and appended as ONE file (the payload is
+    * vocabulary-of-the-batch-sized; upstream compute stays parallel),
+    * then the inline [[compactLmIndex]] trigger past `maxFiles` live
+    * files (0 disables).
+    */
+  private def appendCounts(batch: DataFrame, indexDir: String,
+      batchId: String, negate: Boolean, maxFiles: Int): Unit = {
+    val spark = batch.sparkSession
+    // heal a crashed compaction swap BEFORE appending (an append into a
+    // missing live dir would mint a batch-only model and orphan .compact)
+    LmIndex.open(spark, indexDir)
+    bigramStream(inScope(batch)).groupBy("lang", "w1", "w2")
+      .agg((if (negate) -count(lit(1)) else count(lit(1))).as("c12"))
+      .withColumn("batch_id", lit(batchId))
+      .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams")
+    // a memoized storedCounts cached before this append or takedown
+    // would silently serve stale counts after it
+    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    LmIndex.compactIfOver(spark, indexDir, maxFiles)(compactLmIndex(spark, indexDir))
+  }
+
   /** Append one corpus increment's counts (ONE file per append — the
     * payload is vocabulary-of-the-batch-sized; upstream compute stays
     * parallel). Cost = one batch scan + a batch-sized aggregate,
@@ -323,21 +356,8 @@ object LanguageModel {
     * inline (the near-dup index trigger discipline).
     */
   def appendLmIndex(batch: DataFrame, indexDir: String, batchId: String,
-      maxFiles: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would mint a batch-only model and orphan .compact)
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    bigramStream(inScope(batch)).groupBy("lang", "w1", "w2")
-      .agg(count(lit(1)).as("c12")).withColumn("batch_id", lit(batchId))
-      .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams")
-    // a memoized storedCounts cached before this append would silently
-    // serve stale counts after it — invalidate on every mutation
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-    if (maxFiles > 0 &&
-        Dedup.countDataFiles(spark, s"$indexDir/bigrams") > maxFiles.toLong)
-      compactLmIndex(spark, indexDir)
-  }
+      maxFiles: Int = 64): Unit =
+    appendCounts(batch, indexDir, batchId, negate = false, maxFiles)
 
   /** Takedown at the model grain — the right-to-be-forgotten verb for
     * the ADDITIVE index: subtracting a document set from a count table
@@ -361,53 +381,32 @@ object LanguageModel {
     * with the same inline [[compactLmIndex]] trigger appends carry.
     */
   def deleteFromLmIndex(docs: DataFrame, indexDir: String,
-      batchId: String, maxFiles: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    bigramStream(inScope(docs)).groupBy("lang", "w1", "w2")
-      .agg((-count(lit(1))).as("c12")).withColumn("batch_id", lit(batchId))
-      .repartition(1).write.mode("append").parquet(s"$indexDir/bigrams")
-    // a memoized storedCounts cached before this delete would keep
-    // scoring against the taken-down counts — invalidate on mutation
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+      batchId: String, maxFiles: Int = 64): Unit =
     // same inline-compact trigger as appendLmIndex: a stream of
     // takedown requests is a stream of one-file appends, and without
     // the trigger the file count (and every storedCounts scan) grows
     // without bound until a manual compactLmIndex
-    if (maxFiles > 0 &&
-        Dedup.countDataFiles(spark, s"$indexDir/bigrams") > maxFiles.toLong)
-      compactLmIndex(spark, indexDir)
-  }
+    appendCounts(docs, indexDir, batchId, negate = true, maxFiles)
 
   /** Maintenance: distinct-rewrite (collapsing any replayed appends —
     * batch-stamped rows are deterministic, so a replay is a byte-
     * identical duplicate) then tmp → old → live swap
-    * ([[graft.ext.IndexFs.swapCompact]]). Every step leaves a complete
-    * copy of the model on disk; the one step with no LIVE directory
-    * (between the two renames) is detected and completed by
-    * [[graft.ext.IndexFs.recoverSwap]], run first here and by every
-    * score/append entry — a crash at any point is healed by the next
-    * touch. Batch stamps are KEPT: compaction must stay
+    * ([[StoredIndex.compact]]) — a crash at any point is healed by
+    * the next touch. Batch stamps are KEPT: compaction must stay
     * idempotence-preserving — summing across batches here would make
     * the next replayed append undetectable.
     */
   def compactLmIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces
-    // one writer: the model is vocabulary-sized, and the compacted
-    // file count must land UNDER any append trigger threshold or the
-    // trigger would re-fire on every append. (repartition(1), not
-    // coalesce — the distinct upstream stays parallel.)
-    val bg = spark.read.parquet(s"$indexDir/bigrams").distinct().persist()
-    bg.repartition(1).write.mode("overwrite")
-      .parquet(s"$indexDir/bigrams.compact")
-    bg.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/bigrams")
-    // the swap replaced the files a memoized storedCounts reads
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+      indexDir: String): Unit =
+    LmIndex.compact(spark, indexDir) { to =>
+      // one writer: the model is vocabulary-sized, and the compacted
+      // file count must land UNDER any append trigger threshold or the
+      // trigger would re-fire on every append. (repartition(1), not
+      // coalesce — the distinct upstream stays parallel.)
+      val bg = spark.read.parquet(s"$indexDir/bigrams").distinct().persist()
+      bg.repartition(1).write.mode("overwrite").parquet(to("bigrams"))
+      bg.unpersist(blocking = false)
+    }
 
   /** The stored model, merged for scoring: replayed appends collapse
     * (distinct over batch-stamped rows), then increments sum per
@@ -431,7 +430,7 @@ object LanguageModel {
   private def storedCounts(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
     // a reader after a mid-swap compactor crash self-heals (one rename)
-    IndexFs.recoverSwap(spark, s"$indexDir/bigrams")
+    LmIndex.heal(spark, indexDir)
     graft.tools.InternalCaches.persist(
       spark.read.parquet(s"$indexDir/bigrams").distinct()
         .groupBy("lang", "w1", "w2").agg(sum("c12").as("c12"))

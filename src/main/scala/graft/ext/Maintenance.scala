@@ -111,9 +111,13 @@ object Maintenance {
       corpus: DataFrame, k: Int = 8, buckets: Int = 0,
       maxDataFiles: Long = 1024L) extends Store
 
-  /** MinHash near-dup store (x40 family). One trigger: `file_count`,
-    * remedied by [[Dedup.compactNearDupIndex]] (which also applies
-    * takedown tombstones durably). Thresholds as [[GramStore]].
+  /** MinHash near-dup store (x40 family). One trigger: `file_count`
+    * over the `shingles` table (the table the inline append trigger
+    * counts), remedied by [[Dedup.compactNearDupIndex]] (which also
+    * applies takedown tombstones durably). Thresholds as [[GramStore]].
+    * Tombstone files under `deletes/` do not count toward the trigger:
+    * a store that only receives takedowns never fires it, however many
+    * tombstone files every screen then reads.
     */
   final case class NearDupStore(name: String, indexDir: String,
       maxDataFiles: Long = 1024L) extends Store
@@ -168,7 +172,8 @@ object Maintenance {
       if (acted) Some(before.getAs[Long]("new_cap")) else capBefore
     val capRow = Action(s.name, "cap_bind", fired, acted,
       "retrainSemanticIfCapBound", capBefore, capAfter)
-    capRow +: fileCountTrigger(spark, s.name, s"${s.indexDir}/vectors",
+    capRow +: fileCountTrigger(s.name,
+      () => Similarity.SemanticIndex.dataFiles(spark, s.indexDir),
       dryRun, threshold(spark, s.indexDir, s.maxFilesPerCell),
       "compactSemanticIndex",
       () => Similarity.compactSemanticIndex(spark, s.indexDir))
@@ -214,8 +219,8 @@ object Maintenance {
         else "ivfPqRebuildIndex",
         None, None)
     }
-    capRows ++ driftRows ++ fileCountTrigger(spark, s.name,
-      s"${s.indexDir}/codes", dryRun,
+    capRows ++ driftRows ++ fileCountTrigger(s.name,
+      () => Similarity.IvfPqIndex.dataFiles(spark, s.indexDir), dryRun,
       threshold(spark, s.indexDir, s.maxFilesPerCell),
       "ivfPqCompactIndex",
       () => Similarity.ivfPqCompactIndex(spark, s.indexDir))
@@ -233,7 +238,8 @@ object Maintenance {
       else pending
     val ledgerRow = Action(s.name, "ledger", ledgerFired, ledgerActed,
       "drainGramTakedowns", Some(pending), Some(pendingAfter))
-    ledgerRow +: fileCountTrigger(spark, s.name, s.indexDir, dryRun,
+    ledgerRow +: fileCountTrigger(s.name,
+      () => Dedup.countDataFiles(spark, s.indexDir), dryRun,
       if (s.maxDataFiles < 0) None else Some(s.maxDataFiles),
       "compactGramIndex",
       () => Dedup.compactGramIndex(spark, s.indexDir, buckets = s.buckets))
@@ -241,14 +247,16 @@ object Maintenance {
 
   private def nearDupTriggers(spark: SparkSession, s: NearDupStore,
       dryRun: Boolean): Seq[Action] =
-    fileCountTrigger(spark, s.name, s.indexDir, dryRun,
+    fileCountTrigger(s.name,
+      () => Dedup.NearDupIndex.dataFiles(spark, s.indexDir), dryRun,
       if (s.maxDataFiles < 0) None else Some(s.maxDataFiles),
       "compactNearDupIndex",
       () => Dedup.compactNearDupIndex(spark, s.indexDir))
 
   private def lmTriggers(spark: SparkSession, s: LmStore,
       dryRun: Boolean): Seq[Action] =
-    fileCountTrigger(spark, s.name, s"${s.indexDir}/bigrams", dryRun,
+    fileCountTrigger(s.name,
+      () => LanguageModel.LmIndex.dataFiles(spark, s.indexDir), dryRun,
       if (s.maxDataFiles < 0) None else Some(s.maxDataFiles),
       "compactLmIndex",
       () => LanguageModel.compactLmIndex(spark, s.indexDir))
@@ -263,16 +271,18 @@ object Maintenance {
     else Some(maxFilesPerCell.toLong *
       spark.read.parquet(s"$indexDir/centroids").count())
 
-  private def fileCountTrigger(spark: SparkSession, store: String,
-      dataDir: String, dryRun: Boolean, maxFiles: Option[Long],
+  /** The file-count rung over the store's data-file gauge (for the
+    * stored-index families, their [[StoredIndex]] data table). */
+  private def fileCountTrigger(store: String, dataFiles: () => Long,
+      dryRun: Boolean, maxFiles: Option[Long],
       verb: String, remedy: () => Unit): Seq[Action] =
     maxFiles.toSeq.map { threshold =>
-      val files = Dedup.countDataFiles(spark, dataDir)
+      val files = dataFiles()
       val fired = files > threshold
       val acted = fired && !dryRun
       if (acted) remedy()
       val filesAfter =
-        if (acted) Dedup.countDataFiles(spark, dataDir) else files
+        if (acted) dataFiles() else files
       Action(store, "file_count", fired, acted, verb,
         Some(files), Some(filesAfter))
     }

@@ -36,34 +36,37 @@ object Similarity {
   private def cos(va: Column, vb: Column): Column =
     graft.functions.CosineSim.cosine_sim(va, vb)
 
+  /** The semantic index's [[StoredIndex]] declaration: one
+    * `partitionBy(centroid_id)` table, `vectors`, with `vec_id`
+    * tombstones. Readers memoize frames over the live vectors (the
+    * stored chain order), so a takedown releases the whole index;
+    * compactions release nothing, and builds and appends call no release.
+    */
+  private[graft] val SemanticIndex = new StoredIndex(
+    tables = Seq("vectors"),
+    tombstones = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
+    compactRelease = StoredIndex.Keep)
+
   /** The stored `vectors` table with takedown tombstones applied — the
     * read every consumer of the semantic index routes through. Deleted
     * vec_ids ([[deleteFromSemanticIndex]]) are suppressed by a
-    * broadcast anti-join against the tiny `deletes/` table; the
-    * physical rows are removed at the next [[compactSemanticIndex]] /
-    * [[rebuildSemanticIndex]] (merge-on-read: a takedown never pays an
-    * index-sized rewrite). Duplicate-row semantics are untouched —
-    * callers that need the replay-collapse still `dropDuplicates`.
+    * broadcast anti-join; the physical rows are removed at the next
+    * [[compactSemanticIndex]] / [[rebuildSemanticIndex]]
+    * (merge-on-read: a takedown never pays an index-sized rewrite).
+    * Duplicate-row semantics are untouched — callers that need the
+    * replay-collapse still `dropDuplicates`. Schema-pinned (the gram
+    * grain's round-17 lesson, Dedup.gramTable): a compaction after a
+    * FULL-corpus takedown legally leaves this partitionBy table with
+    * zero data files, and schema inference over that directory throws
+    * instead of reading zero rows.
     */
-  private def liveVectors(spark: SparkSession, indexDir: String): DataFrame = {
-    // schema-pinned (the gram grain's round-17 lesson, Dedup.gramTable):
-    // a compaction after a FULL-corpus takedown legally leaves this
-    // partitionBy table with zero data files, and schema inference over
-    // that directory throws instead of reading zero rows — the writer
-    // fixes the schema, so pin it and keep every reader total
-    val v = spark.read
-      .schema("vec_id LONG, v ARRAY<DOUBLE>, centroid_id LONG")
-      .parquet(s"$indexDir/vectors")
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      v.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("vec_id"), "left_anti")
-    else v
-  }
+  private def liveVectors(spark: SparkSession, indexDir: String): DataFrame =
+    SemanticIndex.read(spark, indexDir, "vectors",
+      Some("vec_id LONG, v ARRAY<DOUBLE>, centroid_id LONG"))
 
   /** Takedown at the vector grain — the right-to-be-forgotten verb for
     * the stored semantic index. Writes the vec_ids as TOMBSTONES
-    * (`deletes/`, one tiny file per request): every reader
+    * ([[StoredIndex.tombstone]], one tiny file per request): every reader
     * (screen, occupancy audit, mining, rebuild, compaction) anti-joins
     * them out, so the delete is effective at the next read for
     * O(|request|) I/O — never an index-sized rewrite on the takedown
@@ -80,16 +83,10 @@ object Similarity {
     * rows is exactly what keeps the takedown correct). Re-admit with
     * compact-then-append; spec-pinned in TakedownSpec.
     */
-  def deleteFromSemanticIndex(vecIds: DataFrame, indexDir: String): Unit = {
-    val spark = vecIds.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    vecIds.select(col("vec_id")).filter(col("vec_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
+  def deleteFromSemanticIndex(vecIds: DataFrame, indexDir: String): Unit =
     // a screen memoized before the takedown would keep serving the
     // deleted rows — the same staleness class as the rebuild
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+    SemanticIndex.tombstone(vecIds, indexDir)
 
   /** Brute-force cosine top-k: query vectors are those with
     * vec_id % queryModulus == 0; for each, the k nearest others by
@@ -202,8 +199,7 @@ object Similarity {
       dupCos: Double = 0.9, nprobe: Int = 2): DataFrame = {
     val spark = anchors.sparkSession
     // a reader after a mid-swap compactor/rebuild crash self-heals
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val a = vecs(anchors).select(col("vec_id").as("query_id"), col("v").as("qv"))
     import graft.plans.TopKPerGroup
@@ -446,8 +442,7 @@ object Similarity {
     */
   def semanticChainOrderStored(spark: SparkSession, indexDir: String,
       chainCellCap: Int = DefaultChainCellCap): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val assigned = graft.tools.InternalCaches.persist(
       liveVectors(spark, indexDir).dropDuplicates("vec_id")
         .select(col("vec_id"), col("v"), col("centroid_id")))
@@ -468,8 +463,7 @@ object Similarity {
       maxNeighbors: Int = 8,
       chainCellCap: Int = DefaultKnnChainCellCap): DataFrame = {
     require(maxNeighbors >= 1, s"maxNeighbors must be >= 1, got $maxNeighbors")
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val assigned = graft.tools.InternalCaches.persist(
       liveVectors(spark, indexDir).dropDuplicates("vec_id")
         .select(col("vec_id"), col("v"), col("centroid_id")))
@@ -906,9 +900,9 @@ object Similarity {
     * a screen that probed new-geometry cell ids against an
     * old-geometry `partitionBy` layout (or vice versa) would read the
     * wrong cells, a correctness break, not a pruning loss. Swapping
-    * `indexDir` as a unit makes the only no-live window the single
-    * [[IndexFs.recoverSwap]] window every lifecycle entry already
-    * heals. The `_batch_commits` markers move into the new directory
+    * `indexDir` as a unit ([[StoredIndex.rebuild]]) makes the only
+    * no-live window the single window every lifecycle entry already
+    * heals. The batch markers move into the new directory
     * BEFORE the swap so post-rebuild redeliveries still skip; a crash
     * between the marker move and the swap degrades that one batch to
     * at-least-once, which [[compactSemanticIndex]]'s vec_id
@@ -921,52 +915,33 @@ object Similarity {
     */
   def rebuildSemanticIndex(spark: SparkSession, indexDir: String,
       centroidModulus: Int = 100, maxCentroids: Int = 1024): Unit = {
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    // a PRIOR rebuild may have crashed after moving the live markers
-    // into `.compact` — merge them back NOW (restoring the committed
-    // set and clearing the stale destination): left in place, they
-    // would make the forward move below silently fail (Hadoop rename
-    // returns false when the destination exists) and the swap would
-    // promote the STALE marker set over any markers appends have since
-    // re-created — those batches would redeliver as double-appends.
-    IndexFs.mergeMarkers(spark, s"$indexDir.compact/_batch_commits",
-      s"$indexDir/_batch_commits")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces. Tombstoned vec_ids are OUT of
-    // the live set — the retrain must not learn geometry from taken-
-    // down vectors, and the rebuilt index (which replaces the whole
-    // directory, deletes/ included) removes them physically.
-    val v = liveVectors(spark, indexDir)
-      .dropDuplicates("vec_id").select(col("vec_id"), col("v")).persist()
-    val cents = ivfCentroids(v, centroidModulus, maxCentroids)
-    // both writes complete BEFORE any mutation of the live directory
-    assignToCentroids(v, cents)
-      .select(col("vec_id"), col("v"), col("centroid_id"))
-      .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir.compact/vectors")
-    cents.write.mode("overwrite").parquet(s"$indexDir.compact/centroids")
-    // the rebuild recomputes the eligibility total EXACTLY over the
-    // live retrained corpus — the append-maintained running count
-    // (advisory, see [[semanticIngestCapBind]]) resets here
-    writeQuantizerStamp(spark, s"$indexDir.compact", centroidModulus,
-      maxCentroids,
-      v.filter(col("vec_id") % centroidModulus === 0).count())
-    v.unpersist(blocking = false)
-    // per-file move with asserted renames (the merge also tolerates a
-    // marker racing in on both sides); the entry-time merge above
-    // guaranteed the destination is clear of stale copies
-    IndexFs.mergeMarkers(spark, s"$indexDir/_batch_commits",
-      s"$indexDir.compact/_batch_commits")
-    IndexFs.swapCompact(spark, indexDir)
-    invalidateCentroidCount(spark, indexDir)
-    // the rebuild replaced the FROZEN artifacts a screen is allowed to
-    // memoize against (the bench-assignment reads the centroid table):
-    // drop every internal cache whose plan reads this index, or the
-    // next screen would assign under the old geometry while probing
+    // the rebuild releases every internal cache reading this index: the
+    // bench-assignment a screen memoizes reads the centroid table, and
+    // a stale one would assign under the old geometry while probing
     // the new layout — silently wrong, not just slow
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    SemanticIndex.rebuild(spark, indexDir) { tmp =>
+      // local persist, not the memoized registry: the frame reads the
+      // very directory the swap replaces. Tombstoned vec_ids are OUT of
+      // the live set — the retrain must not learn geometry from taken-
+      // down vectors, and the rebuilt index removes them physically.
+      val v = liveVectors(spark, indexDir)
+        .dropDuplicates("vec_id").select(col("vec_id"), col("v")).persist()
+      val cents = ivfCentroids(v, centroidModulus, maxCentroids)
+      // both writes complete BEFORE any mutation of the live directory
+      assignToCentroids(v, cents)
+        .select(col("vec_id"), col("v"), col("centroid_id"))
+        .transform(IndexFs.keyPartitioned(_, col("centroid_id"), maxCentroids.toLong))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(s"$tmp/vectors")
+      cents.write.mode("overwrite").parquet(s"$tmp/centroids")
+      // the rebuild recomputes the eligibility total EXACTLY over the
+      // live retrained corpus — the append-maintained running count
+      // (advisory, see [[semanticIngestCapBind]]) resets here
+      writeQuantizerStamp(spark, tmp, centroidModulus, maxCentroids,
+        v.filter(col("vec_id") % centroidModulus === 0).count())
+      v.unpersist(blocking = false)
+    }
+    invalidateCentroidCount(spark, indexDir)
   }
 
   /** Occupancy audit of the STORED semantic index — x113's balance
@@ -1006,8 +981,7 @@ object Similarity {
       cellCap: Int = DefaultCellCap,
       centroidModulus: Int = 100,
       maxCentroids: Int = 1024): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val (mod, cap) = readQuantizerStamp(spark, indexDir)
       .getOrElse((centroidModulus.toLong, maxCentroids.toLong))
     liveVectors(spark, indexDir)
@@ -1108,8 +1082,7 @@ object Similarity {
       minCos: Double = 0.4): DataFrame = {
     val spark = bench.sparkSession
     // a reader after a mid-swap compactor crash self-heals (one rename)
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val b = vecs(bench)
     val ba = graft.tools.InternalCaches.persist(assignToCentroids(b, cents))
@@ -1163,8 +1136,7 @@ object Similarity {
     val spark = batch.sparkSession
     // heal a crashed compaction swap BEFORE appending (an append into a
     // missing live dir would fork the index away from the .compact copy)
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
+    SemanticIndex.heal(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     // persisted because the eligibility probe below re-reads it: the
     // stamp must count the frame ACTUALLY appended (post-assignment —
@@ -1209,10 +1181,9 @@ object Similarity {
       }
     }
     appended.unpersist(blocking = false)
-    if (maxFilesPerCell > 0 &&
-        graft.ext.Dedup.countDataFiles(spark, s"$indexDir/vectors") >
-          maxFilesPerCell.toLong * cachedCentroidCount(spark, indexDir, cents))
-      compactSemanticIndex(spark, indexDir)
+    SemanticIndex.compactIfOver(spark, indexDir, maxFilesPerCell,
+      cachedCentroidCount(spark, indexDir, cents))(
+      compactSemanticIndex(spark, indexDir))
   }
 
   /** Centroid count per (application, indexDir), computed once: frozen
@@ -1242,52 +1213,30 @@ object Similarity {
     * local disk. Returns whether the append ran.
     */
   def appendSemanticIndexOnce(batch: DataFrame, indexDir: String,
-      batchId: Long, maxFilesPerCell: Int = 64): Boolean = {
-    val spark = batch.sparkSession
-    // heal a crashed whole-index rebuild swap BEFORE the marker probe:
-    // the markers live inside the swapped directory
-    IndexFs.recoverSwap(spark, indexDir)
-    val marker = s"$indexDir/_batch_commits/b$batchId"
-    if (IndexFs.exists(spark, marker)) false
-    else {
-      appendSemanticIndex(batch, indexDir, maxFilesPerCell)
-      IndexFs.touch(spark, marker)
-      true
-    }
-  }
+      batchId: Long, maxFilesPerCell: Int = 64): Boolean =
+    SemanticIndex.once(batch.sparkSession, indexDir, batchId)(
+      appendSemanticIndex(batch, indexDir, maxFilesPerCell))
 
   /** Offline maintenance for the semantic index: deduplicate `vectors`
     * by vec_id (assignment under the frozen centroids is deterministic,
     * so replayed rows are byte-identical and any one survives), rewrite
     * the partitioned layout, and swap tmp → old → live so a crash at
-    * any point leaves a readable index (the compactNearDupIndex
-    * discipline: every step leaves a complete copy on disk, and the
-    * one no-live-dir step between the renames is detected and
-    * completed by [[graft.ext.IndexFs.recoverSwap]], run first here
-    * and by every screen/append entry). Centroids are left as built —
-    * refreshing them is a REBUILD ([[rebuildSemanticIndex]]), not a
-    * compaction.
+    * any point leaves a readable index ([[StoredIndex.compact]]:
+    * tombstones apply durably and clear after the swap).
+    * Single-writer per the lifecycle convention. Centroids are left as
+    * built — refreshing them is a REBUILD ([[rebuildSemanticIndex]]),
+    * not a compaction.
     */
-  def compactSemanticIndex(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/vectors")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces. Takedown tombstones apply here
-    // DURABLY (liveVectors anti-joins them out of the rewrite) and are
-    // cleared after the swap — clearing strictly after the swapped-in
-    // table has the rows physically gone means a crash between the two
-    // leaves the tombstones anti-joining absent ids (a no-op), never a
-    // resurrected vector. Single-writer per the lifecycle convention.
-    val v = liveVectors(spark, indexDir)
-      .dropDuplicates("vec_id").persist()
-    v.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
-      readQuantizerStamp(spark, indexDir).map(_._2).getOrElse(1024L)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/vectors.compact")
-    v.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/vectors")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-  }
+  def compactSemanticIndex(spark: SparkSession, indexDir: String): Unit =
+    SemanticIndex.compact(spark, indexDir) { to =>
+      val v = liveVectors(spark, indexDir)
+        .dropDuplicates("vec_id").persist()
+      v.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
+        readQuantizerStamp(spark, indexDir).map(_._2).getOrElse(1024L)))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(to("vectors"))
+      v.unpersist(blocking = false)
+    }
 
   /** [[semDedup]] with a TWO-LEVEL quantizer — the assignment scale
     * path. The flat quantizer scores every vector against every
@@ -2227,11 +2176,10 @@ object Similarity {
     * audit of record and every rebuild recomputes the totals exactly.
     */
   def ivfPqAppendIndex(newEmb: DataFrame, indexDir: String): Unit = {
-    IndexFs.recoverSwap(newEmb.sparkSession, indexDir) // whole-index REBUILD swap
     val spark = newEmb.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would fork the index away from the .compact copy)
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
+    // heal a crashed swap BEFORE appending (an append into a missing
+    // live dir would fork the index away from the .compact copy)
+    IvfPqIndex.heal(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cws = spark.read.parquet(s"$indexDir/codebook")
     encodeAgainst(vecs(newEmb), cents, cws, storedM(cws))
@@ -2287,23 +2235,23 @@ object Similarity {
   private[graft] def storedM(cws: DataFrame): Int =
     (cws.agg(max(col("subspace"))).head().getLong(0) + 1).toInt
 
-  /** The stored `codes` table with takedown tombstones applied — the
-    * [[liveVectors]] discipline for the IVF-PQ index. A crashed
-    * [[ivfPqCompactIndex]] swap self-heals first.
+  /** The IVF-PQ index's [[StoredIndex]] declaration — the semantic
+    * index's at the compressed grain: one `codes` table, `vec_id`
+    * tombstones, whole-index release on takedown only.
     */
-  private def liveCodes(spark: SparkSession, indexDir: String): DataFrame = {
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    // schema-pinned for the same full-takedown-then-compact state as
-    // [[liveVectors]] — an emptied codes table must read as zero rows
-    val c = spark.read
-      .schema("vec_id LONG, subspace LONG, code_id LONG, centroid_id LONG")
-      .parquet(s"$indexDir/codes")
-    val del = s"$indexDir/deletes"
-    if (IndexFs.exists(spark, del))
-      c.join(broadcast(spark.read.parquet(del).distinct()),
-        Seq("vec_id"), "left_anti")
-    else c
-  }
+  private[graft] val IvfPqIndex = new StoredIndex(
+    tables = Seq("codes"),
+    tombstones = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
+    compactRelease = StoredIndex.Keep)
+
+  /** The stored `codes` table with takedown tombstones applied — the
+    * [[liveVectors]] discipline for the IVF-PQ index, schema-pinned for
+    * the same full-takedown-then-compact state (an emptied codes table
+    * must read as zero rows). Callers heal first.
+    */
+  private def liveCodes(spark: SparkSession, indexDir: String): DataFrame =
+    IvfPqIndex.read(spark, indexDir, "codes",
+      Some("vec_id LONG, subspace LONG, code_id LONG, centroid_id LONG"))
 
   /** x138 — retrain-and-migrate for the persisted IVF-PQ index: the
     * x116 discipline at the compressed grain, and the SAFE form of the
@@ -2313,9 +2261,9 @@ object Similarity {
     * crash between the writes leaves new-geometry codes beside
     * old-geometry quantizers: WRONG search results, not just a torn
     * directory. This verb builds into `indexDir.compact` and swaps the
-    * whole directory tmp → old → live, so vectors/centroids/codebook/
-    * stamp change together and the only no-live window is the single
-    * [[IndexFs.recoverSwap]] window every IVF-PQ entry point now
+    * whole directory tmp → old → live ([[StoredIndex.rebuild]]), so
+    * vectors/centroids/codebook/stamp change together and the only
+    * no-live window is the single window every IVF-PQ entry point
     * heals.
     *
     * The corpus is handed back by the caller (codes are LOSSY — the
@@ -2323,8 +2271,8 @@ object Similarity {
     * x117 hand-back contract, same as the near-dup rebuild).
     * Tombstoned vec_ids are filtered OUT of the handed-back corpus —
     * the retrain must not learn geometry from taken-down vectors, and
-    * the swapped-in directory starts clean (`deletes/` stays behind in
-    * `.old`), so takedowns stay durable across a careless hand-back.
+    * the swapped-in directory starts clean, so takedowns stay durable
+    * across a careless hand-back.
     * Memoized searches over the old geometry are released (the x116
     * stale-geometry lesson). Cost = the original build's.
     */
@@ -2338,20 +2286,9 @@ object Similarity {
       maxCodes: Int = 256,
       trainIters: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    val tmp = s"$indexDir.compact"
-    IndexFs.delete(spark, tmp)
-    val del = s"$indexDir/deletes"
-    val live =
-      if (IndexFs.exists(spark, del))
-        corpus.join(broadcast(spark.read.parquet(del).distinct()),
-          Seq("vec_id"), "left_anti")
-      else corpus
-    ivfPqWriteIndex(live, tmp, centroidModulus, maxCentroids, m,
-      codeModulus, maxCodes, trainIters)
-    IndexFs.swapCompact(spark, indexDir)
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    IvfPqIndex.rebuild(spark, indexDir)(tmp =>
+      ivfPqWriteIndex(IvfPqIndex.live(spark, indexDir, corpus), tmp,
+        centroidModulus, maxCentroids, m, codeModulus, maxCodes, trainIters))
   }
 
   /** x135 — occupancy + cap-bind audit of the STORED IVF-PQ index:
@@ -2379,7 +2316,7 @@ object Similarity {
       cellCap: Int = DefaultCellCap,
       centroidModulus: Int = 100, maxCentroids: Int = 1024,
       codeModulus: Int = 5, maxCodes: Int = 256): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
+    IvfPqIndex.heal(spark, indexDir)
     val kv = readStampMap(spark, s"$indexDir/_quantizer")
     val mod = kv.getOrElse("modulus", centroidModulus.toLong)
     val cap = kv.getOrElse("cap", maxCentroids.toLong)
@@ -2477,7 +2414,7 @@ object Similarity {
 
   /** Takedown for the persisted IVF-PQ index — the
     * [[deleteFromSemanticIndex]] verb at the compressed grain: vec_ids
-    * land as tombstones (`deletes/`, set-semantics replay-safe),
+    * land as tombstones (set-semantics replay-safe),
     * searches anti-join them out of the codes read (so a taken-down
     * vector can never reach a shortlist, and therefore never the exact
     * re-rank either), and [[ivfPqCompactIndex]] applies them durably.
@@ -2486,39 +2423,27 @@ object Similarity {
     * Tombstones win over re-appends until a compaction clears them
     * (re-admission = compact-then-append).
     */
-  def deleteFromIvfPqIndex(vecIds: DataFrame, indexDir: String): Unit = {
-    val spark = vecIds.sparkSession
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    vecIds.select(col("vec_id")).filter(col("vec_id").isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$indexDir/deletes")
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
-  }
+  def deleteFromIvfPqIndex(vecIds: DataFrame, indexDir: String): Unit =
+    IvfPqIndex.tombstone(vecIds, indexDir)
 
   /** Offline maintenance for the codes table: apply takedown
     * tombstones durably and collapse the per-append file accumulation
     * ([[ivfPqAppendIndex]] adds files, never rewrites — this is where
     * they fold), preserving the `partitionBy(centroid_id)` layout the
     * search side's partition pruning depends on. tmp → old → live swap
-    * with the usual recovery ([[IndexFs.recoverSwap]] at every search
-    * entry); tombstones clear strictly after the swap — a crash
-    * between leaves them anti-joining absent rows, never a
-    * resurrected vector.
+    * with the usual recovery ([[StoredIndex.compact]]); tombstones
+    * clear strictly after the swap — a crash between leaves them
+    * anti-joining absent rows, never a resurrected vector.
     */
-  def ivfPqCompactIndex(spark: SparkSession, indexDir: String): Unit = {
-    IndexFs.recoverSwap(spark, indexDir) // a crashed whole-index REBUILD swap
-    IndexFs.recoverSwap(spark, s"$indexDir/codes")
-    // local persist, not the memoized registry: the frame reads the
-    // very directory the swap replaces
-    val c = liveCodes(spark, indexDir).persist()
-    c.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
-      readStampMap(spark, s"$indexDir/_quantizer").getOrElse("cap", 1024L)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/codes.compact")
-    c.unpersist(blocking = false)
-    IndexFs.swapCompact(spark, s"$indexDir/codes")
-    IndexFs.delete(spark, s"$indexDir/deletes")
-  }
+  def ivfPqCompactIndex(spark: SparkSession, indexDir: String): Unit =
+    IvfPqIndex.compact(spark, indexDir) { to =>
+      val c = liveCodes(spark, indexDir).persist()
+      c.transform(IndexFs.keyPartitioned(_, col("centroid_id"),
+        readStampMap(spark, s"$indexDir/_quantizer").getOrElse("cap", 1024L)))
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(to("codes"))
+      c.unpersist(blocking = false)
+    }
 
   /** x59 search half — query a PERSISTED IVF-PQ index: reads the three
     * tables [[ivfPqWriteIndex]] wrote and runs the search pipeline
@@ -2536,10 +2461,8 @@ object Similarity {
       k: Int = 5,
       nprobe: Int = 2): DataFrame = {
     val spark = emb.sparkSession
-    // heal a crashed whole-index REBUILD swap before the first read
-    // (the semantic family's double-heal; liveCodes heals the
-    // per-table compaction swap)
-    IndexFs.recoverSwap(spark, indexDir)
+    // heal a crashed rebuild or compaction swap before the first read
+    IvfPqIndex.heal(spark, indexDir)
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cws = spark.read.parquet(s"$indexDir/codebook")
     val m = storedM(cws)

@@ -89,28 +89,6 @@ object Portable {
   def tokenCount(toks: Column, w: String): Column =
     size(filter(toks, x => x === lit(w)))
 
-  /** [[tokenCount]] computed from the raw text with codegen'd string
-    * primitives instead of an interpreted higher-order filter: double
-    * every separator space (so adjacent tokens stop sharing a
-    * delimiter), pad both ends, and count non-overlapping `" w "`
-    * occurrences by length difference. Bit-equal to
-    * `tokenCount(tokens(text), w)` for the single-space tokenizer
-    * ([[tokens]]): each token is then enclosed by its own pair of
-    * spaces, so matches are exactly the tokens string-equal to `w`
-    * (substrings inside longer tokens never match — they lack the
-    * enclosing spaces).
-    *
-    * Why it exists: ArrayFilter/lambda expressions are CodegenFallback
-    * — no whole-stage codegen and no subexpression elimination — so a
-    * marker-scoring projection evaluating 20 of them per row was the
-    * hottest interpreted path in the text pipeline (measured ~20× vs
-    * this form at 10× scale). DuckDB oracle side stays
-    * `len(list_filter(t, x -> x = 'w'))` — same values, so the hash
-    * compare also proves the equivalence.
-    */
-  def tokenCountInText(text: Column, w: String): Column =
-    tokenCountInSpaced(spacedText(text), w)
-
   /** The separator-doubled, padded form `" " + replace(trim(text), " ",
     * "  ") + " "` — every token enclosed by its own pair of spaces.
     * Callers counting SEVERAL markers should project this once and feed

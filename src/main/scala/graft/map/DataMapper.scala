@@ -42,10 +42,6 @@ class DataMapper(
 
   private def load(table: String): DataFrame = loader(spark, sfDir, table)
 
-  /** Build every root collection: (collection name, nested DataFrame). */
-  def mapAll(schema: DocumentSchema): Seq[(String, DataFrame)] =
-    schema.roots.map(r => r.name -> mapRoot(r))
-
   /** [[mapRoot]] behind the x70 pre-flight: estimate every root
     * document's size ([[DocSizeAudit]]) and REFUSE to build when any
     * exceeds `budgetBytes` — the audit costs a (key, long) aggregate
@@ -75,7 +71,8 @@ class DataMapper(
     mapRoot(root)
   }
 
-  /** [[mapAll]] with the per-root budget guard applied to every root. */
+  /** Build every root collection, each behind [[mapRootGuarded]]'s
+    * budget pre-flight: (collection name, nested DataFrame). */
   def mapAllGuarded(
       schema: DocumentSchema,
       budgetBytes: Long = DocSizeAudit.MongoDocLimit): Seq[(String, DataFrame)] =

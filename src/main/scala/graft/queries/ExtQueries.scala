@@ -735,6 +735,42 @@ object ExtQueries {
        |        / count(*), 6) AS jaccard_est
        |FROM kmk GROUP BY source_a, source_b)""".stripMargin
 
+  /** Oracle SQL fragments several entries share verbatim: the canonical
+    * DOUBLE and TIMESTAMP renderings, the exact-integer
+    * half-away-from-zero micro-unit average, and the per-phase SELECTs
+    * of the semantic-screen, near-dup-verdict and span-screen
+    * lifecycle entries.
+    */
+  private def dblSql(c: String) =
+    s"""CASE WHEN isnan($c) THEN 'NaN'
+       |    WHEN $c = 'infinity'::DOUBLE THEN 'Infinity'
+       |    WHEN $c = '-infinity'::DOUBLE THEN '-Infinity'
+       |    WHEN abs($c) >= 1e32 THEN printf('%.6e', $c)
+       |    ELSE CAST(CAST($c AS DECIMAL(38,6)) AS VARCHAR) END""".stripMargin
+
+  private def tsSql(c: String) = s"CAST(epoch_us($c) AS VARCHAR)"
+
+  private def semScreenPhaseSql(phase: String, px: String) =
+    s"""SELECT '$phase' AS phase, b.vec_id AS bench_id,
+       |  CAST(COALESCE(w.n_matches, 0) AS BIGINT) AS n_matches,
+       |  w.max_sim, w.n_matches IS NOT NULL AS contaminated
+       |FROM bench b LEFT JOIN ${px}w w ON w.bench_id = b.vec_id""".stripMargin
+
+  private def ndVerdictPhaseSql(phase: String, px: String) =
+    s"""SELECT '$phase' AS phase, doc_id, is_exact_dup, near_dup_of,
+       |  near_jaccard,
+       |  CASE WHEN is_exact_dup THEN 'drop_exact'
+       |       WHEN near_dup_of IS NOT NULL THEN 'drop_near'
+       |       ELSE 'keep' END AS verdict
+       |FROM ${px}ef LEFT JOIN ${px}best USING (doc_id)""".stripMargin
+
+  private def avgMicroSql(lp: String, n: String) =
+    s"CAST((CASE WHEN $lp < 0 THEN -1 ELSE 1 END) * ((abs($lp) * 2 + $n) // ($n * 2)) AS BIGINT)"
+
+  private def spanPhaseSql(phase: String, px: String) =
+    s"""SELECT '$phase' AS phase, doc_id, span_start, span_end,
+       |  span_tokens, n_grams FROM ${px}spans""".stripMargin
+
   val defs: Seq[(String, Q, Option[String])] = Seq(
 
     // ---- dedup: exact -------------------------------------------------
@@ -1170,14 +1206,7 @@ object ExtQueries {
       (s: SparkSession, dir: String) =>
         MigrationPipeline.profileAdvisories(s, dir),
       Some {
-        def dbl(c: String) =
-          s"""CASE WHEN isnan($c) THEN 'NaN'
-             |    WHEN $c = 'infinity'::DOUBLE THEN 'Infinity'
-             |    WHEN $c = '-infinity'::DOUBLE THEN '-Infinity'
-             |    WHEN abs($c) >= 1e32 THEN printf('%.6e', $c)
-             |    ELSE CAST(CAST($c AS DECIMAL(38,6)) AS VARCHAR) END""".stripMargin
         def num(c: String) = s"CAST($c AS VARCHAR)"
-        def ts(c: String) = s"CAST(epoch_us($c) AS VARCHAR)"
         val renderings: Seq[(String, Seq[(String, String)])] = Seq(
           "region" -> Seq(
             "r_regionkey" -> num("r_regionkey"), "r_name" -> "r_name"),
@@ -1187,26 +1216,26 @@ object ExtQueries {
           "customer" -> Seq(
             "c_custkey" -> num("c_custkey"), "c_name" -> "c_name",
             "c_nationkey" -> num("c_nationkey"),
-            "c_acctbal" -> dbl("c_acctbal"), "c_mktsegment" -> "c_mktsegment"),
+            "c_acctbal" -> dblSql("c_acctbal"), "c_mktsegment" -> "c_mktsegment"),
           "supplier" -> Seq(
             "s_suppkey" -> num("s_suppkey"), "s_name" -> "s_name",
-            "s_nationkey" -> num("s_nationkey"), "s_acctbal" -> dbl("s_acctbal")),
+            "s_nationkey" -> num("s_nationkey"), "s_acctbal" -> dblSql("s_acctbal")),
           "part" -> Seq(
             "p_partkey" -> num("p_partkey"), "p_name" -> "p_name",
             "p_brand" -> "p_brand", "p_type" -> "p_type",
-            "p_size" -> num("p_size"), "p_retailprice" -> dbl("p_retailprice")),
+            "p_size" -> num("p_size"), "p_retailprice" -> dblSql("p_retailprice")),
           "orders" -> Seq(
             "o_orderkey" -> num("o_orderkey"), "o_custkey" -> num("o_custkey"),
-            "o_orderstatus" -> "o_orderstatus", "o_totalprice" -> dbl("o_totalprice"),
-            "o_orderdate" -> ts("o_orderdate"), "o_orderpriority" -> "o_orderpriority"),
+            "o_orderstatus" -> "o_orderstatus", "o_totalprice" -> dblSql("o_totalprice"),
+            "o_orderdate" -> tsSql("o_orderdate"), "o_orderpriority" -> "o_orderpriority"),
           "lineitem" -> Seq(
             "l_orderkey" -> num("l_orderkey"), "l_partkey" -> num("l_partkey"),
             "l_suppkey" -> num("l_suppkey"), "l_linenumber" -> num("l_linenumber"),
-            "l_quantity" -> dbl("l_quantity"),
-            "l_extendedprice" -> dbl("l_extendedprice"),
-            "l_discount" -> dbl("l_discount"), "l_tax" -> dbl("l_tax"),
+            "l_quantity" -> dblSql("l_quantity"),
+            "l_extendedprice" -> dblSql("l_extendedprice"),
+            "l_discount" -> dblSql("l_discount"), "l_tax" -> dblSql("l_tax"),
             "l_returnflag" -> "l_returnflag", "l_linestatus" -> "l_linestatus",
-            "l_shipdate" -> ts("l_shipdate")))
+            "l_shipdate" -> tsSql("l_shipdate")))
         val stats = renderings.flatMap { case (tn, cs) => cs.map { case (c, r) =>
           s"""SELECT '$tn' AS table_name, '$c' AS col_name,
              |  count(*) AS n_rows, count(*) - count($r) AS n_nulls,
@@ -3720,13 +3749,6 @@ object ExtQueries {
       (s: SparkSession, dir: String) =>
         MigrationPipeline.templateFolded(s, dir),
       Some {
-        def dbl(c0: String) =
-          s"""CASE WHEN isnan($c0) THEN 'NaN'
-             |    WHEN $c0 = 'infinity'::DOUBLE THEN 'Infinity'
-             |    WHEN $c0 = '-infinity'::DOUBLE THEN '-Infinity'
-             |    WHEN abs($c0) >= 1e32 THEN printf('%.6e', $c0)
-             |    ELSE CAST(CAST($c0 AS DECIMAL(38,6)) AS VARCHAR) END""".stripMargin
-        def ts(c0: String) = s"CAST(epoch_us($c0) AS VARCHAR)"
         // foldable (non-structural) columns and their canonical
         // renderings — the same h60-hash distinct the KMV estimator
         // counts, so `<= 1` agrees with the Spark side bit-for-bit
@@ -3734,25 +3756,25 @@ object ExtQueries {
           ("region", "r_name", "r_name"),
           ("nation", "n_name", "n_name"),
           ("customer", "c_name", "c_name"),
-          ("customer", "c_acctbal", dbl("c_acctbal")),
+          ("customer", "c_acctbal", dblSql("c_acctbal")),
           ("customer", "c_mktsegment", "c_mktsegment"),
           ("supplier", "s_name", "s_name"),
-          ("supplier", "s_acctbal", dbl("s_acctbal")),
+          ("supplier", "s_acctbal", dblSql("s_acctbal")),
           ("part", "p_name", "p_name"), ("part", "p_brand", "p_brand"),
           ("part", "p_type", "p_type"),
           ("part", "p_size", "CAST(p_size AS VARCHAR)"),
-          ("part", "p_retailprice", dbl("p_retailprice")),
+          ("part", "p_retailprice", dblSql("p_retailprice")),
           ("orders", "o_orderstatus", "o_orderstatus"),
-          ("orders", "o_totalprice", dbl("o_totalprice")),
-          ("orders", "o_orderdate", ts("o_orderdate")),
+          ("orders", "o_totalprice", dblSql("o_totalprice")),
+          ("orders", "o_orderdate", tsSql("o_orderdate")),
           ("orders", "o_orderpriority", "o_orderpriority"),
-          ("lineitem", "l_quantity", dbl("l_quantity")),
-          ("lineitem", "l_extendedprice", dbl("l_extendedprice")),
-          ("lineitem", "l_discount", dbl("l_discount")),
-          ("lineitem", "l_tax", dbl("l_tax")),
+          ("lineitem", "l_quantity", dblSql("l_quantity")),
+          ("lineitem", "l_extendedprice", dblSql("l_extendedprice")),
+          ("lineitem", "l_discount", dblSql("l_discount")),
+          ("lineitem", "l_tax", dblSql("l_tax")),
           ("lineitem", "l_returnflag", "l_returnflag"),
           ("lineitem", "l_linestatus", "l_linestatus"),
-          ("lineitem", "l_shipdate", ts("l_shipdate")))
+          ("lineitem", "l_shipdate", tsSql("l_shipdate")))
         val flags = foldable.map { case (tn, c0, r) =>
           s"""(SELECT count(DISTINCT ${h60(r)}) FROM $tn
              |   WHERE $r IS NOT NULL) <= 1 AS ${tn}_$c0""".stripMargin
@@ -3804,20 +3826,13 @@ object ExtQueries {
       (s: SparkSession, dir: String) =>
         MigrationPipeline.documentKeys(s, dir),
       Some {
-        def dbl(c0: String) =
-          s"""CASE WHEN isnan($c0) THEN 'NaN'
-             |    WHEN $c0 = 'infinity'::DOUBLE THEN 'Infinity'
-             |    WHEN $c0 = '-infinity'::DOUBLE THEN '-Infinity'
-             |    WHEN abs($c0) >= 1e32 THEN printf('%.6e', $c0)
-             |    ELSE CAST(CAST($c0 AS DECIMAL(38,6)) AS VARCHAR) END""".stripMargin
-        def ts(c0: String) = s"CAST(epoch_us($c0) AS VARCHAR)"
         val nonKey: Seq[(String, String)] = Seq(
-          "l_quantity" -> dbl("l_quantity"),
-          "l_extendedprice" -> dbl("l_extendedprice"),
-          "l_discount" -> dbl("l_discount"), "l_tax" -> dbl("l_tax"),
+          "l_quantity" -> dblSql("l_quantity"),
+          "l_extendedprice" -> dblSql("l_extendedprice"),
+          "l_discount" -> dblSql("l_discount"), "l_tax" -> dblSql("l_tax"),
           "l_returnflag" -> "l_returnflag",
           "l_linestatus" -> "l_linestatus",
-          "l_shipdate" -> ts("l_shipdate"))
+          "l_shipdate" -> tsSql("l_shipdate"))
         val stats = nonKey.map { case (c0, r) =>
           s"""SELECT '$c0' AS col_name,
              |  count(*) AS n_rows, count(*) - count($r) AS n_nulls,
@@ -4547,11 +4562,6 @@ object ExtQueries {
              |    FROM ${px}ba ba JOIN ${px}ca ca ON ba.centroid_id = ca.centroid_id),
              |${px}w AS (SELECT bench_id, count(*) AS n_matches, max(c_sim) AS max_sim
              |    FROM ${px}m WHERE c_sim >= 0.4 GROUP BY bench_id)""".stripMargin
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, b.vec_id AS bench_id,
-             |  CAST(COALESCE(w.n_matches, 0) AS BIGINT) AS n_matches,
-             |  w.max_sim, w.n_matches IS NOT NULL AS contaminated
-             |FROM bench b LEFT JOIN ${px}w w ON w.bench_id = b.vec_id""".stripMargin
         s"""WITH se AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
            |  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
            |bench AS (SELECT * FROM se WHERE vec_id % 50 = 7),
@@ -4562,9 +4572,9 @@ object ExtQueries {
            |  WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT 1024),
            |${screen("f")},
            |${screen("r")}
-           |${phaseSelect("frozen", "f")}
+           |${semScreenPhaseSql("frozen", "f")}
            |UNION ALL
-           |${phaseSelect("rebuilt", "r")}""".stripMargin
+           |${semScreenPhaseSql("rebuilt", "r")}""".stripMargin
       }),
 
     // ---- x117: near-dup index rebuild — hot-list retrain (round 14) ----
@@ -4621,20 +4631,13 @@ object ExtQueries {
              |${px}h0 AS (SELECT DISTINCT doc_id, ${h32("s")} AS sh FROM ${px}h0s),
              |${px}hot AS (SELECT sh FROM ${px}h0 GROUP BY sh
              |  HAVING count(*) > $MaxShingleDf)""".stripMargin
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, doc_id, is_exact_dup, near_dup_of,
-             |  near_jaccard,
-             |  CASE WHEN is_exact_dup THEN 'drop_exact'
-             |       WHEN near_dup_of IS NOT NULL THEN 'drop_near'
-             |       ELSE 'keep' END AS verdict
-             |FROM ${px}ef LEFT JOIN ${px}best USING (doc_id)""".stripMargin
         s"""WITH ${hotCtes("f", s"doc_id % 3 = 0 AND $live")},
            |${hotCtes("r", live)},
            |${ndScreenCtes("f", s"doc_id % 50 = 7 AND $live", live, "fhot")},
            |${ndScreenCtes("r", s"doc_id % 50 = 7 AND $live", live, "rhot")}
-           |${phaseSelect("frozen", "f")}
+           |${ndVerdictPhaseSql("frozen", "f")}
            |UNION ALL
-           |${phaseSelect("rebuilt", "r")}""".stripMargin
+           |${ndVerdictPhaseSql("rebuilt", "r")}""".stripMargin
       }),
 
     // ---- x118: DSIR importance resampling scores (round 14) -----------
@@ -4657,8 +4660,6 @@ object ExtQueries {
         graft.ext.LanguageModel.dsirImportance(
           t(s, dir, "documents"), col("source") === "src1", minCount = 2L),
       Some {
-        def avgMicro(lp: String, n: String) =
-          s"CAST((CASE WHEN $lp < 0 THEN -1 ELSE 1 END) * ((abs($lp) * 2 + $n) // ($n * 2)) AS BIGINT)"
         s"""WITH ${lmCtes("source = 'src1'", "TRUE", "dt")},
            |${lmCtes("TRUE", "TRUE", "dr")},
            |dtagg AS (SELECT doc_id, lang, count(*) AS n_t,
@@ -4668,9 +4669,9 @@ object ExtQueries {
            |SELECT doc_id, lang,
            |  n_t AS n_bigrams_target, lp_t AS lp_target_micro,
            |  n_r AS n_bigrams_raw, lp_r AS lp_raw_micro,
-           |  ${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")}
+           |  ${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")}
            |    AS importance_micro,
-           |  CAST(${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")}
+           |  CAST(${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")}
            |    AS DOUBLE) / 1000000.0 AS importance
            |FROM dtagg JOIN dragg USING (doc_id, lang)""".stripMargin
       }),
@@ -4738,8 +4739,6 @@ object ExtQueries {
           .select(col("doc_id"), col("lang"), col("merit"), col("n_tokens"))
       },
       Some {
-        def avgMicro(lp: String, n: String) =
-          s"CAST((CASE WHEN $lp < 0 THEN -1 ELSE 1 END) * ((abs($lp) * 2 + $n) // ($n * 2)) AS BIGINT)"
         s"""WITH ${lmCtes("source = 'src1'", "TRUE", "dt")},
            |${lmCtes("TRUE", "TRUE", "dr")},
            |dtagg AS (SELECT doc_id, lang, count(*) AS n_t,
@@ -4747,7 +4746,7 @@ object ExtQueries {
            |dragg AS (SELECT doc_id, lang, count(*) AS n_r,
            |    CAST(sum(lp) AS BIGINT) AS lp_r FROM drlp GROUP BY 1, 2),
            |impp AS (SELECT doc_id, lang,
-           |    ${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")} AS im
+           |    ${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")} AS im
            |  FROM dtagg JOIN dragg USING (doc_id, lang)),
            |pos AS (SELECT doc_id, lang, im // 10000 AS merit
            |  FROM impp WHERE im > 0),
@@ -4787,8 +4786,6 @@ object ExtQueries {
           nBatches = 4, minCount = 2L)
       },
       Some {
-        def avgMicro(lp: String, n: String) =
-          s"CAST((CASE WHEN $lp < 0 THEN -1 ELSE 1 END) * ((abs($lp) * 2 + $n) // ($n * 2)) AS BIGINT)"
         val rawBlocks = (1 to 3).map(b =>
           lmCtes(s"doc_id % 4 < $b", s"doc_id % 4 = $b", s"rb$b"))
           .mkString(",\n")
@@ -4804,9 +4801,9 @@ object ExtQueries {
            |SELECT doc_id, lang,
            |  n_t AS n_bigrams_target, lp_t AS lp_target_micro,
            |  n_r AS n_bigrams_raw, lp_r AS lp_raw_micro,
-           |  ${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")}
+           |  ${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")}
            |    AS importance_micro,
-           |  CAST(${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")}
+           |  CAST(${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")}
            |    AS DOUBLE) / 1000000.0 AS importance
            |FROM ttagg JOIN rall USING (doc_id, lang)""".stripMargin
       }),
@@ -4901,8 +4898,6 @@ object ExtQueries {
           t(s, dir, "documents"), col("source") === "src1",
           n = 25, seed = "g15", minCount = 2L),
       Some {
-        def avgMicro(lp: String, n: String) =
-          s"CAST((CASE WHEN $lp < 0 THEN -1 ELSE 1 END) * ((abs($lp) * 2 + $n) // ($n * 2)) AS BIGINT)"
         val u = s"CAST(${h60("'g15:' || CAST(doc_id AS VARCHAR)")} * 2 + 1 AS DOUBLE)" +
           " / 2305843009213693952.0"
         s"""WITH ${lmCtes("source = 'src1'", "TRUE", "dt")},
@@ -4912,7 +4907,7 @@ object ExtQueries {
            |dragg AS (SELECT doc_id, lang, count(*) AS n_r,
            |    CAST(sum(lp) AS BIGINT) AS lp_r FROM drlp GROUP BY 1, 2),
            |imp AS (SELECT doc_id, lang,
-           |    ${avgMicro("lp_t", "n_t")} - ${avgMicro("lp_r", "n_r")} AS im
+           |    ${avgMicroSql("lp_t", "n_t")} - ${avgMicroSql("lp_r", "n_r")} AS im
            |  FROM dtagg JOIN dragg USING (doc_id, lang)),
            |keyed AS (SELECT doc_id, lang,
            |    CAST(im AS DOUBLE) / 1000000.0 AS importance,
@@ -4998,11 +4993,6 @@ object ExtQueries {
              |    FROM ${px}ba ba JOIN ${px}ca ca ON ba.centroid_id = ca.centroid_id),
              |${px}w AS (SELECT bench_id, count(*) AS n_matches, max(c_sim) AS max_sim
              |    FROM ${px}m WHERE c_sim >= 0.4 GROUP BY bench_id)""".stripMargin
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, b.vec_id AS bench_id,
-             |  CAST(COALESCE(w.n_matches, 0) AS BIGINT) AS n_matches,
-             |  w.max_sim, w.n_matches IS NOT NULL AS contaminated
-             |FROM bench b LEFT JOIN ${px}w w ON w.bench_id = b.vec_id""".stripMargin
         s"""WITH se AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
            |  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
            |sd AS (SELECT * FROM se WHERE vec_id % 9 <> 1),
@@ -5012,11 +5002,11 @@ object ExtQueries {
            |  ORDER BY vec_id LIMIT 1024),
            |${screen("i", "se")},
            |${screen("d", "sd")}
-           |${phaseSelect("indexed", "i")}
+           |${semScreenPhaseSql("indexed", "i")}
            |UNION ALL
-           |${phaseSelect("deleted", "d")}
+           |${semScreenPhaseSql("deleted", "d")}
            |UNION ALL
-           |${phaseSelect("compacted", "d")}""".stripMargin
+           |${semScreenPhaseSql("compacted", "d")}""".stripMargin
       }),
 
     // ---- x127: near-dup index takedown — tombstoned delete (round 15) --
@@ -5076,22 +5066,15 @@ object ExtQueries {
              |fh0 AS (SELECT DISTINCT doc_id, ${h32("s")} AS sh FROM fh0s),
              |fhot AS (SELECT sh FROM fh0 GROUP BY sh
              |  HAVING count(*) > $MaxShingleDf)""".stripMargin
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, doc_id, is_exact_dup, near_dup_of,
-             |  near_jaccard,
-             |  CASE WHEN is_exact_dup THEN 'drop_exact'
-             |       WHEN near_dup_of IS NOT NULL THEN 'drop_near'
-             |       ELSE 'keep' END AS verdict
-             |FROM ${px}ef LEFT JOIN ${px}best USING (doc_id)""".stripMargin
         s"""WITH $hotCtes,
            |${ndScreenCtes("i", s"doc_id % 50 = 7 AND $live", live, "fhot")},
            |${ndScreenCtes("d", s"doc_id % 50 = 7 AND $live",
             s"doc_id % 9 <> 1 AND $live", "fhot")}
-           |${phaseSelect("indexed", "i")}
+           |${ndVerdictPhaseSql("indexed", "i")}
            |UNION ALL
-           |${phaseSelect("deleted", "d")}
+           |${ndVerdictPhaseSql("deleted", "d")}
            |UNION ALL
-           |${phaseSelect("compacted", "d")}""".stripMargin
+           |${ndVerdictPhaseSql("compacted", "d")}""".stripMargin
       }),
 
     // ---- x128: LM index takedown — negated-count delete (round 15) -----
@@ -5455,16 +5438,13 @@ object ExtQueries {
             .withColumn("phase", lit("compacted")))
       },
       Some {
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, doc_id, span_start, span_end,
-             |  span_tokens, n_grams FROM ${px}spans""".stripMargin
         s"""WITH ${spanScreenCtes("gi", "source <> 'src2'")},
            |${spanScreenCtes("gd", "source <> 'src2' AND doc_id % 9 <> 1")}
-           |${phaseSelect("indexed", "gi")}
+           |${spanPhaseSql("indexed", "gi")}
            |UNION ALL
-           |${phaseSelect("deleted", "gd")}
+           |${spanPhaseSql("deleted", "gd")}
            |UNION ALL
-           |${phaseSelect("compacted", "gd")}""".stripMargin
+           |${spanPhaseSql("compacted", "gd")}""".stripMargin
       }),
 
     // ---- x134: in-context packing v2 — NN-chain order in the cell -----
@@ -6101,15 +6081,12 @@ object ExtQueries {
             .withColumn("phase", lit("drained")))
       },
       Some {
-        def phaseSelect(phase: String, px: String) =
-          s"""SELECT '$phase' AS phase, doc_id, span_start, span_end,
-             |  span_tokens, n_grams FROM ${px}spans""".stripMargin
         s"""WITH ${spanScreenCtes("qi", "source <> 'src2'")},
            |${spanScreenCtes("qd",
               "source <> 'src2' AND doc_id % 9 <> 1 AND doc_id % 9 <> 2")}
-           |${phaseSelect("requested", "qi")}
+           |${spanPhaseSql("requested", "qi")}
            |UNION ALL
-           |${phaseSelect("drained", "qd")}""".stripMargin
+           |${spanPhaseSql("drained", "qd")}""".stripMargin
       }),
 
     // ---- x143: kNN chain packing — the memory-bounded chain rung -------

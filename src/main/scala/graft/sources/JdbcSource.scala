@@ -52,34 +52,6 @@ object JdbcSource {
       case None => spark.read.jdbc(conn.url, table, conn.props)
     }
 
-  /** S6 analog — per table: FK count and referenced-by flag. */
-  def tableSummarySql(d: Dialect, db: String): String = d match {
-    case MySql =>
-      s"""(SELECT t.TABLE_NAME AS table_name,
-         |  COUNT(DISTINCT k.COLUMN_NAME) AS num_foreign_keys,
-         |  EXISTS (SELECT 1 FROM information_schema.KEY_COLUMN_USAGE r
-         |          WHERE r.TABLE_SCHEMA = '$db'
-         |            AND r.REFERENCED_TABLE_NAME = t.TABLE_NAME) AS is_referenced
-         |FROM information_schema.TABLES t
-         |LEFT JOIN information_schema.KEY_COLUMN_USAGE k
-         |  ON k.TABLE_SCHEMA = t.TABLE_SCHEMA AND k.TABLE_NAME = t.TABLE_NAME
-         | AND k.REFERENCED_TABLE_NAME IS NOT NULL
-         |WHERE t.TABLE_SCHEMA = '$db'
-         |GROUP BY t.TABLE_NAME) q""".stripMargin
-    case Postgres =>
-      s"""(SELECT c.relname AS table_name,
-         |  COUNT(DISTINCT con.conname) AS num_foreign_keys,
-         |  EXISTS (SELECT 1 FROM pg_constraint r
-         |          WHERE r.confrelid = c.oid AND r.contype = 'f') AS is_referenced
-         |FROM pg_class c
-         |JOIN pg_namespace n ON n.oid = c.relnamespace
-         |LEFT JOIN pg_constraint con
-         |  ON con.conrelid = c.oid AND con.contype = 'f'
-         |WHERE n.nspname = 'public' AND c.relkind = 'r'
-         |GROUP BY c.relname, c.oid
-         |ORDER BY c.relname) q""".stripMargin
-  }
-
   /** S7 analog — row count per table (exact COUNT(*), as the reference
     * issues; planner estimates would not satisfy the gaf/uaf weights).
     */
@@ -121,30 +93,6 @@ object JdbcSource {
          | AND ccu.constraint_schema = tc.constraint_schema
          |WHERE tc.constraint_type = 'FOREIGN KEY'
          |  AND k.table_schema = 'public') q""".stripMargin
-  }
-
-  /** S10 analog — ordered distinct referencing-table list per referenced
-    * table.
-    */
-  def referenceInfoSql(d: Dialect, db: String): String = d match {
-    case MySql =>
-      s"""(SELECT REFERENCED_TABLE_NAME AS referenced_table,
-         |  GROUP_CONCAT(DISTINCT TABLE_NAME ORDER BY TABLE_NAME SEPARATOR ', ')
-         |    AS referencing_tables
-         |FROM information_schema.KEY_COLUMN_USAGE
-         |WHERE TABLE_SCHEMA = '$db' AND REFERENCED_TABLE_NAME IS NOT NULL
-         |GROUP BY REFERENCED_TABLE_NAME) q""".stripMargin
-    case Postgres =>
-      s"""(SELECT ccu.table_name AS referenced_table,
-         |  string_agg(DISTINCT k.table_name, ', ' ORDER BY k.table_name)
-         |    AS referencing_tables
-         |FROM information_schema.key_column_usage k
-         |JOIN information_schema.table_constraints tc
-         |  ON tc.constraint_name = k.constraint_name
-         |JOIN information_schema.constraint_column_usage ccu
-         |  ON ccu.constraint_name = tc.constraint_name
-         |WHERE tc.constraint_type = 'FOREIGN KEY'
-         |GROUP BY ccu.table_name) q""".stripMargin
   }
 
   /** Introspect a live database into [[DatabaseMeta]] through the

@@ -22,8 +22,7 @@ object DriverPool {
     * failure. Single-task and empty lists run inline — no pool.
     */
   def awaitAll(tasks: Seq[() => Unit],
-      timeoutSec: Long = sys.env.getOrElse(
-        "SPARK_GRAFT_POOL_TIMEOUT_SEC", "3600").toLong): Unit = {
+      timeoutSec: Long = timeoutFromEnv()): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(4, tasks.size))
@@ -37,4 +36,18 @@ object DriverPool {
       results.collectFirst { case scala.util.Failure(e) => throw e }
     } finally pool.shutdown()
   }
+
+  private val TimeoutVar = "SPARK_GRAFT_POOL_TIMEOUT_SEC"
+
+  /** The per-task bound from `SPARK_GRAFT_POOL_TIMEOUT_SEC` (3600 s when
+    * unset). A value that is not a positive whole number of seconds
+    * fails here, naming the variable, instead of as a bare
+    * NumberFormatException from inside whichever verb first opens a
+    * pool.
+    */
+  private[graft] def timeoutFromEnv(env: Map[String, String] = sys.env): Long =
+    env.get(TimeoutVar).fold(3600L) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$TimeoutVar must be a positive whole number of seconds, got '$v'"))
+    }
 }

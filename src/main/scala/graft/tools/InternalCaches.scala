@@ -163,4 +163,12 @@ object InternalCaches {
     */
   def liveCount(spark: SparkSession): Int =
     entries.keys.count(_._1 == spark.sparkContext.applicationId)
+
+  /** The input-file snapshot of every live internal cache entry of this
+    * session (test observability; None where enumeration failed).
+    */
+  private[graft] def inputFiles(spark: SparkSession): Seq[Option[Seq[String]]] =
+    entries.toSeq.collect {
+      case ((app, _), e) if app == spark.sparkContext.applicationId => e.files
+    }
 }
