@@ -201,13 +201,17 @@ object SchemaConverter {
     * Returns the adjusted schema plus the demotion log
     * (root → hoisted children), empty when everything already fits.
     * Driver-side control plane like the rest of the converter; only the
-    * estimator callback runs Spark jobs.
+    * estimator callback runs Spark jobs, at most once per distinct node
+    * in one call (a demotion does not re-price the roots that already
+    * fit; nothing is remembered across calls).
     */
   def enforceDocBudget(
       db: DatabaseMeta,
       schema: DocumentSchema,
       maxDocBytes: CollectionNode => Long,
       budgetBytes: Long): (DocumentSchema, Seq[(String, Seq[String])]) = {
+    val priced = scala.collection.mutable.HashMap.empty[CollectionNode, Long]
+    def price(n: CollectionNode): Long = priced.getOrElseUpdate(n, maxDocBytes(n))
     def referencingNode(n: CollectionNode): CollectionNode = {
       val t = db(n.name)
       val fkCols = t.foreignKeys.map(_.columnName).toSet
@@ -222,7 +226,7 @@ object SchemaConverter {
     var progress = true
     while (progress) {
       progress = false
-      cur.roots.find(r => r.embedded.nonEmpty && maxDocBytes(r) > budgetBytes)
+      cur.roots.find(r => r.embedded.nonEmpty && price(r) > budgetBytes)
         .foreach { r =>
           val hoisted = r.embedded.map(referencingNode)
           log += r.name -> hoisted.map(_.name)
@@ -232,7 +236,7 @@ object SchemaConverter {
           progress = true
         }
     }
-    cur.roots.filter(r => r.embedded.isEmpty && maxDocBytes(r) > budgetBytes)
+    cur.roots.filter(r => r.embedded.isEmpty && price(r) > budgetBytes)
       .foreach(r => System.err.println(
         s"[graft] WARNING: root ${r.name} exceeds the $budgetBytes-byte " +
           "document budget with no embedded children to hoist — the table's " +

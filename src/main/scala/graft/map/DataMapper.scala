@@ -42,24 +42,28 @@ class DataMapper(
 
   private def load(table: String): DataFrame = loader(spark, sfDir, table)
 
-  /** [[mapRoot]] behind the x70 pre-flight: estimate every root
-    * document's size ([[DocSizeAudit]]) and REFUSE to build when any
-    * exceeds `budgetBytes` — the audit costs a (key, long) aggregate
-    * per tree edge where the build it guards would pay the full nested
-    * fold before discovering the wall as an executor OOM (or MongoDB's
-    * 16 MB rejection two decades earlier). The error names the worst
-    * offenders so the caller can re-plan — typically by demoting the
-    * root ([[graft.convert.SchemaConverter.enforceDocBudget]]).
+  /** [[mapRoot]] behind the x70 pre-flight: price every root
+    * document ([[DocSizeAudit]]) and REFUSE to build when any exceeds
+    * `budgetBytes` — the audit costs a (key, long) aggregate per tree
+    * edge where the build it guards would pay the full nested fold
+    * before discovering the wall as an executor OOM (or MongoDB's
+    * 16 MB rejection two decades earlier). The check runs
+    * [[DocSizeAudit.maxDocBytes]], the very plan the budget step
+    * ([[graft.convert.SchemaConverter.enforceDocBudget]]) prices roots
+    * with, so a guarded migration compiles no new code for it. Only a
+    * root over budget pays a second query, for the error: it names the
+    * worst offenders (top 5 by estimated bytes) so the caller can
+    * re-plan — typically by demoting the root.
     */
   def mapRootGuarded(
       root: CollectionNode,
       budgetBytes: Long = DocSizeAudit.MongoDocLimit): DataFrame = {
-    val audit = new DocSizeAudit(spark, sfDir, db, loader).estimateRoot(root)
-    // control-plane action: ≤5 (key, bytes) rows cross the driver
-    val worst = audit.filter(col("est_doc_bytes") > budgetBytes)
-      .orderBy(col("est_doc_bytes").desc)
-      .limit(5).collect()
-    if (worst.nonEmpty) {
+    val audit = new DocSizeAudit(spark, sfDir, db, loader)
+    if (audit.maxDocBytes(root) > budgetBytes) {
+      // control-plane action: ≤5 (key, bytes) rows cross the driver
+      val worst = audit.estimateRoot(root).filter(col("est_doc_bytes") > budgetBytes)
+        .orderBy(col("est_doc_bytes").desc)
+        .limit(5).collect()
       val keys = db(root.name).primaryKeys.mkString(",")
       val tops = worst.map(r => s"($keys)=(${
         r.toSeq.dropRight(1).mkString(",")}) ~${r.getLong(r.length - 1)}B")

@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
@@ -816,12 +820,26 @@ object Catalog {
 
   /** Full introspection: builds the driver-side [[DatabaseMeta]] the
     * conversion algorithm consumes (analog of
-    * server/DBMigration.js:30-91). Row counts and column lists come from
-    * the distributed layer; everything else from the declared spec.
+    * server/DBMigration.js:30-91). Column lists come from each table's
+    * [[Tables.load]] frame; row counts are the Parquet footers' row-group
+    * counts summed over that frame's `inputFiles`, read on the driver
+    * over a bounded pool ([[graft.tools.DriverPool]]) — the same files
+    * and the same numbers as the S7 query [[tableCounts]], without
+    * planning or running a Spark job. Everything else comes from the
+    * declared spec.
     */
   def introspect(spark: SparkSession, sfDir: String, spec: SchemaSpec): DatabaseMeta = {
-    val counts = tableCounts(spark, sfDir, spec.tableNames)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val frames = spec.tables.map(t => t.name -> Tables.load(spark, sfDir, t.name)).toMap
+    val files = spec.tables.flatMap(t => frames(t.name).inputFiles.map(t.name -> _))
+    val rows = new Array[Long](files.size)
+    val conf = spark.sparkContext.hadoopConfiguration
+    graft.tools.DriverPool.awaitAll(files.indices.map(i => () => {
+      val in = HadoopInputFile.fromPath(new Path(new java.net.URI(files(i)._2)), conf)
+      val reader = ParquetFileReader.open(in)
+      try rows(i) = reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally reader.close()
+    }))
+    val counts = files.map(_._1).zip(rows).groupMapReduce(_._1)(_._2)(_ + _)
     val referencedBy: Map[String, Seq[String]] = spec.tables
       .flatMap(t => t.foreignKeys.map(fk => fk.referencedTable -> t.name))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct.sorted }
@@ -829,7 +847,7 @@ object Catalog {
       TableMeta(
         name = t.name,
         numOfRows = counts.getOrElse(t.name, 0L),
-        columns = Tables.load(spark, sfDir, t.name).columns.toSeq,
+        columns = frames(t.name).columns.toSeq,
         primaryKeys = t.primaryKeys,
         foreignKeys = t.foreignKeys,
         isReferenced = referencedBy.contains(t.name),

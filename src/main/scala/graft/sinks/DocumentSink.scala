@@ -13,7 +13,11 @@ import org.apache.spark.sql.DataFrame
   *
   * Contract shared by all impls: empty collections are skipped
   * (server/WriteToFile.js:9-11) and the returned list names the
-  * collections actually written, in input order.
+  * collections actually written, in input order. How empty is detected
+  * is each impl's own business: [[JsonDirSink]] counts the rows its one
+  * write observed (and deletes an empty collection's directory),
+  * [[ZipArraySink]] sees no first row in the stream it copies, and
+  * [[MongoShapedSink]] probes `isEmpty` before staging batches.
   */
 trait DocumentSink {
   def write(collections: Seq[(String, DataFrame)]): Seq[String]

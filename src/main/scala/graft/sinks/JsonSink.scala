@@ -1,6 +1,7 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 
@@ -15,7 +16,15 @@ import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
   */
 object JsonSink {
 
-  /** Write every non-empty collection under `outDir/<name>/`.
+  /** Write every non-empty collection under `outDir/<name>/` and return
+    * their names in input order. Each collection's plan runs exactly
+    * once: the row count is observed on the write itself (an
+    * [[org.apache.spark.sql.Observation]]), not probed up front — a
+    * probe re-executes the whole nested fold, since nothing below a
+    * `NestCollect` can be pruned away. A collection that wrote 0 rows
+    * is not returned and leaves no `outDir/<name>`, also when that
+    * directory is left over from an earlier run (the overwrite
+    * replaces it, then the empty output is deleted).
     * `partitionBy` gives directory-partitioned output (e.g. by a region
     * or date column) — at cluster scale downstream consumers then prune
     * partitions instead of listing everything.
@@ -25,16 +34,19 @@ object JsonSink {
       outDir: String,
       partitionBy: Seq[String] = Seq.empty): Seq[String] =
     collections.flatMap { case (name, df) =>
-      if (df.isEmpty) None
+      val missing = partitionBy.filterNot(c =>
+        df.columns.exists(_.equalsIgnoreCase(c)))
+      require(missing.isEmpty,
+        s"partitionBy columns not in $name: ${missing.mkString(", ")}")
+      val rows = Observation()
+      val w = df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
+      val wp = if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)
+      val path = new Path(s"$outDir/$name")
+      wp.json(path.toString)
+      if (rows.get("rows") != 0L) Some(name)
       else {
-        val missing = partitionBy.filterNot(c =>
-          df.columns.exists(_.equalsIgnoreCase(c)))
-        require(missing.isEmpty,
-          s"partitionBy columns not in $name: ${missing.mkString(", ")}")
-        val w = df.write.mode("overwrite")
-        val wp = if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*)
-        wp.json(s"$outDir/$name")
-        Some(name)
+        path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(path, true)
+        None
       }
     }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.convert.SchemaConverter
 import graft.map.{DataMapper, DocSizeAudit}
-import graft.model.ConversionKind
+import graft.model.{CollectionNode, ConversionKind}
 import graft.queries.MigrationPipeline
 
 /** x70 — the document-size pre-flight: the estimate must price the real
@@ -72,6 +72,8 @@ class DocSizeAuditSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("region") && e.getMessage.contains("10000"),
       s"guard message should name root and budget: ${e.getMessage}")
+    assert(e.getMessage.contains("worst: (r_regionkey)=("),
+      s"guard message should name the worst keys: ${e.getMessage}")
     // within budget: same result as the unguarded build
     val ok = mapper.mapRootGuarded(region, budgetBytes = DocSizeAudit.MongoDocLimit)
     assert(ok.count() === 5)
@@ -100,6 +102,33 @@ class DocSizeAuditSpec extends SparkSpec {
     val (same, none) =
       SchemaConverter.enforceDocBudget(db, schema, a.maxDocBytes, DocSizeAudit.MongoDocLimit)
     assert(none.isEmpty && same === schema)
+  }
+
+  test("enforceDocBudget prices each distinct node once per call") {
+    val (db, schema) = MigrationPipeline.converted(spark, sf)
+    val region = schema.roots.find(_.name == "region").get
+    val nation = region.embedded.head
+    val customer = nation.embedded.find(_.name == "customer").get
+    // customer→orders fits and sits before region, so every restart of
+    // the demotion loop passes it again
+    val input = schema.copy(roots = customer +: schema.roots.map(r =>
+      if (r.name == "region")
+        r.copy(embedded = Seq(nation.copy(embedded = nation.embedded.filterNot(_ == customer))))
+      else r))
+    // a fake price: 3 for a supplier, 1 for any other row, summed over
+    // the tree — region (5) and then nation (4) go over a budget of 3
+    def bytes(n: CollectionNode): Long =
+      (if (n.name == "supplier") 3L else 1L) + n.embedded.map(bytes).sum
+    val calls = scala.collection.mutable.Map.empty[CollectionNode, Int].withDefaultValue(0)
+    val (adjusted, log) = SchemaConverter.enforceDocBudget(db, input,
+      n => { calls(n) += 1; bytes(n) }, budgetBytes = 3L)
+    assert(log === Seq("region" -> Seq("nation"), "nation" -> Seq("supplier")))
+    assert(adjusted.roots.map(r => r.name -> r.embedded.map(_.name)) === Seq(
+      "customer" -> Seq("orders"), "region" -> Seq(), "part" -> Seq(), "lineitem" -> Seq(),
+      "nation" -> Seq(), "supplier" -> Seq()))
+    assert(adjusted.roots.find(_.name == "nation").get.kind === ConversionKind.Referencing)
+    assert(calls.values.forall(_ == 1), s"nodes priced more than once: $calls")
+    assert(calls.size === 8, "2 demoted roots, 2 demoted copies, 4 roots that fit")
   }
 
   test("summary audits every root with document counts") {

@@ -39,7 +39,17 @@ class DocumentSinkSpec extends SparkSpec {
     // and the two file impls actually produced their layouts
     assert(new java.io.File(s"$dir/region").isDirectory)
     assert(new java.io.File(s"$dir/customer").isDirectory)
+    assert(!new java.io.File(s"$dir/void").exists, "an empty collection leaves no directory")
     assert(new java.io.File(zip).isFile)
+  }
+
+  test("an empty collection removes its directory left over from an earlier run") {
+    val dir = tmp("sink_stale")
+    assert(JsonDirSink(dir).write(Seq("void" -> collections.head._2)) === Seq("void"))
+    assert(new java.io.File(s"$dir/void").isDirectory)
+    assert(JsonDirSink(dir).write(collections) === Seq("region", "customer"))
+    assert(!new java.io.File(s"$dir/void").exists, "stale documents of an earlier run survived")
+    assert(spark.read.json(s"$dir/region").count() === 2)
   }
 
   test("mongo-shaped command batches carry the documented insert shape") {

@@ -36,6 +36,10 @@ class FileSourceSpec extends SparkSpec {
     assert(dirs.count(_.startsWith("n_regionkey=")) === 5)
     val back = spark.read.json(s"$tmp/nation")
     assert(back.count() === nested.count())
+    val e = intercept[IllegalArgumentException] {
+      JsonSink.write(Seq("nation" -> nested), tmp, partitionBy = Seq("no_such_col"))
+    }
+    assert(e.getMessage.contains("partitionBy columns not in nation: no_such_col"))
   }
 
   test("Tables.load normalizes a µs-TIMESTAMP events table to the ns-long contract") {
