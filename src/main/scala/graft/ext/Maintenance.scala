@@ -38,17 +38,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * one rebuild serves both triggers, exactly as a careful operator
   * would hand-compose it). Gauges are the trigger's own gauge —
   * stamped cap (cap-bind), pending-request count (ledger), data-file
-  * count (file-count) — and NULL where the trigger reads no Long gauge
-  * (drift: its evidence is the monitor frame, distilled to the fired
-  * bit). `gauge_after` re-reads the gauge after the remedy; equal to
-  * `gauge_before` when nothing acted.
+  * count (file-count; near-dup adds its tombstone files) — and NULL
+  * where the trigger reads no Long gauge (drift: its evidence is the
+  * monitor frame, distilled to the fired bit). `gauge_after` re-reads
+  * the gauge after the remedy; equal to `gauge_before` when nothing
+  * acted.
   *
   * Cost when every alarm is quiet: one occupancy scan per
   * semantic/IVF-PQ store, one ledger row-count + one file listing per
-  * gram store, one file listing per near-dup store — the audit bill a
-  * cron pays by design. A firing trigger pays its verb's own
-  * documented bill (rebuild-class for cap-bind/drain; rewrite-class
-  * for compaction).
+  * gram store, two file listings (data table and tombstones) per
+  * near-dup store — the audit bill a cron pays by design. A firing
+  * trigger pays its verb's own documented bill (rebuild-class for
+  * cap-bind/drain; rewrite-class for compaction).
   */
 object Maintenance {
 
@@ -113,11 +114,12 @@ object Maintenance {
 
   /** MinHash near-dup store (x40 family). One trigger: `file_count`
     * over the `shingles` table (the table the inline append trigger
-    * counts), remedied by [[Dedup.compactNearDupIndex]] (which also
-    * applies takedown tombstones durably). Thresholds as [[GramStore]].
-    * Tombstone files under `deletes/` do not count toward the trigger:
-    * a store that only receives takedowns never fires it, however many
-    * tombstone files every screen then reads.
+    * counts) plus the takedown tombstone files under `deletes/`, which
+    * every screen reads too, remedied by [[Dedup.compactNearDupIndex]]
+    * (which applies the tombstones durably and removes their files). A
+    * store that only receives takedowns therefore fires at its
+    * threshold. The inline append trigger counts `shingles` only.
+    * Thresholds as [[GramStore]].
     */
   final case class NearDupStore(name: String, indexDir: String,
       maxDataFiles: Long = 1024L) extends Store
@@ -248,7 +250,8 @@ object Maintenance {
   private def nearDupTriggers(spark: SparkSession, s: NearDupStore,
       dryRun: Boolean): Seq[Action] =
     fileCountTrigger(s.name,
-      () => Dedup.NearDupIndex.dataFiles(spark, s.indexDir), dryRun,
+      () => Dedup.NearDupIndex.dataFiles(spark, s.indexDir) +
+        Dedup.NearDupIndex.tombstoneFiles(spark, s.indexDir), dryRun,
       if (s.maxDataFiles < 0) None else Some(s.maxDataFiles),
       "compactNearDupIndex",
       () => Dedup.compactNearDupIndex(spark, s.indexDir))

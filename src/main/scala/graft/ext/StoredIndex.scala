@@ -126,6 +126,12 @@ private[graft] final class StoredIndex(
   def dataFiles(spark: SparkSession, dir: String): Long =
     Dedup.countDataFiles(spark, s"$dir/$dataTable")
 
+  /** Takedown tombstone files under `deletes/`. Every read through
+    * [[live]] opens them, and only [[compact]] or [[rebuild]] clears
+    * them, so the maintenance sweep adds them to [[dataFiles]]. */
+  def tombstoneFiles(spark: SparkSession, dir: String): Long =
+    Dedup.countDataFiles(spark, s"$dir/$Deletes")
+
   /** The inline trigger: run `compact` when the data table holds more
     * than `perUnit × units` files. `perUnit <= 0` disables without
     * evaluating `units`, and `units` is evaluated only after the file

@@ -17,7 +17,7 @@ import org.apache.spark.sql.DataFrame
   * is each impl's own business: [[JsonDirSink]] counts the rows its one
   * write observed (and deletes an empty collection's directory),
   * [[ZipArraySink]] sees no first row in the stream it copies, and
-  * [[MongoShapedSink]] probes `isEmpty` before staging batches.
+  * [[MongoShapedSink]] stages no batch (or delivers no document).
   */
 trait DocumentSink {
   def write(collections: Seq[(String, DataFrame)]): Seq[String]
@@ -96,29 +96,31 @@ final case class MongoShapedSink(
     finally s.close()
   }
 
-  protected def deliver(name: String, batches: org.apache.spark.sql.Dataset[String]): Unit =
+  /** Send `batches` to the server; returns the number of documents
+    * delivered, so a collection that delivered none counts as empty. */
+  protected def deliver(name: String, batches: org.apache.spark.sql.Dataset[String]): Long =
     throw new UnsupportedOperationException(
       s"$host:$port is reachable, but wire delivery requires the MongoDB " +
         "Java driver on the classpath; this build stages and validates " +
         "insert batches only")
 
+  /** One plan per collection: the batches are built and consumed once,
+    * and the collection is empty exactly when they are. */
   override def write(collections: Seq[(String, DataFrame)]): Seq[String] = {
     val reachable = serverReachable()
     collections.flatMap { case (name, df) =>
-      if (df.isEmpty) None
+      val batches = commandBatches(name, df)
+      if (reachable) Option.when(deliver(name, batches) > 0)(name)
       else {
-        val batches = commandBatches(name, df)
-        if (reachable) deliver(name, batches)
-        else {
-          // graceful skip: materialize the batches (the whole transform
-          // runs and any malformed document would fail HERE), report,
-          // and move on — a missing sink server must not lose the run
-          val n = batches.count()
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"[MongoShapedSink] $host:$port unreachable — staged $n " +
-              s"insert batches for '$name' without delivery")
-        }
-        Some(name)
+        // graceful skip: materialize the batches (the whole transform
+        // runs and any malformed document would fail HERE), report,
+        // and move on — a missing sink server must not lose the run.
+        // An RDD count is one job; a Dataset count adds an exchange.
+        val n = batches.rdd.count()
+        if (n > 0) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"[MongoShapedSink] $host:$port unreachable — staged $n " +
+            s"insert batches for '$name' without delivery")
+        Option.when(n > 0)(name)
       }
     }
   }

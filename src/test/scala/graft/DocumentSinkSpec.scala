@@ -52,6 +52,29 @@ class DocumentSinkSpec extends SparkSpec {
     assert(spark.read.json(s"$dir/region").count() === 2)
   }
 
+  test("mongo-shaped sink runs one job per collection when no server answers") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sink = MongoShapedSink("mongodb://127.0.0.1:27017", "northwind")
+    val (empty, nonEmpty) = collections.partition(_._1 == "void")
+    spark.sparkContext.addSparkListener(l)
+    try {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      jobs.set(0)
+      assert(sink.write(nonEmpty) === Seq("region", "customer"))
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      assert(jobs.get === nonEmpty.size, "no emptiness probe before staging the batches")
+      jobs.set(0)
+      assert(sink.write(empty) === Seq.empty,
+        "an empty collection stages no batch and is skipped")
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      assert(jobs.get === 1)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("mongo-shaped command batches carry the documented insert shape") {
     val sink = MongoShapedSink("mongodb://db.internal:28000", "nw", batchSize = 1)
     assert(sink.host === "db.internal" && sink.port === 28000)

@@ -40,6 +40,49 @@ class LogPipelineSpec extends SparkSpec {
       "dedup within statement; unparseable statement skipped")
   }
 
+  test("a CRLF log splits into the same statements as its LF form") {
+    val crlf = Fixtures.mysqlLog.replace("\n", "\r\n")
+    assert(LogPipeline.splitRecords(crlf, MySqlLog) ===
+      LogPipeline.splitRecords(Fixtures.mysqlLog, MySqlLog))
+    val pg = Fixtures.postgresLog.replace("\n", "\r\n")
+    assert(LogPipeline.splitRecords(pg, PostgresLog) ===
+      LogPipeline.splitRecords(Fixtures.postgresLog, PostgresLog))
+  }
+
+  test("the first record may start mid-line after the server preamble") {
+    val log =
+      "/usr/sbin/mysqld, Version: 8.0.36. started with:\n" +
+        "Tcp port: 3306  Unix socket: /var/run/mysqld/mysqld.sock\n" +
+        "Time                 Id Command    Argument240611 10:15:02\t  12 Query\tSELECT *\n" +
+        "  FROM orders\n" +
+        "240611 10:15:03     12 Query     SELECT 1"
+    assert(LogPipeline.splitRecords(log, MySqlLog) === Seq("SELECT * FROM orders", "SELECT 1"))
+  }
+
+  test("an empty Query body yields no statement") {
+    val log =
+      "240611 10:15:02     12 Query     \n" +
+        "240611 10:15:03     12 Query\t \u000B\r\n" +
+        "240611 10:15:04     12 Query     DELETE FROM part\n" +
+        "240611 10:15:05     12 Query"
+    assert(LogPipeline.splitRecords(log, MySqlLog) === Seq("DELETE FROM part"))
+  }
+
+  test("mentions are de-duplicated before lowercasing") {
+    val out = LogPipeline.tableMentions(Seq("SELECT * FROM Orders JOIN orders").toDS())
+      .as[(String, String)].collect()
+    assert(out.toSeq === Seq(("select", "orders"), ("select", "orders")),
+      "Orders and orders are two distinct mentions of one table")
+  }
+
+  test("a keyword followed by a letter does not classify") {
+    val stmts = Seq("selecté * FROM orders", "select * FROM customer").toDS()
+    assert(LogPipeline.classify(stmts).as[(String, String)].collect().toSeq ===
+      Seq(("select", "select * FROM customer")))
+    assert(LogPipeline.tableMentions(stmts).as[(String, String)].collect().toSeq ===
+      Seq(("select", "customer")))
+  }
+
   test("workload stats weight mentions by row count; DML feeds uaf") {
     val mentions = Seq(("select", "t1"), ("select", "t1"), ("update", "t1"),
       ("insert", "t2"), ("select", "ghost")).toDF("stmt_type", "table_name")

@@ -215,6 +215,30 @@ class MaintenanceSweepSpec extends SparkSpec {
       "compaction folds files without changing the model's scores")
   }
 
+  test("near-dup store fed only takedowns fires at its threshold, " +
+      "counting tombstone files") {
+    val r = root("neardup_takedowns")
+    val docs = (1L to 6L).map(i => i -> s"document number $i has its own words $i")
+      .toDF("doc_id", "text")
+    Dedup.writeNearDupIndex(docs, s"$r/nd")
+    val base = Dedup.NearDupIndex.dataFiles(spark, s"$r/nd")
+    val store = NearDupStore("nd", s"$r/nd", maxDataFiles = base + 2)
+    def sweep() = actions(Maintenance.maintenanceSweep(spark, Seq(store)))(("nd", "file_count"))
+    Dedup.deleteFromNearDupIndex(Seq(1L).toDF("doc_id"), s"$r/nd")
+    Dedup.deleteFromNearDupIndex(Seq(2L).toDF("doc_id"), s"$r/nd")
+    assert(sweep() === ((false, false, "compactNearDupIndex", Some(base + 2), Some(base + 2))),
+      "at the threshold: quiet")
+    Dedup.deleteFromNearDupIndex(Seq(3L).toDF("doc_id"), s"$r/nd")
+    val (fired, acted, _, before, after) = sweep()
+    assert(fired && acted && before === Some(base + 3))
+    assert(Dedup.NearDupIndex.tombstoneFiles(spark, s"$r/nd") === 0L,
+      "the compaction applied the tombstones and removed their files")
+    assert(after === Some(Dedup.NearDupIndex.dataFiles(spark, s"$r/nd")))
+    val kept = Dedup.NearDupIndex.read(spark, s"$r/nd", "sizes")
+      .select("doc_id").as[Long].collect().toSet
+    assert(kept === Set(4L, 5L, 6L))
+  }
+
   test("near-dup store file_count rung compacts without changing " +
       "screen verdicts") {
     val r = root("neardup")
