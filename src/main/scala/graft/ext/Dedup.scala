@@ -633,14 +633,12 @@ object Dedup {
     screenVerdict(exactFlag, inSh, exSh, exSizes, minJaccard)
   }
 
-  /** The asymmetric probe + verdict shared by [[incrementalScreen]] and
-    * [[screenAgainstNearDupIndex]]: incoming shingles join existing
-    * shingles strictly incoming→existing, Jaccard over the (already
-    * capped) sets, best existing match per incoming doc via the heap
-    * operator (sort-free), exact gate wins over near. `exSizes` arrives
-    * precomputed — the in-memory path derives it from `exSh`, the
-    * stored path reads it from the index so the screen never aggregates
-    * over the whole shingle index.
+  /** The asymmetric probe + verdict of [[incrementalScreen]]: incoming
+    * shingles join existing shingles strictly incoming→existing, Jaccard
+    * over the (already capped) sets, best existing match per incoming
+    * doc via the heap operator (sort-free), exact gate wins over near.
+    * [[screenAgainstNearDupIndex]] computes the same rows with its batch
+    * side on the driver.
     */
   private def screenVerdict(exactFlag: DataFrame, inSh: DataFrame,
       exSh: DataFrame, exSizes: DataFrame, minJaccard: Double): DataFrame = {
@@ -741,11 +739,10 @@ object Dedup {
   /** The near-dup index's [[StoredIndex]] declaration: three data
     * tables compacted per table, `doc_id` tombstones, `shingles` (the
     * largest; the three grow in lockstep) as the file-count gauge, and
-    * every verb but the rebuild gated on the `_format` stamp. No reader
-    * registry-persists a frame over the live tables (the screen's
-    * memoized batch-side frame reads only the frozen hot list), so a
-    * takedown releases only `deletes/` and a compaction only what it
-    * swapped. Builds and appends call no release.
+    * every verb but the rebuild gated on the `_format` stamp. Near-dup
+    * readers memoize nothing (the screen and the append register no
+    * internal cache), so a takedown releases only `deletes/` and a
+    * compaction only what it swapped. Builds and appends call no release.
     */
   private[graft] val NearDupIndex = new StoredIndex(
     tables = Seq("shingles", "sizes", "hashes"),
@@ -765,17 +762,19 @@ object Dedup {
   /** Append a (disjoint) kept batch into the stored near-dup index:
     * batch shingles capped by the STORED hot list, batch sizes, batch
     * hashes — all as additional files. Cost = one batch scan +
-    * batch-sized aggregates, independent of index size. Each table
-    * gains exactly ONE file per append (`repartition(1)` before the
-    * write — the payload is batch-sized, so a single writer is the
-    * right parallelism, the compute upstream of the exchange stays
-    * parallel, and the live file count equals the append count), and
-    * `maxFilesPerTable`
-    * (0 disables) bounds that count: when the `shingles` table — the
-    * largest of the three, and they grow in lockstep — exceeds the
-    * threshold, [[compactNearDupIndex]] runs inline. Screen output is
-    * invariant across the trigger (compaction is the distinct-rewrite
-    * repair; spec-gated).
+    * batch-sized aggregates, independent of index size: the per-doc
+    * distinct capped shingle set is built once (one exchange on
+    * `doc_id`) and held locally for its two writes, `shingles` as its
+    * explode and `sizes` as its size, while `hashes` keeps its own
+    * distinct. Each table gains exactly ONE file per append
+    * (`coalesce(1)` folds the single writer into the final stage — the
+    * payload is batch-sized, and the live file count equals the append
+    * count), and `maxFilesPerTable` (0 disables) bounds that count: when
+    * the `shingles` table — the largest of the three, and they grow in
+    * lockstep — exceeds the threshold, [[compactNearDupIndex]] runs
+    * inline. Screen output is invariant across the trigger (compaction
+    * is the distinct-rewrite repair; spec-gated). Leaves no
+    * [[graft.tools.InternalCaches]] entry.
     */
   def appendNearDupIndex(batch: DataFrame, indexDir: String, n: Int = 3,
       maxFilesPerTable: Int = 64): Unit = {
@@ -784,24 +783,37 @@ object Dedup {
     // into a missing live table would mint a batch-only table and fork
     // the index away from the orphaned .compact copy
     NearDupIndex.open(spark, indexDir)
-    val hot = spark.read.parquet(s"$indexDir/hot")
-    val capped = graft.tools.InternalCaches.persist(
-      hashedShingleSet(batch, n).join(broadcast(hot), Seq("sh"), "left_anti"))
+    val sh = batch.select(col("doc_id"), explode(shingleStructs(tokens(col("text")), n)).as("s"))
+      .select(hash32(shingleText(col("s"), n)).as("sh"), col("doc_id"))
+    val perDoc = storedHot(spark, indexDir)
+      .fold(sh)(hot => sh.join(broadcast(hot), Seq("sh"), "left_anti"))
+      .groupBy("doc_id").agg(collect_set(col("sh")).as("shs"))
+      .persist()
     // the hashes append shares nothing with the shingle chain — overlap
-    // the two commit chains (guide §2.6; per-append these are three
-    // tiny jobs whose cost is scheduling + commit latency). sizes stays
-    // AFTER shingles inside its chain: the shingles write materializes
-    // the registry-persisted `capped`, which sizes then reads from cache.
-    graft.tools.DriverPool.awaitAll(Seq(
+    // the two commit chains (guide §2.6; per-append these are tiny jobs
+    // whose cost is scheduling + commit latency). sizes stays AFTER
+    // shingles inside its chain: it reads the set the shingles write
+    // materialized.
+    try graft.tools.DriverPool.awaitAll(Seq(
       () => {
-        capped.repartition(1).write.mode("append").parquet(s"$indexDir/shingles")
-        capped.groupBy("doc_id").agg(count(lit(1)).as("n_ex"))
-          .repartition(1).write.mode("append").parquet(s"$indexDir/sizes")
+        perDoc.select(explode(col("shs")).as("sh"), col("doc_id"))
+          .coalesce(1).write.mode("append").parquet(s"$indexDir/shingles")
+        perDoc.select(col("doc_id"), size(col("shs")).cast("long").as("n_ex"))
+          .coalesce(1).write.mode("append").parquet(s"$indexDir/sizes")
       },
       () => batch.select(col("doc_id"), md5(col("text")).as("h")).distinct()
-        .repartition(1).write.mode("append").parquet(s"$indexDir/hashes")))
+        .coalesce(1).write.mode("append").parquet(s"$indexDir/hashes")))
+    finally perDoc.unpersist(blocking = false)
     NearDupIndex.compactIfOver(spark, indexDir, maxFilesPerTable)(
       compactNearDupIndex(spark, indexDir))
+  }
+
+  /** The stored hot list, frozen at build; None when its footers count
+    * no rows (the default `maxShingleDf`), so the verbs skip the cap. */
+  private def storedHot(spark: SparkSession, indexDir: String): Option[DataFrame] = {
+    val hot = s"$indexDir/hot"
+    if (IndexFs.footerRows(spark, hot) == 0L) None
+    else Some(StoredIndex.parquet(spark, hot))
   }
 
   /** [[appendNearDupIndex]] under an at-least-once delivery contract
@@ -842,15 +854,11 @@ object Dedup {
   def deleteFromNearDupIndex(docIds: DataFrame, indexDir: String): Unit =
     // a frame memoized over the OLD tombstone set would keep matching
     // against the deleted documents — the rebuild staleness class. The
-    // release is scoped to the tombstone dir (round 19 — was the whole
-    // indexDir): a takedown changes no stored artifact except the
-    // tombstones (hot/hashes/shingles/sizes files are immutable until
-    // a compaction, which releases its swapped tables itself), and
-    // the screen's memoized batch-side frame reads only the
-    // frozen hot list — the whole-prefix release forced every
-    // subsequent screen of the same probe to re-shingle it. Safe only
-    // because no near-dup reader memoizes a live-table frame (the
-    // [[StoredIndex]] memoization invariant).
+    // release is scoped to the tombstone dir: a takedown changes no
+    // stored artifact except the tombstones (hot/hashes/shingles/sizes
+    // files are immutable until a compaction, which releases its
+    // swapped tables itself). Safe only because near-dup readers
+    // memoize nothing (the [[StoredIndex]] memoization invariant).
     NearDupIndex.tombstone(docIds, indexDir)
 
   /** Retrain-and-migrate for the near-dup index's FROZEN hot-shingle
@@ -868,8 +876,8 @@ object Dedup {
     * against stored shingles capped under another would systematically
     * under-count intersections). Batch markers move into
     * the new directory before the swap so post-rebuild redeliveries
-    * still skip; the memoized screens reading the old directory are
-    * invalidated ([[graft.tools.InternalCaches.releaseByPath]] — the
+    * still skip; any internal cache reading the old directory is
+    * released ([[graft.tools.InternalCaches.releaseByPath]] — the
     * x116 stale-geometry lesson). Cost = the build's (one corpus
     * shingle pass + the df aggregate), paid only when boilerplate
     * drift warrants a fresh cap.
@@ -895,8 +903,7 @@ object Dedup {
     * so a crash at any point is healed by the next read, append, or
     * compaction re-run. Takedown tombstones apply durably and clear
     * after the last swap; only the swapped tables and the tombstones
-    * are released, so batch-side shingle caps keyed on the untouched
-    * hot list stay warm. The hot list is left as built — refreshing it
+    * are released. The hot list is left as built — refreshing it
     * is a REBUILD (it changes which shingles the whole index stores),
     * not a compaction.
     */
@@ -918,39 +925,101 @@ object Dedup {
     }
 
   /** x104 screen half — [[incrementalScreen]] semantics (same output
-    * contract, same verdict rules) reading ONLY the stored artifacts:
-    * no history re-scan, no history re-shingling, no whole-index size
-    * aggregate (sizes are stored). Per-batch cost is the incoming scan
-    * + the index probe; the probe join's batch side is batch-sized, so
-    * AQE broadcasts it and the index scan never shuffles — the same
-    * asymmetry as the x85 screen, with the x65 Bloom carrier the
-    * documented pre-gate if even that scan needs trimming.
+    * contract, same verdict rules, same schema) reading ONLY the stored
+    * artifacts: no history re-scan, no history re-shingling, no
+    * whole-index size aggregate (sizes are stored).
+    *
+    * EAGER, unlike the in-memory screen: the call runs its Spark jobs
+    * and returns the verdicts as a local frame, one row per incoming
+    * row. The number of jobs is set by the batch, not by the plan's
+    * shape: one pass over `incoming`, one filtered scan of the live
+    * `hashes` (the exact gate), one probe plan over the live `shingles`
+    * and `sizes` (the near gate), and one probe of the hot list only
+    * when the index was built with a binding `maxShingleDf`.
+    *
+    * Batch contract: `incoming` must fit on the driver. What reaches
+    * the driver is batch-sized only — per incoming row its `doc_id`,
+    * md5 and shingle hashes; the stored hashes equal to the batch's; the
+    * batch's hot shingles; and at most one best match per incoming
+    * `doc_id` — never an index-sized or candidate-pair-sized set. Rows
+    * sharing a `doc_id` are screened as one document (their shingle sets
+    * union); a null `doc_id` is never a near duplicate. The probe's
+    * batch side broadcasts, so the index scan never shuffles; the
+    * per-(doc, candidate) intersection counts partially aggregate
+    * before the one exchange, and the best match per doc rides the heap
+    * operator, sort-free. Registers no internal cache.
     */
   def screenAgainstNearDupIndex(incoming: DataFrame, indexDir: String,
       n: Int = 3, minJaccard: Double = 0.8): DataFrame = {
+    import graft.plans.TopKPerGroup
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     val spark = incoming.sparkSession
     // a reader after a mid-swap compactor crash self-heals (one rename)
     // instead of failing on the missing live table
     NearDupIndex.open(spark, indexDir)
-    // tombstones out first, then project to the distinct-h probe set:
-    // the projection both defends the exact gate against duplicate
-    // hash rows from appends (a duplicate would duplicate incoming
-    // rows through the left join) and keeps a hash alive while ANY
-    // live document carries it — deleting one of two identical docs
-    // must not un-gate the other
-    val exHash = NearDupIndex.read(spark, indexDir, "hashes")
-      .select(col("h")).distinct()
-      .withColumn("ex", lit(true))
-    val exactFlag = incoming.select(col("doc_id"), md5(col("text")).as("h"))
-      .join(exHash, Seq("h"), "left")
-      .select(col("doc_id"), coalesce(col("ex"), lit(false)).as("is_exact_dup"))
-    val hot = spark.read.parquet(s"$indexDir/hot")
-    val inSh = graft.tools.InternalCaches.persist(
-      hashedShingleSet(incoming, n).join(broadcast(hot), Seq("sh"), "left_anti"))
+    val docId = incoming.select(col("doc_id")).schema.head
+    val batch = incoming.select(col("doc_id"), md5(col("text")).as("h"),
+        transform(shingleStructs(tokens(col("text")), n),
+          s => hash32(shingleText(s, n))).as("sh"))
+      .collect()
+    def shingles(r: Row): Set[Long] =
+      if (r.isNullAt(2)) Set.empty else r.getSeq[Long](2).toSet
+    // the batch's shingles the hot list holds: batch-sized by construction
+    val hot = storedHot(spark, indexDir).fold(Set.empty[Long]) { h =>
+      import spark.implicits._
+      batch.iterator.flatMap(shingles).distinct.toSeq.toDF("sh")
+        .join(broadcast(h), Seq("sh"), "left_semi").as[Long].collect().toSet
+    }
+    // per-doc_id union of the capped sets; a null doc_id never joins
+    val perDoc = batch.iterator.filterNot(_.isNullAt(0)).toSeq
+      .groupMapReduce(_.get(0))(shingles)(_ ++ _)
+      .map { case (d, sh) => d -> (sh -- hot) }.filter(_._2.nonEmpty)
+    // the exact gate: a hash stays alive while ANY live document carries
+    // it, so deleting one of two identical docs does not un-gate the other
+    val hashes = batch.iterator.filterNot(_.isNullAt(1)).map(_.getString(1)).toSet
+    val exact =
+      if (hashes.isEmpty) Set.empty[String]
+      else NearDupIndex.read(spark, indexDir, "hashes").select(col("h"))
+        .filter(col("h").isin(hashes.toSeq: _*)).distinct()
+        .collect().map(_.getString(0)).toSet
     val exSh = NearDupIndex.read(spark, indexDir, "shingles")
-    val exSizes = NearDupIndex.read(spark, indexDir, "sizes")
       .withColumnRenamed("doc_id", "ex_doc")
-    screenVerdict(exactFlag, inSh, exSh, exSizes, minJaccard)
+    val best: Map[Any, Row] =
+      if (perDoc.isEmpty) Map.empty
+      else {
+        val inSh = spark.createDataFrame(perDoc.toSeq.flatMap { case (d, sh) =>
+            sh.toSeq.map(h => Row(h, d, sh.size.toLong))
+          }.asJava,
+          StructType(Seq(StructField("sh", LongType, nullable = false),
+            docId, StructField("n_in", LongType, nullable = false))))
+        val scored = exSh.join(broadcast(inSh), Seq("sh"))
+          .groupBy(col("doc_id"), col("ex_doc"), col("n_in"))
+          .agg(count(lit(1)).as("inter"))
+          .join(NearDupIndex.read(spark, indexDir, "sizes")
+            .withColumnRenamed("doc_id", "ex_doc"), Seq("ex_doc"))
+          .select(col("doc_id"), col("ex_doc"),
+            round(col("inter").cast("double") / (col("n_in") + col("n_ex") - col("inter")), 6)
+              .as("jac"))
+          .filter(col("jac") >= minJaccard)
+        TopKPerGroup.topK(scored, Seq("doc_id"),
+            Seq("jac" -> TopKPerGroup.Desc, "ex_doc" -> TopKPerGroup.Asc), 1)
+          .collect().map(r => r.get(0) -> r).toMap
+      }
+    val verdicts = batch.toSeq.map { r =>
+      val isExact = !r.isNullAt(1) && exact(r.getString(1))
+      val near = if (r.isNullAt(0)) None else best.get(r.get(0))
+      Row(r.get(0), isExact, near.map(_.get(1)).orNull,
+        near.map(_.get(2)).orNull,
+        if (isExact) "drop_exact" else if (near.isDefined) "drop_near" else "keep")
+    }
+    spark.createDataFrame(verdicts.asJava, StructType(Seq(
+      docId,
+      StructField("is_exact_dup", BooleanType, nullable = false),
+      StructField("near_dup_of", exSh.schema("ex_doc").dataType),
+      StructField("near_jaccard", DoubleType),
+      StructField("verdict", StringType, nullable = false))))
   }
 
   /** Cross-source overlap matrix — the provenance audit that tells a

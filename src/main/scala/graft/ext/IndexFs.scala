@@ -1,7 +1,12 @@
 package graft.ext
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem plumbing shared by the stored-index lifecycles (gram,
   * near-dup, LM, semantic): commit markers and the tmp → old → live
@@ -15,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * resolve every control-plane path through the directory's own
   * filesystem, exactly like the parquet/sidecar I/O beside it.
   *
-  * Everything here is driver-side control-plane: one RPC per call,
-  * never a Spark job.
+  * Everything here is driver-side control-plane: a few RPCs per call
+  * (a listing, a marker, a footer), never a Spark job.
   */
 object IndexFs {
 
@@ -51,6 +56,54 @@ object IndexFs {
 
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
+
+  /** The Spark schema of the flat parquet table `dir`, read on the
+    * driver from the footer of its first data file in path order — the
+    * file Spark's own non-merging schema inference reads, without the
+    * Spark job that inference runs. None when there is no data file,
+    * when the table is partitioned (subdirectories carry columns no
+    * footer holds), or when the footer has no Spark schema; callers then
+    * fall back to plain inference.
+    */
+  def footerSchema(spark: SparkSession, dir: String): Option[StructType] =
+    flatDataFiles(spark, dir).flatMap(_.headOption).flatMap { st =>
+      val meta = withFooter(spark, st)(_.getFileMetaData.getKeyValueMetaData)
+      Option(meta.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson).collect { case s: StructType => s }
+    }
+
+  /** Rows of the flat parquet table `dir`, summed from its data files'
+    * footers on the driver (0 when it has none). Throws when `dir` is
+    * absent, as a read would. */
+  def footerRows(spark: SparkSession, dir: String): Long = {
+    require(exists(spark, dir), s"no parquet table at $dir")
+    flatDataFiles(spark, dir).getOrElse(Seq.empty).map(st =>
+      withFooter(spark, st)(_.getBlocks.asScala.map(_.getRowCount).sum)).sum
+  }
+
+  /** Data files of `dir` in path order (names starting with `_` or `.`
+    * are not data, as in Spark's listing); None when `dir` is absent or
+    * holds a visible subdirectory. */
+  private def flatDataFiles(spark: SparkSession, dir: String): Option[Seq[FileStatus]] = {
+    val f = fs(spark, dir)
+    val p = new Path(dir)
+    if (!f.exists(p)) None
+    else {
+      val visible = f.listStatus(p).toSeq.filter { st =>
+        val name = st.getPath.getName
+        !name.startsWith("_") && !name.startsWith(".")
+      }
+      if (visible.exists(_.isDirectory)) None
+      else Some(visible.sortBy(_.getPath.toString))
+    }
+  }
+
+  private def withFooter[A](spark: SparkSession, st: FileStatus)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
+      st, spark.sparkContext.hadoopConfiguration))
+    try f(reader.getFooter) finally reader.close()
+  }
 
   /** Create a zero-byte marker file, parents included. The marker's
     * content is its existence; overwrite is fine (a re-touch of a

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.types.StructType
 
 /** The directory protocol every tombstone/marker/count stored index
   * shares — near-dup ([[Dedup]]), semantic and IVF-PQ ([[Similarity]])
@@ -30,11 +31,13 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * registry-persisted by the kernel. A family whose readers memoize a
   * frame over the live tables (the semantic chain order, the LM's merged
   * counts) must declare a whole-index release for every verb that can
-  * change what that frame reads. A family whose readers never memoize
-  * one (near-dup) may release only the paths a verb rewrote: a
-  * takedown then drops nothing but frames reading `deletes/`, and the
-  * screens' memoized batch-side frames, which read only frozen
-  * artifacts, stay warm.
+  * change what that frame reads. A family whose readers memoize nothing
+  * (near-dup: its screen and append leave no registry entry) may
+  * release only the paths a verb rewrote.
+  *
+  * Reads take their schema from the first data file's footer on the
+  * driver ([[IndexFs.footerSchema]]) unless the family pins one, so a
+  * live read plans no schema-inference job, tombstones included.
   *
   * Everything here is driver-side control plane except the tombstone
   * write; no verb adds a Spark job to what the family's own writes run.
@@ -66,14 +69,15 @@ private[graft] final class StoredIndex(
   }
 
   /** `df` with the takedown tombstones anti-joined out on the key. The
-    * tombstone table is request-sized and broadcasts; physical removal
-    * waits for [[compact]] or [[rebuild]].
+    * tombstone table is request-sized and broadcasts as it is: a
+    * left-anti join needs no distinct keys. Physical removal waits for
+    * [[compact]] or [[rebuild]].
     */
   def live(spark: SparkSession, dir: String, df: DataFrame): DataFrame = {
     val del = s"$dir/$Deletes"
     tombstones match {
       case Some(Tombstones(k, _)) if IndexFs.exists(spark, del) =>
-        df.join(broadcast(spark.read.parquet(del).distinct()), Seq(k), "left_anti")
+        df.join(broadcast(parquet(spark, del)), Seq(k), "left_anti")
       case _ => df
     }
   }
@@ -83,11 +87,12 @@ private[graft] final class StoredIndex(
     * infer from) — through [[live]]. */
   def read(spark: SparkSession, dir: String, table: String,
       schema: Option[String] = None): DataFrame =
-    live(spark, dir, schema.fold(spark.read)(spark.read.schema)
-      .parquet(s"$dir/$table"))
+    live(spark, dir, parquet(spark, s"$dir/$table", schema.map(StructType.fromDDL)))
 
-  /** Write the non-null, distinct keys of `ids` as one tombstone file.
-    * Set semantics make it replay-safe without a marker.
+  /** Write the non-null, distinct keys of `ids` as one tombstone file
+    * (`coalesce(1)` folds the write into the distinct's final stage, so
+    * the takedown runs one exchange). Set semantics make it replay-safe
+    * without a marker.
     */
   def tombstone(ids: DataFrame, dir: String): Unit = {
     val spark = ids.sparkSession
@@ -95,7 +100,7 @@ private[graft] final class StoredIndex(
       throw new UnsupportedOperationException("index has no tombstones"))
     open(spark, dir)
     ids.select(col(k)).filter(col(k).isNotNull).distinct()
-      .repartition(1).write.mode("append").parquet(s"$dir/$Deletes")
+      .coalesce(1).write.mode("append").parquet(s"$dir/$Deletes")
     release(spark, dir, scope, Seq(Deletes))
   }
 
@@ -197,6 +202,14 @@ private[graft] final class StoredIndex(
 private[graft] object StoredIndex {
   private val Deletes = "deletes"
   private val Commits = "_batch_commits"
+
+  /** The parquet table at `path`, read with `schema` when given, else
+    * with its footer's schema ([[IndexFs.footerSchema]]), and with plain
+    * inference only when it has neither. */
+  private[graft] def parquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.orElse(IndexFs.footerSchema(spark, path))
+      .fold(spark.read)(spark.read.schema).parquet(path)
 
   /** Which internal caches a verb releases: none, only those reading
     * the paths it changed, or every one reading the index. */
