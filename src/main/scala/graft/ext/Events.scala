@@ -598,46 +598,28 @@ object Events {
     healClosedPartitions(spark, closedDir)
     // The per-partition rewrites are independent (each reads and swaps
     // only its own batch=<n> directory; the shared tombstone read is
-    // immutable until the delete below), so they run from a small
-    // driver thread pool — Spark schedules concurrent jobs FIFO and the
-    // next rewrite's tasks back-fill the tail of the previous one
-    // (guide §2.6). Sequentially this was one tiny write job per
-    // partition, each paying full job latency; crash semantics are
-    // unchanged — every partition still goes through its own
-    // swapCompact, and a crash mid-pool leaves each partition either
-    // swapped or untouched (the no-live window is healed on next entry,
-    // same as the sequential fold).
+    // immutable until the delete below), so they run from the driver
+    // pool — Spark schedules concurrent jobs FIFO and the next
+    // rewrite's tasks back-fill the tail of the previous one (guide
+    // §2.6). Sequentially this was one tiny write job per partition,
+    // each paying full job latency; crash semantics are unchanged —
+    // every partition still goes through its own swapCompact, and a
+    // crash mid-pool leaves each partition either swapped or untouched
+    // (the no-live window is healed on next entry, same as the
+    // sequential fold). The pool awaits EVERY rewrite (bounded by
+    // SPARK_GRAFT_POOL_TIMEOUT_SEC) before rethrowing the first
+    // failure, so the verb never returns while a sibling still mutates
+    // closedDir; a timeout cancels the rewrites' jobs and leaves the
+    // same crash-consistent state as any other failure.
     val parts = IndexFs.listNames(spark, closedDir).filter(_.matches("batch=\\d+"))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(4, parts.size)))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val done = parts.map { p =>
-        scala.concurrent.Future {
-          val src = s"$closedDir/$p"
-          erasureFilter(spark.read.parquet(src), spark, closedDir)
-            .write.mode("overwrite").parquet(s"$src.compact")
-          IndexFs.readSmall(spark, s"$src/_graft_commit").foreach(fp =>
-            IndexFs.writeSmall(spark, s"$src.compact/_graft_commit", fp))
-          IndexFs.swapCompact(spark, src)
-        }
-      }
-      // Await EVERY future (bounded) before surfacing any failure: an
-      // eager rethrow on the first failed partition would exit while
-      // sibling rewrites are still mutating closedDir in the background
-      // (shutdown() does not cancel running tasks), racing a same-JVM
-      // retry or a subsequent readClosedSessions. The bound defends
-      // against a hung filesystem op pinning the verb forever; each
-      // partition either swapped or stayed untouched, so a timeout
-      // leaves the same crash-consistent state as any other failure.
-      val timeoutSec = sys.env.getOrElse(
-        "SPARK_GRAFT_ERASURE_TIMEOUT_SEC", "3600").toLong
-      val results = done.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration(timeoutSec,
-          java.util.concurrent.TimeUnit.SECONDS))))
-      results.collectFirst { case scala.util.Failure(e) => throw e }
-    } finally pool.shutdown()
+    graft.tools.DriverPool.awaitAll(parts.map { p => () =>
+      val src = s"$closedDir/$p"
+      erasureFilter(spark.read.parquet(src), spark, closedDir)
+        .write.mode("overwrite").parquet(s"$src.compact")
+      IndexFs.readSmall(spark, s"$src/_graft_commit").foreach(fp =>
+        IndexFs.writeSmall(spark, s"$src.compact/_graft_commit", fp))
+      IndexFs.swapCompact(spark, src)
+    })
     IndexFs.delete(spark, del)
   }
 }

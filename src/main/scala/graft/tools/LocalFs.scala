@@ -13,4 +13,26 @@ object LocalFs {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
   }
+
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val scratchPrev =
+    scala.collection.concurrent.TrieMap.empty[String, java.io.File]
+
+  /** A fresh, empty per-invocation root
+    * `graft_<tag>_<applicationId>_<seq>` under `java.io.tmpdir`. Repeat
+    * runs of a stateful entry must re-exercise the whole lifecycle, so
+    * each call gets a new root and the previous root of the same tag is
+    * deleted. The applicationId keeps a new JVM, whose sequence restarts
+    * at 1, from reusing an older JVM's root as leftover state; the
+    * defensive delete covers even an applicationId collision.
+    */
+  def scratchRoot(spark: org.apache.spark.sql.SparkSession,
+      tag: String): java.io.File = {
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_${spark.sparkContext.applicationId}_${scratchSeq.incrementAndGet()}")
+    scratchPrev.put(tag, root).foreach(deleteRecursively)
+    deleteRecursively(root)
+    root.mkdirs()
+    root
+  }
 }
