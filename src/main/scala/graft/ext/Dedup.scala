@@ -683,12 +683,11 @@ object Dedup {
     *
     * The hot list is FROZEN at build (the x90 stale-centroid analog:
     * boilerplate learned at ingest; [[compactNearDupIndex]] or a
-    * rebuild refreshes it). Unlike the gram index's semi-join set
-    * semantics, `shingles` duplicates are NOT harmless — the
-    * intersection COUNTS them — so appends must be disjoint batches
-    * (the natural ingest contract: append exactly the batch just
-    * screened and kept); an accidental double-append is repaired by
-    * [[compactNearDupIndex]].
+    * rebuild refreshes it). Appends are disjoint batches (the natural
+    * ingest contract: append exactly the batch just screened and kept).
+    * An accidental double append stores its rows twice: the screen
+    * counts each stored shingle once per candidate, so its verdicts do
+    * not move, and [[compactNearDupIndex]] drops the copies.
     */
   def writeNearDupIndex(existing: DataFrame, indexDir: String, n: Int = 3,
       maxShingleDf: Int = Int.MaxValue): Unit = {
@@ -746,7 +745,7 @@ object Dedup {
     */
   private[graft] val NearDupIndex = new StoredIndex(
     tables = Seq("shingles", "sizes", "hashes"),
-    tombstones = Some(StoredIndex.Tombstones("doc_id", StoredIndex.Changed)),
+    deletes = Some(StoredIndex.Tombstones("doc_id", StoredIndex.Changed)),
     compactRelease = StoredIndex.Changed,
     guard = requireNearDupFormat)
 
@@ -817,14 +816,14 @@ object Dedup {
   }
 
   /** [[appendNearDupIndex]] under an at-least-once delivery contract
-    * (the x114 streaming gate): near-dup appends are NOT replay-safe —
-    * duplicated shingle rows inflate intersection counts (the x104
-    * nuance) — so each append commits a per-batch marker
+    * (the x114 streaming gate): a replayed append would store every row
+    * again, growing the tables until the next compaction, so each
+    * append commits a per-batch marker
     * ([[StoredIndex.once]]) and a redelivered batch whose marker
     * exists is skipped outright. A crash between the data and the
-    * marker makes the redelivery double-append — the
-    * over-approximation [[compactNearDupIndex]]'s distinct-rewrite
-    * repairs, spec-gated. Marker I/O goes through [[IndexFs]] (the
+    * marker makes the redelivery double-append — screened as the single
+    * append, and dropped by [[compactNearDupIndex]]'s distinct-rewrite
+    * (crash-point enumerated in CrashPointSpec). Marker I/O goes through [[IndexFs]] (the
     * Hadoop API), so the exactly-once contract holds on whatever
     * filesystem `indexDir` names — hdfs/s3a index dirs included, not
     * just local disk. Returns whether the append ran.
@@ -894,8 +893,8 @@ object Dedup {
   }
 
   /** Offline maintenance for the near-dup index: distinct-rewrite
-    * `shingles` and `hashes` (repairing any accidental double-append —
-    * the duplicates that would inflate intersection counts), recompute
+    * `shingles` and `hashes` (dropping the rows an accidental double
+    * append stored twice), recompute
     * `sizes` from the compacted set, then swap each table tmp → old →
     * live ([[StoredIndex.compact]]). Every step leaves a complete copy
     * of each table on disk, and every lifecycle entry point heals a
@@ -945,9 +944,10 @@ object Dedup {
     * sharing a `doc_id` are screened as one document (their shingle sets
     * union); a null `doc_id` is never a near duplicate. The probe's
     * batch side broadcasts, so the index scan never shuffles; the
-    * per-(doc, candidate) intersection counts partially aggregate
-    * before the one exchange, and the best match per doc rides the heap
-    * operator, sort-free. Registers no internal cache.
+    * per-(doc, candidate) intersection counts each stored shingle once,
+    * so a double append neither divides by zero nor scores above 1, and
+    * the best match per doc rides the heap operator, sort-free.
+    * Registers no internal cache.
     */
   def screenAgainstNearDupIndex(incoming: DataFrame, indexDir: String,
       n: Int = 3, minJaccard: Double = 0.8): DataFrame = {
@@ -996,7 +996,7 @@ object Dedup {
             docId, StructField("n_in", LongType, nullable = false))))
         val scored = exSh.join(broadcast(inSh), Seq("sh"))
           .groupBy(col("doc_id"), col("ex_doc"), col("n_in"))
-          .agg(count(lit(1)).as("inter"))
+          .agg(size(collect_set(col("sh"))).as("inter"))
           .join(NearDupIndex.read(spark, indexDir, "sizes")
             .withColumnRenamed("doc_id", "ex_doc"), Seq("ex_doc"))
           .select(col("doc_id"), col("ex_doc"),
@@ -1399,16 +1399,14 @@ object Dedup {
     new org.apache.hadoop.fs.Path(indexDir, "_gram_bloom")
 
   private def writeBloomSidecar(spark: SparkSession, indexDir: String,
-      sc: GramSidecar): Unit = {
-    val p = bloomSidecarPath(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = new java.io.DataOutputStream(fs.create(p, true))
-    try {
+      sc: GramSidecar): Unit =
+    IndexFs.write(spark, bloomSidecarPath(indexDir).toString) { o =>
+      val out = new java.io.DataOutputStream(o)
       out.writeInt(sc.buckets); out.writeLong(sc.items)
       out.writeLong(sc.numBits); out.writeLong(sc.stamp)
       sc.bf.writeTo(out)
-    } finally out.close()
-  }
+      out.flush()
+    }
 
   private[graft] def readBloomSidecar(
       spark: SparkSession, indexDir: String): GramSidecar = {
@@ -1480,27 +1478,6 @@ object Dedup {
   def invalidateSidecarCache(indexDir: String): Unit =
     sidecarCache.keys.filter(_._2 == indexDir).foreach(sidecarCache.remove)
 
-  /** Count data files under `dir` (recursive, `_`/`.`-prefixed metadata
-    * excluded) — the compaction trigger's observable. One FS listing,
-    * the same order of work the parquet write just paid to commit.
-    */
-  private[graft] def countDataFiles(spark: SparkSession, dir: String): Long = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else {
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
-      }
-      n
-    }
-  }
-
   /** Target distinct grams per bucket for [[autoBucketCount]],
     * calibrated by measurement, not convention (HEADROOM "x103
     * amortized"): at the sf0.1 gate corpus (224,694 distinct 8-grams)
@@ -1549,13 +1526,21 @@ object Dedup {
       fpp: Double = 0.01): Unit = {
     require(buckets >= 0, s"buckets must be positive (0 = auto), got $buckets")
     require(fpp > 0 && fpp < 1, s"fpp in (0,1), got $fpp")
-    val spark = docs.sparkSession
-    val g = graft.tools.InternalCaches.persist(
-      gramStream(docs, k).select("g").distinct())
-    // the count materializes the cached gram set unconditionally: the
-    // pooled Bloom build and bucketed write below both read it, and
-    // without a prior action each would compute the distinct itself.
-    // `expectedItems`, when given, only sizes the filter and buckets.
+    val g = gramStream(docs, k).select("g").distinct().persist()
+    try writeGrams(g, indexDir, buckets, expectedItems, fpp)
+    finally g.unpersist(blocking = false)
+  }
+
+  /** The bucketed write of the distinct gram set `g` (persisted by the
+    * caller, released after) and its Bloom sidecar into `dir`. The count
+    * materializes `g` unconditionally: the pooled Bloom build and the
+    * bucketed write both read it, and without a prior action each would
+    * compute the distinct itself. `expectedItems`, when given, only
+    * sizes the filter and buckets.
+    */
+  private def writeGrams(g: DataFrame, dir: String, buckets: Int,
+      expectedItems: Option[Long], fpp: Double): Unit = {
+    val spark = g.sparkSession
     val distinctGrams = g.count()
     val items = math.max(expectedItems.getOrElse(distinctGrams), 64L)
     val nBuckets = if (buckets > 0) buckets else autoBucketCount(items)
@@ -1567,26 +1552,41 @@ object Dedup {
     @volatile var bfSlot: BloomFilter = null
     graft.tools.DriverPool.awaitAll(Seq(
       () => { bfSlot = buildBloomOfLongs(g, "g", items, numBits) },
-      () => g.withColumn("bucket", pmod(col("g"), lit(nBuckets.toLong)).cast("int"))
-        // ONE file per bucket per write: without the bucket repartition
-        // every writer task opens every bucket directory (tasks x
-        // buckets tiny files — measured 10x screen-cost overhead from
-        // file listing alone at the probe scales)
-        .transform(IndexFs.keyPartitioned(_, col("bucket"), nBuckets.toLong))
-        .write.partitionBy("bucket").mode("overwrite").parquet(indexDir)))
-    val bf = bfSlot
-    val sc = GramSidecar(nBuckets, items, numBits, System.nanoTime(), bf)
-    writeBloomSidecar(spark, indexDir, sc)
+      () => bucketed(g, nBuckets).write.partitionBy("bucket").mode("overwrite").parquet(dir)))
+    val sc = GramSidecar(nBuckets, items, numBits, System.nanoTime(), bfSlot)
+    writeBloomSidecar(spark, dir, sc)
     // seed the driver cache with the state just written: the first
     // screen/append after a build pays no sidecar re-read
-    sidecarCache.put((spark.sparkContext.applicationId, indexDir), sc)
+    sidecarCache.put((spark.sparkContext.applicationId, dir), sc)
   }
+
+  /** Grams with their `bucket`, ONE writer per bucket: without the bucket
+    * repartition every writer task opens every bucket directory (tasks x
+    * buckets tiny files — measured 10x screen-cost overhead from file
+    * listing alone at the probe scales). */
+  private def bucketed(g: DataFrame, buckets: Int): DataFrame =
+    g.withColumn("bucket", pmod(col("g"), lit(buckets.toLong)).cast("int"))
+      .transform(IndexFs.keyPartitioned(_, col("bucket"), buckets.toLong))
+
+  /** The gram store's [[StoredIndex]] declaration: the bucketed index
+    * directory is itself the data table (and the file-count gauge, the
+    * pending ledger's files included), deletes are the pending `doc_id`
+    * ledger, and every maintenance verb is a whole-directory rebuild —
+    * compaction carries the ledger, a takedown or drain applies and
+    * clears it. Gram readers memoize nothing, so no verb but the
+    * rebuild releases a cache.
+    */
+  private[graft] val GramIndex = new StoredIndex(
+    tables = Nil,
+    deletes = Some(StoredIndex.Ledger("doc_id")),
+    compactRelease = StoredIndex.Keep)
 
   /** Append a batch's grams into the bucketed index: new files inside
     * the bucket directories (duplicates across files are harmless to
     * the screen's set semantics, and [[compactGramIndex]] reaps them)
     * plus a Bloom update in the sidecar. Cost = one batch scan +
-    * batch-sized distinct — independent of index size.
+    * batch-sized distinct — independent of index size. The batch's gram
+    * set is persisted for the call only and leaves no internal cache.
     *
     * Bloom update, size-switched (round 13 — the round-12 form built a
     * fresh INDEX-sized filter per append across EVERY shuffle
@@ -1628,9 +1628,9 @@ object Dedup {
       cacheSidecar: Boolean = true, maxFilesPerBucket: Int = 64,
       corpusForDrain: Option[DataFrame] = None): Unit = {
     val spark = newDocs.sparkSession
-    // heal a crashed compaction swap BEFORE appending (an append into a
-    // missing live dir would fork the index away from the .compact copy)
-    IndexFs.recoverSwap(spark, indexDir)
+    // heal a crashed swap BEFORE appending (an append into a missing
+    // live dir would fork the index away from the .compact copy)
+    GramIndex.open(spark, indexDir)
     val sc0 = cachedSidecar(spark, indexDir, cacheSidecar)
     val (buckets, items, numBits, bf) = (sc0.buckets, sc0.items, sc0.numBits, sc0.bf)
     // tombstones-win until the drain: a doc_id with a pending takedown
@@ -1639,75 +1639,58 @@ object Dedup {
     // nothing extra to remove (grams it shares with live docs still
     // arrive through them; set semantics). Re-admission is
     // append-after-drain, the same contract as every tombstoned grain.
-    val pend0 = pendingDeletesPath(indexDir)
-    val liveDocs =
-      if (IndexFs.exists(spark, pend0))
-        newDocs.join(broadcast(spark.read.parquet(pend0).distinct()),
-          Seq("doc_id"), "left_anti")
-      else newDocs
-    val g = graft.tools.InternalCaches.persist(
-      gramStream(liveDocs, k).select("g").distinct())
-    if (cacheSidecar && numBits / 8 > (64L << 20)) {
-      val it = g.select(col("g"))
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .toLocalIterator()
-      while (it.hasNext) bf.putLong(it.next())
-    } else {
-      // identical sizing → numHashFunctions match → mergeInPlace is
-      // legal; coalesce(1) so exactly one index-sized array allocates
-      val batchBf = buildBloomOfLongs(g.coalesce(1), "g", items, numBits)
-      bf.mergeInPlace(batchBf)
-    }
-    // sidecar FIRST: a crash between the two writes must leave the
-    // Bloom an OVER-approximation of the stored grams (extra bits die
-    // in the exact confirm join). The reverse order would leave
-    // appended grams missing from the Bloom — the gate would silently
-    // drop their true matches, an exactness break, not a slowdown.
-    val sc1 = sc0.copy(stamp = System.nanoTime())
-    writeBloomSidecar(spark, indexDir, sc1)
-    // re-stamp the cached entry to match the file just written (same
-    // mutated filter object — only the validity probe moves)
-    if (cacheSidecar)
-      sidecarCache.put((spark.sparkContext.applicationId, indexDir), sc1)
-    g.withColumn("bucket", pmod(col("g"), lit(buckets.toLong)).cast("int"))
-      // ONE file per bucket per write: without the bucket repartition
-      // every writer task opens every bucket directory (tasks x
-      // buckets tiny files — measured 10x screen-cost overhead from
-      // file listing alone at the probe scales)
-      .transform(IndexFs.keyPartitioned(_, col("bucket"), buckets.toLong))
-      .write.partitionBy("bucket").mode("append").parquet(indexDir)
-    if (maxFilesPerBucket > 0 &&
-        countDataFiles(spark, indexDir) > maxFilesPerBucket.toLong * buckets) {
-      // the maintenance slot the file-count trigger already schedules:
-      // when takedown requests pend AND the caller wired the corpus
-      // hand-back (`corpusForDrain` — the FULL live corpus as of this
-      // batch, this batch included; the drain filters the ledger out
-      // itself), drain them here — one filtered rebuild serves as both
-      // the compaction (it IS a distinct rewrite) and the amortized
-      // takedown, so a streaming deployment's removal lag is bounded by
-      // the compaction cadence with no extra scheduling. Without the
-      // hand-back (or with an empty ledger) the plain compaction runs
-      // and CARRIES the ledger, as before.
-      // gate on pending ROWS, not ledger-directory existence: a
-      // zero-row request (or an emptied post-drain ledger dir) must not
-      // route the trigger to the corpus-sized takedown rebuild when the
-      // cheap index-only compaction suffices — one tiny count
-      val wantDrain = corpusForDrain.isDefined &&
-        !pendingGramTakedowns(spark, indexDir).isEmpty
-      if (wantDrain) takedownGramIndex(corpusForDrain.get, indexDir, k)
+    val g = gramStream(GramIndex.live(spark, indexDir, newDocs), k)
+      .select("g").distinct().persist()
+    try {
+      if (cacheSidecar && numBits / 8 > (64L << 20)) {
+        val it = g.select(col("g"))
+          .as[Long](org.apache.spark.sql.Encoders.scalaLong)
+          .toLocalIterator()
+        while (it.hasNext) bf.putLong(it.next())
+      } else {
+        // identical sizing → numHashFunctions match → mergeInPlace is
+        // legal; coalesce(1) so exactly one index-sized array allocates
+        val batchBf = buildBloomOfLongs(g.coalesce(1), "g", items, numBits)
+        bf.mergeInPlace(batchBf)
+      }
+      // sidecar FIRST: a crash between the two writes must leave the
+      // Bloom an OVER-approximation of the stored grams (extra bits die
+      // in the exact confirm join). The reverse order would leave
+      // appended grams missing from the Bloom — the gate would silently
+      // drop their true matches, an exactness break, not a slowdown.
+      val sc1 = sc0.copy(stamp = System.nanoTime())
+      writeBloomSidecar(spark, indexDir, sc1)
+      // re-stamp the cached entry to match the file just written (same
+      // mutated filter object — only the validity probe moves)
+      if (cacheSidecar)
+        sidecarCache.put((spark.sparkContext.applicationId, indexDir), sc1)
+      bucketed(g, buckets).write.partitionBy("bucket").mode("append").parquet(indexDir)
+    } finally g.unpersist(blocking = false)
+    // the maintenance slot the file-count trigger already schedules:
+    // when takedown requests pend (footer row counts, no job) AND the
+    // caller wired the corpus hand-back (`corpusForDrain` — the FULL
+    // live corpus as of this batch, this batch included; the drain
+    // filters the ledger out itself), drain them here — one filtered
+    // rebuild serves as both the compaction (it IS a distinct rewrite)
+    // and the amortized takedown. Without the hand-back (or with an
+    // empty ledger) the plain compaction runs and CARRIES the ledger.
+    GramIndex.compactIfOver(spark, indexDir, maxFilesPerBucket, buckets) {
+      if (corpusForDrain.isDefined && GramIndex.pending(spark, indexDir) > 0)
+        takedownGramIndex(corpusForDrain.get, indexDir, k)
       else compactGramIndex(spark, indexDir)
     }
   }
 
   /** Offline maintenance: rewrite every bucket to its distinct gram
     * set (drop the cross-batch duplicate rows appends accumulate) and
-    * re-size the Bloom to the measured cardinality. Both read actions
-    * (the compacted write and the Bloom rebuild) complete BEFORE any
-    * directory mutation; the swap then keeps a complete copy on disk
-    * at every step (tmp → old → live). The one step with no LIVE
-    * directory (between the two renames) is detected and completed by
-    * [[IndexFs.recoverSwap]], run first here and by every screen/append
-    * entry — a crash at any point is healed by the next touch.
+    * re-size the Bloom to the measured cardinality, as one
+    * whole-directory rebuild ([[StoredIndex.rebuild]]): both read
+    * actions (the compacted write and the Bloom rebuild) complete into
+    * `<indexDir>.compact` BEFORE any live directory mutation, the
+    * pending ledger is carried (a compaction is a distinct-rewrite, not
+    * a drain — it has no corpus to rebuild from), and the swap keeps a
+    * complete copy on disk at every step; every screen/append entry
+    * heals a crash between its renames.
     *
     * `buckets` = 0 (default, round 14) RE-DERIVES the bucket count from
     * the measured cardinality ([[autoBucketCount]]) — the compaction
@@ -1722,64 +1705,14 @@ object Dedup {
     * the scheme.
     */
   def compactGramIndex(spark: SparkSession, indexDir: String,
-      fpp: Double = 0.01, buckets: Int = 0): Unit = {
-    IndexFs.recoverSwap(spark, indexDir)
-    // NOT the memoized registry: this frame reads the very directory
-    // the swap below replaces — a registry entry keyed on its plan
-    // would hand a later caller a cached plan over deleted files. A
-    // local persist scoped to this call, released before return.
-    val g = gramTable(spark, indexDir).select("g").distinct().persist()
-    val items = math.max(g.count(), 64L)
-    val nBuckets = if (buckets > 0) buckets else autoBucketCount(items)
-    val numBits = BloomFilter.optimalNumOfBits(items, fpp)
-    val tmp = indexDir + ".compact"
-    // Bloom rebuild and compacted write share only the cached gram set
-    // (materialized by the count above) — overlap them (guide §2.6);
-    // the sidecar writes after both, before any directory mutation
-    @volatile var bfSlot: BloomFilter = null
-    graft.tools.DriverPool.awaitAll(Seq(
-      () => { bfSlot = buildBloomOfLongs(g, "g", items, numBits) },
-      () => g.withColumn("bucket", pmod(col("g"), lit(nBuckets.toLong)).cast("int"))
-        // ONE file per bucket per write: without the bucket repartition
-        // every writer task opens every bucket directory (tasks x
-        // buckets tiny files — measured 10x screen-cost overhead from
-        // file listing alone at the probe scales)
-        .transform(IndexFs.keyPartitioned(_, col("bucket"), nBuckets.toLong))
-        .write.partitionBy("bucket").mode("overwrite").parquet(tmp)))
-    val bf = bfSlot
-    val sc = GramSidecar(nBuckets, items, numBits, System.nanoTime(), bf)
-    writeBloomSidecar(spark, tmp, sc)
-    // CARRY the pending-takedown ledger across the swap: a compaction
-    // is a distinct-rewrite, NOT a drain (it has no corpus to rebuild
-    // from) — sweeping the ledger with the old directory would silently
-    // forget takedown requests. COPY, not move: a crash between a move
-    // and the swap would strand the only ledger copy in a tmp dir the
-    // retry rewrites wholesale ([[IndexFs.copyDir]] has the full
-    // argument); the live original is demoted WITH the old dir only
-    // when the promoted copy is already in place. The snapshot of
-    // carried names feeds the swap's RESCUE pass below: a request
-    // landing AFTER this copy (the round-17 advisory's race — the
-    // request verb is the one a streaming deployment runs concurrently
-    // with maintenance) is re-carried out of the demoted dir instead
-    // of being deleted with it.
-    val carried = IndexFs.listNames(spark, pendingDeletesPath(indexDir)).toSet
-    IndexFs.copyDir(spark, pendingDeletesPath(indexDir),
-      pendingDeletesPath(tmp))
-    afterLedgerSnapshotHook()
-    // swap + rescue: every step leaves a complete index on disk
-    // somewhere, and late ledger arrivals survive the .old delete
-    IndexFs.swapCompactRescue(spark, indexDir, "_pending_deletes", carried)
-    // the compacted frame replaced the files its cached plan reads —
-    // drop the cache so later actions re-read the live directory
-    g.unpersist(blocking = false)
-    // re-sizing replaced the sidecar wholesale: re-seed the driver
-    // cache with the compacted state (stale items/numBits would make
-    // the next append's merge sizing wrong; a re-bucket with a stale
-    // count would route every appended gram to the wrong directory —
-    // and the fresh stamp is what lets OTHER processes' caches catch
-    // this re-bucket at their next touch)
-    sidecarCache.put((spark.sparkContext.applicationId, indexDir), sc)
-  }
+      fpp: Double = 0.01, buckets: Int = 0): Unit =
+    rebuildGrams(spark, indexDir, drain = false) { tmp =>
+      // a local persist scoped to this call, NOT the memoized registry:
+      // the frame reads the very directory the swap replaces
+      val g = gramTable(spark, indexDir).select("g").distinct().persist()
+      try writeGrams(g, tmp, buckets, None, fpp)
+      finally g.unpersist(blocking = false)
+    }
 
   /** Takedown at the substring grain — the right-to-be-forgotten verb
     * for the gram index, which by design DEGENERATES to the filtered
@@ -1788,71 +1721,37 @@ object Dedup {
     * X's" nor "is this gram still carried by a live document" is
     * answerable from the stored artifacts. The caller hands back the
     * REMAINING corpus (the x117 hand-back contract), the index
-    * rebuilds over it into `.compact`, and swaps in as one unit
-    * through the tmp → old → live discipline — a bare
-    * [[writeGramIndexBucketed]] overwrite of the live path would
-    * leave a torn index on a crash mid-write, which a takedown verb
-    * must not. Unlike the provenance-carrying grains
-    * ([[deleteFromNearDupIndex]], semantic/IVF-PQ tombstones) there
-    * is no O(|request|) merge-on-read path here — the delete costs a
-    * build, the documented trade for the gram index's byte budget.
-    * The x133 gate's `deleted` and `compacted` phases share one
-    * oracle block: the rebuild IS durable removal, and a later
-    * [[compactGramIndex]] is a distinct-rewrite of already-filtered
-    * grams.
+    * rebuilds over it minus every pending ledger request, and swaps in
+    * as one unit ([[StoredIndex.rebuild]] in its draining form: the
+    * requests it applied leave the ledger after the swap; one that
+    * lands during the build stays pending). Unlike the
+    * provenance-carrying grains ([[deleteFromNearDupIndex]],
+    * semantic/IVF-PQ tombstones) there is no O(|request|) merge-on-read
+    * path here — the delete costs a build, the documented trade for the
+    * gram index's byte budget. The x133 gate's `deleted` and
+    * `compacted` phases share one oracle block: the rebuild IS durable
+    * removal, and a later [[compactGramIndex]] is a distinct-rewrite of
+    * already-filtered grams.
     */
   def takedownGramIndex(remaining: DataFrame, indexDir: String, k: Int = 8,
       buckets: Int = 0): Unit = {
     val spark = remaining.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    // any PENDING ledger requests ([[requestGramTakedown]]) are applied
-    // by this rebuild too — the handed-back corpus is filtered against
-    // them, and the swap sweeps the ledger away with the old directory
-    // (applied and cleared in the same atomic step; a crash before the
-    // swap leaves the ledger in the live dir for the retry). The
-    // applied set is pinned BY FILE NAME: the rebuild reads exactly the
-    // files listed here, so a request landing during the build window
-    // is definitionally un-applied and the swap's rescue pass re-carries
-    // it into the fresh index's ledger instead of deleting it with
-    // `.old` (the round-17 advisory's lost-request race).
-    val pend = pendingDeletesPath(indexDir)
-    val appliedNames = IndexFs.listNames(spark, pend).toSet
-    val appliedData = appliedNames.toSeq.sorted
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-      .map(n => s"$pend/$n")
-    afterLedgerSnapshotHook()
-    val rem =
-      if (appliedData.nonEmpty)
-        remaining.join(broadcast(
-          spark.read.parquet(appliedData: _*).distinct()),
-          Seq("doc_id"), "left_anti")
-      else remaining
-    val tmp = indexDir + ".compact"
-    IndexFs.delete(spark, tmp)
-    writeGramIndexBucketed(rem, tmp, k, buckets)
-    IndexFs.swapCompactRescue(spark, indexDir, "_pending_deletes",
-      appliedNames)
-    // the build seeded the sidecar cache under the TMP path — drop it —
-    // and the live path's cached entry now describes the replaced
-    // index (the per-call stamp probe would also catch that one, but
-    // an explicit release is free); memoized screens reading the old
-    // directory are the rebuild staleness class.
-    invalidateSidecarCache(tmp)
-    invalidateSidecarCache(indexDir)
-    graft.tools.InternalCaches.releaseByPath(spark, indexDir)
+    rebuildGrams(spark, indexDir, drain = true)(tmp => writeGramIndexBucketed(
+      GramIndex.live(spark, indexDir, remaining), tmp, k, buckets))
   }
 
-  private def pendingDeletesPath(indexDir: String) =
-    s"$indexDir/_pending_deletes"
-
-  /** TEST SEAM, production never sets it: invoked between a maintenance
-    * verb's ledger snapshot and its swap, so GramLedgerSpec can land a
-    * [[requestGramTakedown]] deterministically INSIDE the window the
-    * swap's rescue pass exists to close — the race is staged, not
-    * simulated with sleeps. A var (not a parameter) keeps the public
-    * verb signatures honest.
-    */
-  private[graft] var afterLedgerSnapshotHook: () => Unit = () => ()
+  /** [[StoredIndex.rebuild]] for the gram store: the build seeded the
+    * sidecar cache under the tmp path, which the swap renames to
+    * `indexDir`, so the entry moves with it (its stamp matches the live
+    * sidecar only once the swap is done). */
+  private def rebuildGrams(spark: SparkSession, indexDir: String, drain: Boolean)(
+      write: String => Unit): Unit = {
+    val app = spark.sparkContext.applicationId
+    GramIndex.rebuild(spark, indexDir, drain) { tmp =>
+      write(tmp)
+      sidecarCache.remove((app, tmp)).foreach(sc => sidecarCache.put((app, indexDir), sc))
+    }
+  }
 
   /** Schema-pinned read of the bucketed gram table. A takedown/drain of
     * the ENTIRE remaining corpus is a legal request and leaves an index
@@ -1872,13 +1771,12 @@ object Dedup {
     * — no provenance at O(1) bytes/gram), so a STREAM of requests at
     * 100 TB would cost an index-sized build each; this ledger amortizes
     * them to the maintenance cadence the round-16 verdict prescribed.
-    * Requested doc_ids land in `_pending_deletes` beside the sidecar
-    * (underscore-prefixed: invisible to every parquet read of the
-    * index; tiny — one file per request batch, set semantics make
-    * replays harmless), and ONE filtered rebuild applies the whole
-    * accumulated set ([[drainGramTakedowns]], or any
-    * [[takedownGramIndex]] call, whose swap clears the ledger
-    * atomically with applying it).
+    * Requested doc_ids land in the store's pending ledger
+    * ([[StoredIndex.tombstone]]: underscore-prefixed, invisible to every
+    * parquet read of the index; one file per request batch, set
+    * semantics make replays harmless), and ONE filtered rebuild applies
+    * the whole accumulated set ([[drainGramTakedowns]], or any
+    * [[takedownGramIndex]] call, which clears what it applied).
     *
     * DOCUMENTED CONTRACT — removal is effective at the DRAIN, not at
     * the request: the stored grams cannot be filtered at read time
@@ -1893,37 +1791,29 @@ object Dedup {
     * like every rebuild-class verb.
     *
     * Crash safety: the ledger is parquet-append + set semantics
-    * (replay-safe); [[compactGramIndex]] CARRIES it across its swap
-    * (compaction is a distinct-rewrite, not a drain — it has no corpus
-    * to rebuild from); the drain's swap clears it in the same rename
-    * that publishes the filtered index, so a crash anywhere leaves
-    * either [ledger intact + old index] or [ledger gone + filtered
-    * index] — never a lost request, never a half-applied state.
+    * (replay-safe); [[compactGramIndex]] CARRIES it across its swap,
+    * and a drain clears the requests it applied only after the filtered
+    * index is live, so a crash anywhere leaves every request either
+    * pending or applied — never lost. A crash between the drain's swap
+    * and its clear leaves applied requests pending; the re-run drain
+    * applies them again (a no-op) and clears them.
     *
     * Concurrency: unlike the rebuild-class verbs, THIS verb is the
     * streaming request-side enqueue, so it is allowed to race
     * maintenance — a request file landing after a drain/compaction's
-    * ledger snapshot is definitionally un-applied, and the swap's
-    * rescue pass ([[IndexFs.swapCompactRescue]]) re-carries it into the
-    * promoted directory instead of deleting it with `.old`
-    * (spec-staged through the deterministic race seam). Maintenance
-    * verbs themselves remain single-writer among each other.
+    * carry is rescued by the swap ([[IndexFs.swap]]) into the promoted
+    * directory instead of being deleted with `.old` (spec-staged
+    * through the mutation seam).
     */
-  def requestGramTakedown(docIds: DataFrame, indexDir: String): Unit = {
-    val spark = docIds.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    docIds.select(col("doc_id")).filter(col("doc_id").isNotNull).distinct()
-      .repartition(1).write.mode("append")
-      .parquet(pendingDeletesPath(indexDir))
-  }
+  def requestGramTakedown(docIds: DataFrame, indexDir: String): Unit =
+    GramIndex.tombstone(docIds, indexDir)
 
   /** The accumulated [[requestGramTakedown]] set (distinct doc_ids;
     * empty frame when no requests are pending). */
   def pendingGramTakedowns(spark: SparkSession, indexDir: String): DataFrame = {
-    IndexFs.recoverSwap(spark, indexDir)
-    val p = pendingDeletesPath(indexDir)
-    if (IndexFs.exists(spark, p)) spark.read.parquet(p).distinct()
-    else spark.range(0).select(col("id").as("doc_id"))
+    GramIndex.open(spark, indexDir)
+    GramIndex.requests(spark, indexDir)
+      .fold(spark.range(0).select(col("id").as("doc_id")))(_.distinct())
   }
 
   /** Apply every pending takedown request in ONE filtered rebuild —
@@ -1933,59 +1823,47 @@ object Dedup {
     * applied here, so batched-drain ≡ the sequential per-request
     * rebuilds it replaces, spec-gated in GramLedgerSpec and hash-gated
     * by x142's `drained` phase). Returns whether a drain ran (false =
-    * no pending requests; the index is untouched).
+    * no pending request rows, counted from the ledger's footers without
+    * a Spark job; the index is untouched).
     */
   def drainGramTakedowns(corpus: DataFrame, indexDir: String, k: Int = 8,
-      buckets: Int = 0): Boolean = {
-    val spark = corpus.sparkSession
-    IndexFs.recoverSwap(spark, indexDir)
-    // pending ROWS, not directory existence: a zero-row ledger (an
-    // empty request, or a dir left by a prior drain's rescue pass)
-    // must not bill the index-sized rebuild for applying nothing
-    if (pendingGramTakedowns(spark, indexDir).isEmpty) false
-    else {
+      buckets: Int = 0): Boolean =
+    GramIndex.pending(corpus.sparkSession, indexDir) > 0 && {
       takedownGramIndex(corpus, indexDir, k, buckets)
       true
     }
-  }
 
   /** x95 screen — [[duplicateSpansAgainstIndex]] semantics (same
     * output contract, same oracle) with the scan term decoupled from
     * index size: batch grams pre-gate through the sidecar Bloom
-    * map-side, candidate buckets are collected (≤ `buckets` ints by
-    * construction — control-plane), and the exact confirm semi-joins
-    * only those bucket directories via a literal partition filter
-    * (plan-gated in DedupSimilaritySpec).
+    * map-side, the surviving candidate grams come back to the driver
+    * (batch-sized), and the exact confirm semi-joins only the bucket
+    * directories they hash into via a literal partition filter
+    * (plan-gated in DedupSimilaritySpec). The candidates are the call's
+    * one action; the returned spans stay lazy and leave no internal
+    * cache behind.
     */
   def duplicateSpansAgainstIndexBloom(batch: DataFrame, indexDir: String,
       k: Int = 8, maxLiteralBytes: Long = 4L << 20,
       cacheSidecar: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
-    // a reader after a mid-swap compactor crash self-heals (one rename)
-    IndexFs.recoverSwap(spark, indexDir)
+    import spark.implicits._
+    // a reader after a crashed swap self-heals (one rename)
+    GramIndex.open(spark, indexDir)
     val sc = cachedSidecar(spark, indexDir, cacheSidecar)
-    val (buckets, numBits, bf) = (sc.buckets, sc.numBits, sc.bf)
-    val grams = graft.tools.InternalCaches.persist(gramStream(batch, k))
+    val grams = gramStream(batch, k)
     // cached path: ship the filter as a broadcast variable (once per
     // executor per call) instead of a plan literal (once per TASK —
     // the round-12 streaming replay re-broadcast multi-MB task
-    // binaries on every micro-batch job). A later append mutates the
-    // cached filter only by ADDING bits, so a still-lazy frame that
-    // observes post-append state over-approximates and the extra
-    // candidates die in the exact confirm join — never an exactness
-    // break.
-    val gate = bloomGateColumn(spark, bf, numBits,
+    // binaries on every micro-batch job)
+    val gate = bloomGateColumn(spark, sc.bf, sc.numBits,
       if (cacheSidecar) 0L else maxLiteralBytes, col("g"))
-    val cand = graft.tools.InternalCaches.persist(
-      grams.filter(gate).select("g").distinct())
-    val hot = cand
-      .select(pmod(col("g"), lit(buckets.toLong)).cast("int").as("bucket"))
-      .distinct()
-      .as[Int](org.apache.spark.sql.Encoders.scalaInt).collect()
+    val cand = grams.filter(gate).select("g").distinct().as[Long].collect()
+    val hot = cand.map(g => java.lang.Math.floorMod(g, sc.buckets.toLong).toInt).distinct
     val idx = gramTable(spark, indexDir)
       .filter(col("bucket").isin(hot.map(Int.box).toSeq: _*))
       .select("g")
-    val confirmed = cand.join(idx, Seq("g"), "left_semi")
+    val confirmed = cand.toSeq.toDF("g").join(idx, Seq("g"), "left_semi")
     val hits = grams.join(confirmed, Seq("g"), "left_semi")
       .select("doc_id", "pos")
     mergeSpans(hits, k)

@@ -334,19 +334,19 @@ object Events {
     * Returns the closed sessions this batch produced.
     *
     * Swap discipline (through the Hadoop [[IndexFs]] API, so the same
-    * protocol runs against `file:`/`hdfs:`/`s3a:` state dirs — this
-    * was the last local-only lifecycle after round 14 ported the index
-    * markers): Spark cannot overwrite a table it is reading,
-    * so the run commits in rename steps that each leave a recoverable
-    * picture — write `stateDir`.next, append the closed batch, rename
-    * the old state ASIDE (`.old`), promote `.next`, drop `.old`. On
-    * startup: a present `stateDir` is the truth (stale `.next`/`.old`
-    * are discarded — a crash before promotion means the batch either
-    * didn't commit its closed output or committed it and will re-emit
-    * on retry); an ABSENT `stateDir` with a `.next` means the crash
-    * hit between the aside-rename and the promotion, after the closed
-    * batch committed — `.next` is the post-batch state and is
-    * promoted. Net contract: state is never half-written and never
+    * protocol runs against `file:`/`hdfs:`/`s3a:` state dirs): Spark
+    * cannot overwrite a table it is reading, so the run commits in
+    * steps that each leave a recoverable picture — commit the closed
+    * partition, write `stateDir`.next, then swap it in
+    * ([[IndexFs.swap]]: the old state aside as `.old`, `.next`
+    * promoted, `.old` dropped). On startup: a present `stateDir` is the
+    * truth (a stale `.next` is overwritten by the next write, a stale
+    * `.old` dropped by the next swap); an ABSENT `stateDir` with a
+    * `.next` means the crash hit inside the swap, and since `.next` is
+    * written only after the closed partition committed, it is the
+    * post-batch state and is promoted ([[IndexFs.recover]]) — also at
+    * the very first batch, where there is no old state to set aside.
+    * Net contract: state is never half-written and never
     * silently reset; each call commits one `batch=<n>` provenance
     * partition (n = max existing + 1, so archived/deleted old
     * partitions never collide). The returned frame reads the
@@ -377,16 +377,9 @@ object Events {
       gapMinutes: Int = 30): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val (next, old) = (stateDir + ".next", stateDir + ".old")
     // crash recovery (see Scaladoc): present state wins; absent state
     // promotes a committed .next
-    if (IndexFs.exists(spark, stateDir)) {
-      IndexFs.delete(spark, next); IndexFs.delete(spark, old)
-    } else if (IndexFs.exists(spark, next)) {
-      IndexFs.delete(spark, old)
-      IndexFs.renameOrFail(spark, next, stateDir,
-        "sessionizeIncrementalStored: recovery promotion")
-    }
+    healState(spark, stateDir)
     val state =
       if (IndexFs.exists(spark, stateDir)) spark.read.parquet(stateDir)
       else Seq.empty[(Long, Long, Long, Long)]
@@ -442,8 +435,6 @@ object Events {
       val out = sessionizeIncrementalUnguarded(batch, state, gapMinutes).persist()
       try {
         val cols = Seq("user_id", "session_start_us", "session_end_us", "n_events")
-        out.filter(col("is_open")).select(cols.map(col): _*)
-          .write.mode("overwrite").parquet(next)
         val closedTmp = s"$closedDir/.batch=$batchId.tmp"
         val closedFin = s"$closedDir/batch=$batchId"
         out.filter(!col("is_open")).select(cols.map(col): _*)
@@ -451,16 +442,27 @@ object Events {
         IndexFs.writeSmall(spark, s"$closedTmp/_graft_commit", fp)
         IndexFs.renameOrFail(spark, closedTmp, closedFin,
           "sessionizeIncrementalStored: closed-partition commit")
-        if (IndexFs.exists(spark, stateDir))
-          IndexFs.renameOrFail(spark, stateDir, old,
-            "sessionizeIncrementalStored: state aside")
-        IndexFs.renameOrFail(spark, next, stateDir,
-          "sessionizeIncrementalStored: state swap")
-        IndexFs.delete(spark, old)
+        // the state moves only after the partition committed, so a
+        // recovered .next always comes with its closed sessions
+        swapState(spark, stateDir, out.filter(col("is_open")).select(cols.map(col): _*))
         spark.read.parquet(closedFin)
       } finally out.unpersist()
     }
   }
+
+  /** Replace the open-session state with `open`: written to
+    * `stateDir`.next, then swapped in ([[IndexFs.swap]]). */
+  private def swapState(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String, open: DataFrame): Unit = {
+    open.write.mode("overwrite").parquet(stateDir + ".next")
+    IndexFs.swap(spark, stateDir, stateDir + ".next")
+  }
+
+  /** Complete a state swap that crashed with `stateDir` aside: a `.next`
+    * without a live state is the committed post-batch state. */
+  private def healState(spark: org.apache.spark.sql.SparkSession,
+      stateDir: String): Unit =
+    IndexFs.recover(spark, stateDir, stateDir + ".next")
 
   // ---------------------------------------------------------------------
   // User erasure — the takedown verb (x126/x127/x128) at the session
@@ -478,7 +480,7 @@ object Events {
   /** Heal crashed per-partition compaction swaps under `closedDir`: a
     * crash between a partition's aside-rename and its promotion leaves
     * `batch=N.compact` (and possibly `batch=N.old`) with no `batch=N`;
-    * [[IndexFs.recoverSwap]] completes each. Called at EVERY lifecycle
+    * [[IndexFs.recover]] completes each. Called at EVERY lifecycle
     * entry that enumerates the partitions — the fold (which mints ids
     * from them), the reader, and the compactor — so no path can observe
     * (or reuse the id of) a half-swapped partition.
@@ -489,7 +491,7 @@ object Events {
       .collect { case n if n.matches("batch=\\d+(\\.compact|\\.old)?") =>
         n.replaceAll("\\.(compact|old)$", "")
       }.distinct
-      .foreach(b => IndexFs.recoverSwap(spark, s"$closedDir/$b"))
+      .foreach(b => IndexFs.recover(spark, s"$closedDir/$b", s"$closedDir/$b.compact"))
 
   /** Closed-history tombstone schema: (user_id, before_us). A session
     * is erased iff its user matches AND it STARTED before the request
@@ -501,38 +503,24 @@ object Events {
   def eraseUserSessions(userIds: DataFrame, stateDir: String,
       closedDir: String, beforeUs: Long = Long.MaxValue): Unit = {
     val spark = userIds.sparkSession
-    // replicate the fold's crash recovery FIRST: in the fold's window
-    // between `state aside` and `state swap` the real open-session
-    // state is a committed stateDir+".next" with stateDir absent — an
-    // erase that only checks `exists(stateDir)` would skip the state
-    // rewrite entirely, the next fold would promote .next, and the
-    // user's pre-cutoff open session would later close into history
-    // after the tombstones were compacted away: a permanent
-    // resurrection. Promoting .next here makes the rewrite below
-    // always see the true state.
-    if (!IndexFs.exists(spark, stateDir) &&
-        IndexFs.exists(spark, stateDir + ".next")) {
-      IndexFs.delete(spark, stateDir + ".old")
-      IndexFs.renameOrFail(spark, stateDir + ".next", stateDir,
-        "eraseUserSessions: recovery promotion")
-    }
+    // the fold's crash recovery FIRST: inside the fold's state swap the
+    // real open-session state is a committed stateDir+".next" with
+    // stateDir absent — an erase that only checks `exists(stateDir)`
+    // would skip the state rewrite entirely, the next fold would
+    // promote .next, and the user's pre-cutoff open session would later
+    // close into history after the tombstones were compacted away: a
+    // permanent resurrection. Promoting .next here makes the rewrite
+    // below always see the true state.
+    healState(spark, stateDir)
     userIds.select(col("user_id")).filter(col("user_id").isNotNull)
       .distinct().withColumn("before_us", lit(beforeUs))
       .repartition(1).write.mode("append").parquet(s"$closedDir/_deletes")
     // the state rewrite: an open session that STARTED before the
     // cutoff is the user's pre-request activity (append-only time
     // means everything in it predates the request) and drops whole
-    if (IndexFs.exists(spark, stateDir)) {
-      val (next, old) = (stateDir + ".next", stateDir + ".old")
-      IndexFs.delete(spark, next); IndexFs.delete(spark, old)
-      erasureFilter(spark.read.parquet(stateDir), spark, closedDir)
-        .write.mode("overwrite").parquet(next)
-      IndexFs.renameOrFail(spark, stateDir, old,
-        "eraseUserSessions: state aside")
-      IndexFs.renameOrFail(spark, next, stateDir,
-        "eraseUserSessions: state swap")
-      IndexFs.delete(spark, old)
-    }
+    if (IndexFs.exists(spark, stateDir))
+      swapState(spark, stateDir,
+        erasureFilter(spark.read.parquet(stateDir), spark, closedDir))
     graft.tools.InternalCaches.releaseByPath(spark, closedDir)
   }
 
@@ -560,7 +548,7 @@ object Events {
     * `batch=` provenance partition, erasure tombstones applied. Also
     * the lifecycle's self-healing entry — a per-partition compaction
     * swap crashed between its renames is completed here (the IndexFs
-    * recoverSwap discipline), which a naive
+    * swap recovery), which a naive
     * `spark.read.parquet(closedDir)` cannot do (and that read would
     * also miss the tombstones — this method IS the contract).
     */
@@ -580,7 +568,7 @@ object Events {
 
   /** Apply the erasure tombstones to the closed history DURABLY: each
     * live partition rewrites minus its erased rows and swaps
-    * tmp → old → live ([[IndexFs.swapCompact]] per partition — a crash
+    * tmp → old → live ([[IndexFs.swap]] per partition — a crash
     * at any point leaves a complete copy, and the no-live window is
     * healed by [[readClosedSessions]]'s entry recovery). The
     * `_graft_commit` marker is CARRIED into the rewrite: it
@@ -603,7 +591,7 @@ object Events {
     // rewrite's tasks back-fill the tail of the previous one (guide
     // §2.6). Sequentially this was one tiny write job per partition,
     // each paying full job latency; crash semantics are unchanged —
-    // every partition still goes through its own swapCompact, and a
+    // every partition still goes through its own swap, and a
     // crash mid-pool leaves each partition either swapped or untouched
     // (the no-live window is healed on next entry, same as the
     // sequential fold). The pool awaits EVERY rewrite (bounded by
@@ -618,7 +606,7 @@ object Events {
         .write.mode("overwrite").parquet(s"$src.compact")
       IndexFs.readSmall(spark, s"$src/_graft_commit").foreach(fp =>
         IndexFs.writeSmall(spark, s"$src.compact/_graft_commit", fp))
-      IndexFs.swapCompact(spark, src)
+      IndexFs.swap(spark, src, s"$src.compact")
     })
     IndexFs.delete(spark, del)
   }

@@ -105,42 +105,31 @@ object IndexFs {
     try f(reader.getFooter) finally reader.close()
   }
 
+  /** TEST SEAM, production never sets it: called with a description
+    * before every filesystem mutation made here (rename, delete of an
+    * existing path, touch, small write, copy) and before every deletion
+    * request [[StoredIndex]] writes. A crash-point enumeration counts
+    * the calls of an uncrashed run and throws at each one in turn; a
+    * race test lands a request at a chosen mutation. A var, not a
+    * parameter, keeps the public verb signatures as they are.
+    */
+  private[graft] var beforeMutation: String => Unit = _ => ()
+
   /** Create a zero-byte marker file, parents included. The marker's
     * content is its existence; overwrite is fine (a re-touch of a
     * marker that already exists changes nothing observable).
     */
-  def touch(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val f = fs(spark, path)
-    f.mkdirs(p.getParent)
-    f.create(p, true).close()
-  }
-
-  /** Complete a compaction swap that crashed between `rename(live, old)`
-    * and `rename(live.compact, live)` — the one window in the
-    * tmp → old → live discipline where no live directory exists. The
-    * signature of that crash is unambiguous (live missing, a complete
-    * `.compact` copy present), so recovery is one rename. Called at the
-    * top of every lifecycle entry point that reads or appends a swapped
-    * table: a reader after the crash self-heals instead of failing on
-    * the missing path, and an APPEND after the crash must heal first or
-    * its `mode("append")` write would mint a fresh table containing
-    * only the batch — forking the index away from the orphaned
-    * `.compact` copy. Returns whether a recovery ran. A stale `.old`
-    * left by the same crash is harmless and is deleted by the next
-    * swap's first step.
-    */
-  def recoverSwap(spark: SparkSession, liveDir: String): Boolean = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val compact = new Path(liveDir + ".compact")
-    if (!f.exists(live) && f.exists(compact)) f.rename(compact, live)
-    else false
-  }
+  def touch(spark: SparkSession, path: String): Unit = write(spark, path)(_ => ())
 
   /** Recursive delete; no-op when the path is absent. */
-  def delete(spark: SparkSession, path: String): Unit =
-    fs(spark, path).delete(new Path(path), true)
+  def delete(spark: SparkSession, path: String): Unit = {
+    val f = fs(spark, path)
+    val p = new Path(path)
+    if (f.exists(p)) {
+      beforeMutation(s"delete $path")
+      f.delete(p, true)
+    }
+  }
 
   /** Rename that THROWS on failure (Hadoop `rename` returns false
     * silently — on a commit path that silence is state corruption, not
@@ -149,9 +138,11 @@ object IndexFs {
     * the source INSIDE it instead of replacing it.
     */
   def renameOrFail(spark: SparkSession, from: String, to: String,
-      what: String): Unit =
+      what: String): Unit = {
+    beforeMutation(s"rename $from -> $to")
     require(fs(spark, from).rename(new Path(from), new Path(to)),
       s"$what: rename $from -> $to failed")
+  }
 
   /** Child names of `dir` (not paths); empty when the dir is absent. */
   def listNames(spark: SparkSession, dir: String): Seq[String] = {
@@ -177,155 +168,101 @@ object IndexFs {
   }
 
   /** Write a small control-plane file (UTF-8, overwrite, parents made). */
-  def writeSmall(spark: SparkSession, path: String, content: String): Unit = {
+  def writeSmall(spark: SparkSession, path: String, content: String): Unit =
+    write(spark, path)(_.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** Write the control-plane file `path` through `body` (overwrite,
+    * parents made). */
+  def write(spark: SparkSession, path: String)(body: java.io.OutputStream => Unit): Unit = {
+    beforeMutation(s"write $path")
     val p = new Path(path)
     val f = fs(spark, path)
     f.mkdirs(p.getParent)
     val out = f.create(p, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    try body(out) finally out.close()
   }
 
-  /** Merge the zero-byte batch markers under `fromDir` into `toDir`,
-    * file by file, then drop the emptied `fromDir`. A marker already
-    * present on both sides collapses to one (its content is its
-    * existence); any other rename must succeed or the caller's
-    * exactly-once bookkeeping is silently losing markers, so failure
-    * throws instead of proceeding. No-op when `fromDir` is absent.
-    *
-    * This is the rebuild lifecycles' marker transport in BOTH
-    * directions. Forward (live → `.compact`) it replaces a bare
-    * directory rename, whose two failure shapes each degrade committed
-    * batches to at-least-once: a stale `.compact/_batch_commits` left
-    * by a crashed earlier rebuild makes Hadoop `rename` silently
-    * return false (dest exists), and the swap then promotes the STALE
-    * marker set over the newer live one. Backward
-    * (`.compact` → live, at rebuild entry) it rescues the markers a
-    * crashed prior rebuild moved into the tmp directory before the
-    * re-run destroys or overwrites it — without the rescue, every
-    * batch committed before the crash redelivers as a double-append.
+  /** Complete a swap that crashed between `rename(live, old)` and
+    * `rename(tmp, live)` — the one window of [[swap]] where no live
+    * directory exists. The signature of that crash is unambiguous (live
+    * missing, a complete `tmp` present), so recovery is one rename.
+    * Called at the top of every lifecycle entry point that reads or
+    * appends a swapped directory: a reader after the crash self-heals
+    * instead of failing on the missing path, and an APPEND after the
+    * crash must heal first or its `mode("append")` write would mint a
+    * fresh table containing only the batch — forking the index away
+    * from the orphaned tmp copy. Returns whether a recovery ran. A
+    * stale `.old` left by the same crash is deleted by the next swap.
     */
-  def mergeMarkers(spark: SparkSession, fromDir: String, toDir: String): Unit = {
-    val f = fs(spark, fromDir)
-    val from = new Path(fromDir)
-    if (f.exists(from)) {
-      val to = new Path(toDir)
-      f.mkdirs(to)
-      f.listStatus(from).foreach { st =>
-        val dst = new Path(to, st.getPath.getName)
-        if (f.exists(dst)) f.delete(st.getPath, false)
-        else if (!f.rename(st.getPath, dst))
-          throw new IllegalStateException(
-            s"marker move failed: ${st.getPath} -> $dst")
-      }
-      f.delete(from, true)
+  def recover(spark: SparkSession, live: String, tmp: String): Boolean =
+    !exists(spark, live) && exists(spark, tmp) && {
+      renameOrFail(spark, tmp, live, "swap recovery")
+      true
     }
+
+  /** The one tmp → old → live swap: drop a stale `.old`, demote live to
+    * `.old` (when there is a live directory), promote `tmp`, drop
+    * `.old`. Every step leaves a complete copy on disk and every rename
+    * asserts its result; the only step with no live path is the window
+    * [[recover]] repairs, so "crash anywhere, re-run (or just read) to
+    * finish" is the guarantee. Callers must have finished writing `tmp`
+    * and carried their control subdirectories into it ([[carry]]).
+    *
+    * `control` names subdirectories that other writers may append to
+    * while the caller builds `tmp` (a takedown request racing a
+    * maintenance verb): files that land in live after the caller's own
+    * carry are copied from `.old` into the promoted directory before
+    * `.old` goes, and a stale `.old` that a crash left mid-copy is
+    * copied out first, before the opening delete would discard it.
+    */
+  def swap(spark: SparkSession, live: String, tmp: String,
+      control: Seq[String] = Nil): Unit = {
+    val old = s"$live.old"
+    def rescue(): Unit = control.foreach(c => carry(spark, s"$old/$c", s"$live/$c"))
+    rescue()
+    delete(spark, old)
+    if (exists(spark, live)) renameOrFail(spark, live, old, "swap demote")
+    renameOrFail(spark, tmp, live, "swap promote")
+    rescue()
+    delete(spark, old)
   }
 
-  /** Recursive COPY of a small control-plane directory; no-op when the
-    * source is absent. Copy, not move, is the crash-safe transport for
-    * state that must survive a tmp → old → live swap (the gram index's
-    * pending-takedown ledger): a move would leave the live directory
-    * without the state during the build window, and a retry after a
-    * crash there rewrites tmp wholesale (`mode("overwrite")`) —
-    * deleting the only copy. With a copy the live original stays in
-    * place until the swap demotes it, and the promoted directory
-    * carries the duplicate.
+  /** The crash-safe carry of a control subdirectory (batch markers,
+    * pending takedown requests): copy each file of `from` that `to`
+    * lacks. Copy, never move: the source stays complete until a swap
+    * demotes it, so a crash mid-carry loses nothing and a re-run skips
+    * what already arrived. Set semantics make a file carried twice
+    * harmless. No-op when `from` is absent.
     */
-  def copyDir(spark: SparkSession, from: String, to: String): Unit = {
+  def carry(spark: SparkSession, from: String, to: String): Unit = {
     val f = fs(spark, from)
     val src = new Path(from)
-    if (f.exists(src))
-      require(org.apache.hadoop.fs.FileUtil.copy(f, src, fs(spark, to),
-        new Path(to), false, spark.sparkContext.hadoopConfiguration),
-        s"copy $from -> $to failed")
-  }
-
-  /** The compaction swap: demote live to `.old`, promote `.compact` to
-    * live, drop `.old`. Every step leaves a complete copy of the table
-    * on disk; the only step with no LIVE path is the window
-    * [[recoverSwap]] repairs, so "crash anywhere, re-run (or just read)
-    * to finish" is the real guarantee. Callers must have finished
-    * writing `liveDir.compact` before calling.
-    */
-  def swapCompact(spark: SparkSession, liveDir: String): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
-    f.delete(old, true)
-    f.rename(live, old)
-    f.rename(new Path(liveDir + ".compact"), live)
-    f.delete(old, true)
-  }
-
-  /** Copy the flat files under `fromDir` whose names are neither in
-    * `knownNames` nor already present under `toDir` — the RESCUE half
-    * of [[swapCompactRescue]]. Copy (never move): the source is about
-    * to be deleted wholesale by the caller, and a crash mid-rescue must
-    * leave every file readable somewhere ([[recoverSwap]] cannot see
-    * inside a half-moved control dir). Skipping names that already
-    * exist at the destination makes a crashed-then-retried rescue
-    * idempotent. No-op when `fromDir` is absent.
-    */
-  def copyNewFiles(spark: SparkSession, fromDir: String, toDir: String,
-      knownNames: Set[String]): Unit = {
-    val f = fs(spark, fromDir)
-    val src = new Path(fromDir)
-    if (f.exists(src)) {
-      val dstFs = fs(spark, toDir)
-      val dst = new Path(toDir)
-      f.listStatus(src).filterNot(_.isDirectory).foreach { st =>
-        val name = st.getPath.getName
-        val to = new Path(dst, name)
-        if (!knownNames.contains(name) && !dstFs.exists(to)) {
-          dstFs.mkdirs(dst)
-          require(org.apache.hadoop.fs.FileUtil.copy(f, st.getPath, dstFs, to,
-            false, spark.sparkContext.hadoopConfiguration),
-            s"rescue copy ${st.getPath} -> $to failed")
-        }
+    if (f.exists(src)) f.listStatus(src).filterNot(_.isDirectory).foreach { st =>
+      val dst = new Path(to, st.getPath.getName)
+      if (!f.exists(dst)) {
+        beforeMutation(s"copy ${st.getPath} -> $dst")
+        require(org.apache.hadoop.fs.FileUtil.copy(f, st.getPath, f, dst, false,
+          spark.sparkContext.hadoopConfiguration), s"copy ${st.getPath} -> $dst failed")
       }
     }
   }
 
-  /** [[swapCompact]] for tables that carry a request-side control-plane
-    * subdir (the gram index's `_pending_deletes` ledger): between the
-    * promotion and the final `.old` delete, files that LANDED in the
-    * carried subdir after the caller's snapshot (`appliedNames` — the
-    * ledger files the caller copied forward or applied in the rebuild)
-    * are rescued into the promoted directory. Without the rescue, a
-    * takedown request racing a maintenance verb's build window — the
-    * one verb pair a streaming deployment genuinely overlaps — would be
-    * swept away with `.old`, applied nowhere: a silently lost
-    * right-to-be-forgotten request, the failure class the ledger exists
-    * to prevent. Over-rescue is safe by set semantics (a re-carried
-    * already-applied request re-filters absent doc_ids — a no-op);
-    * under-rescue is the bug. Crash anywhere: before the demote =
-    * plain retry; between demote and promote = [[recoverSwap]]'s
-    * window; during the rescue = `.old` still holds every unrescued
-    * file and the state reads as "crashed before the final delete" —
-    * re-running the VERB re-reaches a consistent state (the ledger
-    * files inside `.old` are the only loss surface, and they are the
-    * ones being copied). A crash DURING the rescue leaves a stale
-    * `.old` whose unrescued ledger files the next swap's opening
-    * delete would silently discard — so this verb COMPLETES a crashed
-    * predecessor's rescue first: any carry-subdir file still in the
-    * stale `.old` and absent from the live dir is re-carried before
-    * the delete (knownNames empty — over-rescue is safe by set
-    * semantics, and the re-carried file then rides the normal
-    * demote → rescue path of THIS swap).
+  /** Count data files under `dir` (recursive, `_`/`.`-prefixed names
+    * excluded) — the compaction triggers' gauge. One FS listing, the
+    * same order of work the parquet write just paid to commit.
     */
-  def swapCompactRescue(spark: SparkSession, liveDir: String,
-      carrySubdir: String, appliedNames: Set[String]): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
-    copyNewFiles(spark, s"$liveDir.old/$carrySubdir",
-      s"$liveDir/$carrySubdir", Set.empty)
-    f.delete(old, true)
-    f.rename(live, old)
-    f.rename(new Path(liveDir + ".compact"), live)
-    copyNewFiles(spark, s"$liveDir.old/$carrySubdir", s"$liveDir/$carrySubdir",
-      appliedNames)
-    f.delete(old, true)
+  def countDataFiles(spark: SparkSession, dir: String): Long = {
+    val f = fs(spark, dir)
+    val p = new Path(dir)
+    if (!f.exists(p)) 0L
+    else {
+      val it = f.listFiles(p, true)
+      var n = 0L
+      while (it.hasNext) {
+        val name = it.next().getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) n += 1
+      }
+      n
+    }
   }
 }

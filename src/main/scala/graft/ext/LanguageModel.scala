@@ -313,7 +313,7 @@ object LanguageModel {
     * serve stale counts after it.
     */
   private[graft] val LmIndex = new StoredIndex(
-    tables = Seq("bigrams"), tombstones = None,
+    tables = Seq("bigrams"), deletes = None,
     compactRelease = StoredIndex.Whole)
 
   /** Build the stored model: the corpus's bigram counts as parquet

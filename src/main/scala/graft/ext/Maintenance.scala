@@ -26,8 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * / [[Dedup.compactGramIndex]] / [[Dedup.compactNearDupIndex]]
   * (the file-count fold). Concurrency is therefore the verbs' own
   * contract: single-writer per store among maintenance verbs (the
-  * request-side [[Dedup.requestGramTakedown]] may race — the swap's
-  * rescue pass covers it).
+  * request-side [[Dedup.requestGramTakedown]] may race — the swap
+  * carries a request that lands during a rebuild into the new
+  * directory). Every store but the LM is a [[StoredIndex]] family, so
+  * every remedy's swap, recovery and carry is the kernel's.
   *
   * Output (one row per store × trigger evaluated, in declaration
   * order): store, trigger, fired, acted, verb, gauge_before,
@@ -96,15 +98,19 @@ object Maintenance {
       maxFilesPerCell: Int = 64, rerank: Option[DataFrame] = None,
       maxMeanGap: Double = 0.05, maxRankChurn: Double = 0.9) extends Store
 
-  /** Bucketed gram (substring-screen) store. Triggers, in order:
+  /** Bucketed gram (substring-screen) store, the [[StoredIndex]] family
+    * whose data table is the index directory and whose deletes are the
+    * pending ledger. Triggers, in order:
     *  1. `ledger` — pending [[Dedup.requestGramTakedown]] requests
-    *     (row-counted, not directory-probed) drain through ONE
+    *     (distinct doc_ids, not directory-probed) drain through ONE
     *     filtered rebuild ([[Dedup.drainGramTakedowns]]; `corpus` is
     *     the live-corpus hand-back the gram grain requires — no
     *     provenance at O(1) bytes/gram).
     *  2. `file_count` — re-checked after a drain (the drain IS a
-    *     distinct rewrite and usually quiets it): data files above
-    *     `maxDataFiles` fold via [[Dedup.compactGramIndex]]. `0` fires
+    *     distinct rewrite and usually quiets it): data files under the
+    *     index directory (the kernel's gauge; pending-request files
+    *     count too) above `maxDataFiles` fold via
+    *     [[Dedup.compactGramIndex]], which carries the ledger. `0` fires
     *     on any nonempty index ("compact every sweep" — a legitimate
     *     cron policy); negative disables.
     */
@@ -241,7 +247,7 @@ object Maintenance {
     val ledgerRow = Action(s.name, "ledger", ledgerFired, ledgerActed,
       "drainGramTakedowns", Some(pending), Some(pendingAfter))
     ledgerRow +: fileCountTrigger(s.name,
-      () => Dedup.countDataFiles(spark, s.indexDir), dryRun,
+      () => Dedup.GramIndex.dataFiles(spark, s.indexDir), dryRun,
       if (s.maxDataFiles < 0) None else Some(s.maxDataFiles),
       "compactGramIndex",
       () => Dedup.compactGramIndex(spark, s.indexDir, buckets = s.buckets))

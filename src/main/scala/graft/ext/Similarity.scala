@@ -44,7 +44,7 @@ object Similarity {
     */
   private[graft] val SemanticIndex = new StoredIndex(
     tables = Seq("vectors"),
-    tombstones = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
+    deletes = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
     compactRelease = StoredIndex.Keep)
 
   /** The stored `vectors` table with takedown tombstones applied — the
@@ -2241,7 +2241,7 @@ object Similarity {
     */
   private[graft] val IvfPqIndex = new StoredIndex(
     tables = Seq("codes"),
-    tombstones = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
+    deletes = Some(StoredIndex.Tombstones("vec_id", StoredIndex.Whole)),
     compactRelease = StoredIndex.Keep)
 
   /** The stored `codes` table with takedown tombstones applied — the

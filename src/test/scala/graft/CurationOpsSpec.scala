@@ -600,7 +600,7 @@ class CurationOpsSpec extends SparkSpec {
     Dedup.writeNearDupIndex(existing, off, n = 3)
     batches.foreach(b =>
       Dedup.appendNearDupIndex(b, off, n = 3, maxFilesPerTable = 0))
-    val unbounded = Dedup.countDataFiles(spark, s"$off/shingles")
+    val unbounded = graft.ext.IndexFs.countDataFiles(spark, s"$off/shingles")
     // threshold below the unbounded count: the trigger fires inside
     // append and the shingles file count drops back to one compacted
     // write's worth (<= shuffle partitions), staying bounded
@@ -608,7 +608,7 @@ class CurationOpsSpec extends SparkSpec {
     Dedup.writeNearDupIndex(existing, on, n = 3)
     batches.foreach(b =>
       Dedup.appendNearDupIndex(b, on, n = 3, maxFilesPerTable = 2))
-    val bounded = Dedup.countDataFiles(spark, s"$on/shingles")
+    val bounded = graft.ext.IndexFs.countDataFiles(spark, s"$on/shingles")
     assert(bounded < unbounded,
       s"trigger must reap append files: bounded=$bounded unbounded=$unbounded")
     def rows(df: org.apache.spark.sql.DataFrame) =

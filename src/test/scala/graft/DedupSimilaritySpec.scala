@@ -690,7 +690,7 @@ class DedupSimilaritySpec extends SparkSpec {
     Dedup.writeGramIndexBucketed(existing, off, k = 3, buckets = 4)
     batches.foreach(b =>
       Dedup.appendGramIndexBucketed(b, off, k = 3, maxFilesPerBucket = 0))
-    val unbounded = Dedup.countDataFiles(spark, off)
+    val unbounded = graft.ext.IndexFs.countDataFiles(spark, off)
     assert(unbounded > 4,
       s"without the trigger appends must accumulate files, got $unbounded")
     // threshold 1 file per bucket: the trigger fires inside append and
@@ -704,7 +704,7 @@ class DedupSimilaritySpec extends SparkSpec {
     Dedup.writeGramIndexBucketed(existing, on, k = 3, buckets = 4)
     batches.foreach(b =>
       Dedup.appendGramIndexBucketed(b, on, k = 3, maxFilesPerBucket = 1))
-    assert(Dedup.countDataFiles(spark, on) <= 8,
+    assert(graft.ext.IndexFs.countDataFiles(spark, on) <= 8,
       "the trigger must keep the index at <= maxFilesPerBucket x buckets" +
         " (re-derived scheme)")
     // and the reaping changed nothing the screen can observe

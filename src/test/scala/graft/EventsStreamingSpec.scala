@@ -334,7 +334,7 @@ class EventsStreamingSpec extends SparkSpec {
       new java.io.File(rootA, "out").getPath, nBatches = 4, bloom = true,
       buckets = 8, maxFilesPerBucket = 1)
       .collect().map(_.toSeq).toSet
-    val nFiles = graft.ext.Dedup.countDataFiles(spark,
+    val nFiles = graft.ext.IndexFs.countDataFiles(spark,
       new java.io.File(rootA, "idx").getPath)
     assert(nFiles <= 8,
       s"trigger must bound the streamed index at one file per bucket, got $nFiles")

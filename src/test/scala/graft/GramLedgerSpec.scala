@@ -31,6 +31,18 @@ class GramLedgerSpec extends SparkSpec {
   private def freshIdx(tag: String): String =
     Files.createTempDirectory(s"graft_ledger_$tag").toString + "/idx"
 
+  /** Run `verb`, landing `request` at its first rename — the swap's
+    * demote, after the ledger snapshot and the carry into the rebuilt
+    * directory (the deterministic race, staged through the mutation
+    * seam). */
+  private def racing(request: => Unit)(verb: => Unit): Unit = {
+    var fired = false
+    IndexFs.beforeMutation = what =>
+      if (!fired && what.startsWith("rename")) { fired = true; request }
+    try verb finally IndexFs.beforeMutation = _ => ()
+    assert(fired, "the verb reached its swap")
+  }
+
   test("a request is NOT yet effective (the documented at-drain " +
       "contract), replays collapse, and the pending set reads back") {
     val idx = freshIdx("req")
@@ -66,7 +78,7 @@ class GramLedgerSpec extends SparkSpec {
     assert(hits(idxB, "a b c d e f") === 0 && hits(idxB, "g h i j k l") === 0)
     assert(hits(idxB, "m n o p q r") > 0, "survivors still screen")
     assert(!IndexFs.exists(spark, s"$idxB/_pending_deletes"),
-      "the drain's swap cleared the ledger atomically with applying it")
+      "the drain cleared the ledger it applied")
     assert(!Dedup.drainGramTakedowns(corpus, idxB, k = 3),
       "no pending requests → the drain is a no-op that reports false")
   }
@@ -153,11 +165,9 @@ class GramLedgerSpec extends SparkSpec {
     Dedup.writeGramIndexBucketed(corpus, idx, k = 3, buckets = 2)
     Dedup.requestGramTakedown(Seq(1L).toDF("doc_id"), idx)
     // land a second request INSIDE the drain's window — after the
-    // ledger snapshot, before the swap (the deterministic race seam)
-    Dedup.afterLedgerSnapshotHook =
-      () => Dedup.requestGramTakedown(Seq(2L).toDF("doc_id"), idx)
-    try assert(Dedup.drainGramTakedowns(corpus, idx, k = 3))
-    finally Dedup.afterLedgerSnapshotHook = () => ()
+    // ledger snapshot, before the swap
+    racing(Dedup.requestGramTakedown(Seq(2L).toDF("doc_id"), idx))(
+      assert(Dedup.drainGramTakedowns(corpus, idx, k = 3)))
     assert(hits(idx, "a b c d e f") === 0, "the snapshotted request drained")
     assert(hits(idx, "g h i j k l") > 0,
       "the racing request is NOT yet applied (it landed after the " +
@@ -175,10 +185,8 @@ class GramLedgerSpec extends SparkSpec {
     val idx = freshIdx("racecompact")
     Dedup.writeGramIndexBucketed(corpus, idx, k = 3, buckets = 2)
     Dedup.requestGramTakedown(Seq(1L).toDF("doc_id"), idx)
-    Dedup.afterLedgerSnapshotHook =
-      () => Dedup.requestGramTakedown(Seq(3L).toDF("doc_id"), idx)
-    try Dedup.compactGramIndex(spark, idx)
-    finally Dedup.afterLedgerSnapshotHook = () => ()
+    racing(Dedup.requestGramTakedown(Seq(3L).toDF("doc_id"), idx))(
+      Dedup.compactGramIndex(spark, idx))
     assert(Dedup.pendingGramTakedowns(spark, idx)
       .as[Long].collect().sorted.toSeq === Seq(1L, 3L),
       "carried request AND late-landing request both pend after the swap")
@@ -230,5 +238,27 @@ class GramLedgerSpec extends SparkSpec {
     assert(hits(idx, "g h i j k l") === 0, "caller's filter applied")
     assert(hits(idx, "m n o p q r") > 0)
     assert(!IndexFs.exists(spark, s"$idx/_pending_deletes"))
+  }
+
+  test("gram screens and appends leave the internal cache registry " +
+      "unchanged and find the flat index's spans") {
+    val idx = freshIdx("registry")
+    val flat = freshIdx("registry_flat")
+    val built = corpus.filter(col("doc_id") <= 2L)
+    Dedup.writeGramIndexBucketed(built, idx, k = 3, buckets = 2)
+    Dedup.writeGramIndex(built, flat, k = 3)
+    val before = graft.tools.InternalCaches.liveCount(spark)
+    def spans(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    (3L to 5L).foreach { b =>
+      // each batch repeats a span of an indexed or earlier-appended doc
+      val batch = corpus.filter(col("doc_id") === math.min(b, 4L))
+        .unionByName(Seq((10L * b, s"x a b c y m n o z$b")).toDF("doc_id", "text"))
+      assert(spans(Dedup.duplicateSpansAgainstIndexBloom(batch, idx, k = 3)) ===
+        spans(Dedup.duplicateSpansAgainstIndex(batch, flat, k = 3)), s"batch $b spans")
+      Dedup.appendGramIndexBucketed(batch, idx, k = 3)
+      Dedup.appendGramIndex(batch, flat, k = 3)
+    }
+    assert(graft.tools.InternalCaches.liveCount(spark) === before)
   }
 }

@@ -31,31 +31,31 @@ class IndexFsSpec extends SparkSpec {
 
   // ---- the swap discipline and its crash window -----------------------
 
-  test("recoverSwap completes a swap crashed between the two renames") {
+  test("recover completes a swap crashed between the two renames") {
     val root = Files.createTempDirectory("graft_swap").toString
     val live = s"$root/table"
     Seq(1L, 2L).toDF("v").write.parquet(live)
     Seq(1L).toDF("v").write.parquet(s"$live.compact")
     // healthy state: recovery is a no-op
-    assert(!IndexFs.recoverSwap(spark, live))
+    assert(!IndexFs.recover(spark, live, s"$live.compact"))
     assert(spark.read.parquet(live).count() === 2)
     // simulate the crash: live was renamed to .old, .compact not yet
-    // promoted — the one step of swapCompact with no live directory
+    // promoted — the one step of the swap with no live directory
     val fs = IndexFs.fs(spark, live)
     fs.rename(new org.apache.hadoop.fs.Path(live),
       new org.apache.hadoop.fs.Path(s"$live.old"))
-    assert(IndexFs.recoverSwap(spark, live), "crash state must recover")
+    assert(IndexFs.recover(spark, live, s"$live.compact"), "crash state must recover")
     assert(spark.read.parquet(live).count() === 1,
       "recovery promotes the complete .compact copy")
-    assert(!IndexFs.recoverSwap(spark, live), "recovery is one-shot")
+    assert(!IndexFs.recover(spark, live, s"$live.compact"), "recovery is one-shot")
   }
 
-  test("swapCompact promotes .compact and drops .old") {
+  test("swap promotes .compact and drops .old") {
     val root = Files.createTempDirectory("graft_swap2").toString
     val live = s"$root/table"
     Seq(1L, 2L, 3L).toDF("v").write.parquet(live)
     Seq(9L).toDF("v").write.parquet(s"$live.compact")
-    IndexFs.swapCompact(spark, live)
+    IndexFs.swap(spark, live, s"$live.compact")
     assert(spark.read.parquet(live).collect().map(_.getLong(0)).toSeq === Seq(9L))
     assert(!IndexFs.exists(spark, s"$live.old"))
     assert(!IndexFs.exists(spark, s"$live.compact"))
@@ -318,7 +318,7 @@ class IndexFsSpec extends SparkSpec {
     val want = hits
     // crash window: live renamed aside and dropped, .compact complete
     // but not yet promoted — exactly what a rebuild crash between
-    // swapCompact's two renames leaves
+    // the swap's two renames leaves
     IndexFs.renameOrFail(spark, idx, s"$idx.compact", "stage crash")
     assert(hits === want,
       "the search entry must complete the crashed whole-index swap")

@@ -6,7 +6,8 @@ import graft.tools.LocalFs
 
 /** `LocalFs.scratchRoot`: each call gets a fresh, empty root, the
   * previous root of the same tag is deleted, other tags' roots are
-  * left alone, and the name carries the session's applicationId.
+  * left alone, the name carries the session's applicationId, and an
+  * ended application's roots are deleted.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -43,5 +44,20 @@ class LocalFsSpec extends SparkSpec {
     assert(root.getName.startsWith(s"graft_spec_name_${appId}_"))
     assert(root.getParentFile == new java.io.File(System.getProperty("java.io.tmpdir")))
     LocalFs.deleteRecursively(root)
+  }
+
+  test("an ended application's roots are deleted; another application's are untouched") {
+    val app = spark.sparkContext.applicationId
+    val mine = Seq("spec_end_a", "spec_end_b").map(LocalFs.scratchRoot(spark, _))
+    mine.foreach(fill)
+    // a root another application (another JVM) left under the same tag
+    val other = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_spec_end_a_${app}-other_1")
+    fill(other)
+    LocalFs.endApplication(app)
+    assert(mine.forall(!_.exists()), "the ended application's roots are gone")
+    assert(new java.io.File(other, "state/part-0").isFile,
+      "another application's root is untouched")
+    LocalFs.deleteRecursively(other)
   }
 }

@@ -118,8 +118,14 @@ class StoredIndexSpec extends SparkSpec {
   /** A swap crashed between `rename(live, old)` and
     * `rename(live.compact, live)`. */
   private def crashMidSwap(live: String): Unit = {
-    IndexFs.copyDir(spark, live, s"$live.compact")
+    copy(live, s"$live.compact")
     IndexFs.renameOrFail(spark, live, s"$live.old", "stage crash")
+  }
+
+  private def copy(from: String, to: String): Unit = {
+    val fs = IndexFs.fs(spark, from)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(from),
+      fs, new org.apache.hadoop.fs.Path(to), false, spark.sparkContext.hadoopConfiguration))
   }
 
   /** The checks every crash state ends with: the next verb's output
@@ -170,8 +176,9 @@ class StoredIndexSpec extends SparkSpec {
       assert(f.deliver(d) === Some(true))
       // the rebuild had written part of its tmp directory and carried
       // the markers into it when it crashed
-      IndexFs.copyDir(spark, s"$d/${f.tables.head}", s"$d.compact/${f.tables.head}")
-      IndexFs.mergeMarkers(spark, s"$d/_batch_commits", s"$d.compact/_batch_commits")
+      copy(s"$d/${f.tables.head}", s"$d.compact/${f.tables.head}")
+      IndexFs.renameOrFail(spark, s"$d/_batch_commits", s"$d.compact/_batch_commits",
+        "stage crash")
       assert(IndexFs.listNames(spark, s"$d/_batch_commits").isEmpty)
       assertRecovered(f, d, uncrashed, "rebuild-markers")
     }

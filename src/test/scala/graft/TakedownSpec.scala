@@ -409,11 +409,11 @@ class TakedownSpec extends SparkSpec {
     LanguageModel.writeLmIndex(lmDocs.filter(col("doc_id") =!= 3L), full)
     LanguageModel.appendLmIndex(lmDocs.filter(col("doc_id") === 3L), full, "a1",
       maxFiles = 0)
-    val before = Dedup.countDataFiles(spark, s"$full/bigrams")
+    val before = graft.ext.IndexFs.countDataFiles(spark, s"$full/bigrams")
     assert(before >= 2L, s"build + append = at least two files: $before")
     LanguageModel.deleteFromLmIndex(lmDocs.filter(col("doc_id") === 3L),
       full, "del1", maxFiles = 1)
-    assert(Dedup.countDataFiles(spark, s"$full/bigrams") === 1L,
+    assert(graft.ext.IndexFs.countDataFiles(spark, s"$full/bigrams") === 1L,
       "the delete's trigger must compact the table down to one file")
     // the compacted model still scores as the remaining-corpus model
     val ref = Files.createTempDirectory("graft_td_lmfref").toString + "/idx"
