@@ -189,29 +189,36 @@ object SchemaConverter {
     * build's own giant-row wall) at data-mapping time. This procedure
     * closes the loop: while any root's largest estimated document
     * (`maxDocBytes`, normally [[graft.map.DocSizeAudit.maxDocBytes]])
-    * exceeds `budgetBytes`, DEMOTE that root — its direct children hoist
-    * to top-level Referencing collections (their own subtrees intact,
-    * their attributes restored to the referencing shape: all columns,
-    * FKs renamed `_REF`) and the root keeps only its own attributes.
-    * Each demotion removes at least one embedding edge, so the loop
-    * terminates; a childless over-budget root (the table's own row
-    * exceeds the budget — nothing schema-level can fix that) is reported
-    * and left as-is.
+    * exceeds `budgetBytes`, DEMOTE the first such root — its direct
+    * children hoist to top-level Referencing collections (their own
+    * subtrees intact, their attributes restored to the referencing
+    * shape: all columns, FKs renamed `_REF`) and the root keeps only its
+    * own attributes. Each demotion removes at least one embedding edge,
+    * so the loop terminates; a childless over-budget root (the table's
+    * own row exceeds the budget — nothing schema-level can fix that) is
+    * reported and left as-is.
+    *
+    * Pricing runs in rounds: each round prices every root not priced
+    * yet — the childless ones too — as ONE batch
+    * (`maxDocBytes.prices`, one Spark plan for the audit), then demotes
+    * at most one root. A migration whose roots all fit costs one plan;
+    * each demotion adds one for the roots it created. Each distinct node
+    * is priced at most once per call, and nothing is remembered across
+    * calls.
     *
     * Returns the adjusted schema plus the demotion log
-    * (root → hoisted children), empty when everything already fits.
-    * Driver-side control plane like the rest of the converter; only the
-    * estimator callback runs Spark jobs, at most once per distinct node
-    * in one call (a demotion does not re-price the roots that already
-    * fit; nothing is remembered across calls).
+    * (root → hoisted children), empty when everything already fits. The
+    * returned schema carries its roots' prices
+    * ([[DocumentSchema.rootPrices]]), so the build guard
+    * ([[graft.map.DataMapper.mapAllGuarded]]) runs no pricing plan of
+    * its own for it.
     */
   def enforceDocBudget(
       db: DatabaseMeta,
       schema: DocumentSchema,
-      maxDocBytes: CollectionNode => Long,
+      maxDocBytes: DocPricer,
       budgetBytes: Long): (DocumentSchema, Seq[(String, Seq[String])]) = {
     val priced = scala.collection.mutable.HashMap.empty[CollectionNode, Long]
-    def price(n: CollectionNode): Long = priced.getOrElseUpdate(n, maxDocBytes(n))
     def referencingNode(n: CollectionNode): CollectionNode = {
       val t = db(n.name)
       val fkCols = t.foreignKeys.map(_.columnName).toSet
@@ -225,8 +232,10 @@ object SchemaConverter {
     val log = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
     var progress = true
     while (progress) {
+      val fresh = cur.roots.filterNot(priced.contains).distinct
+      if (fresh.nonEmpty) priced ++= fresh.zip(maxDocBytes.prices(fresh))
       progress = false
-      cur.roots.find(r => r.embedded.nonEmpty && price(r) > budgetBytes)
+      cur.roots.find(r => r.embedded.nonEmpty && priced(r) > budgetBytes)
         .foreach { r =>
           val hoisted = r.embedded.map(referencingNode)
           log += r.name -> hoisted.map(_.name)
@@ -236,12 +245,12 @@ object SchemaConverter {
           progress = true
         }
     }
-    cur.roots.filter(r => r.embedded.isEmpty && price(r) > budgetBytes)
+    cur.roots.filter(r => r.embedded.isEmpty && priced(r) > budgetBytes)
       .foreach(r => System.err.println(
         s"[graft] WARNING: root ${r.name} exceeds the $budgetBytes-byte " +
           "document budget with no embedded children to hoist — the table's " +
           "own rows are too large for the target store"))
-    (cur, log.toSeq)
+    (cur.withRootPrices(cur.roots.map(priced)), log.toSeq)
   }
 
   /** Run the whole conversion with the document-size budget enforced —
@@ -249,7 +258,7 @@ object SchemaConverter {
     */
   def convertWithBudget(
       db: DatabaseMeta,
-      maxDocBytes: CollectionNode => Long,
+      maxDocBytes: DocPricer,
       budgetBytes: Long): (DocumentSchema, Seq[(String, Seq[String])]) =
     enforceDocBudget(db, convert(db), maxDocBytes, budgetBytes)
 }

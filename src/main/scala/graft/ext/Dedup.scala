@@ -524,20 +524,31 @@ object Dedup {
   private[graft] def bloomGateColumn(
       spark: SparkSession, bf: BloomFilter, numBits: Long,
       maxLiteralBytes: Long, input: Column): Column = {
+    val (gate, carrier) = bloomGate(spark, bf, numBits, maxLiteralBytes, input)
+    carrier.foreach(graft.tools.InternalCaches.trackBroadcast(spark, _))
+    gate
+  }
+
+  /** [[bloomGateColumn]]'s column with its broadcast carrier, if any,
+    * unregistered — for a caller that runs the gate eagerly and destroys
+    * the carrier itself once its action is done. */
+  private def bloomGate(
+      spark: SparkSession, bf: BloomFilter, numBits: Long,
+      maxLiteralBytes: Long, input: Column)
+      : (Column, Option[org.apache.spark.broadcast.Broadcast[BloomFilter]]) = {
     import org.apache.spark.sql.GraftSqlBridge
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.types.BinaryType
     if (numBits / 8 <= maxLiteralBytes) {
       val bos = new java.io.ByteArrayOutputStream()
       bf.writeTo(bos)
-      GraftSqlBridge.column(new BloomFilterMightContain(
+      (GraftSqlBridge.column(new BloomFilterMightContain(
         Literal(bos.toByteArray, BinaryType),
-        GraftSqlBridge.expression(input)))
+        GraftSqlBridge.expression(input))), None)
     } else {
-      GraftSqlBridge.column(graft.functions.BloomMightContainBc(
-        graft.tools.InternalCaches.trackBroadcast(
-          spark, spark.sparkContext.broadcast(bf)),
-        GraftSqlBridge.expression(input)))
+      val carrier = spark.sparkContext.broadcast(bf)
+      (GraftSqlBridge.column(graft.functions.BloomMightContainBc(
+        carrier, GraftSqlBridge.expression(input))), Some(carrier))
     }
   }
 
@@ -1855,10 +1866,13 @@ object Dedup {
     // cached path: ship the filter as a broadcast variable (once per
     // executor per call) instead of a plan literal (once per TASK —
     // the round-12 streaming replay re-broadcast multi-MB task
-    // binaries on every micro-batch job)
-    val gate = bloomGateColumn(spark, sc.bf, sc.numBits,
+    // binaries on every micro-batch job). Only the candidate collect
+    // reads the gate, so its carrier is destroyed right after it: a
+    // span stream keeps no broadcast per batch.
+    val (gate, carrier) = bloomGate(spark, sc.bf, sc.numBits,
       if (cacheSidecar) 0L else maxLiteralBytes, col("g"))
-    val cand = grams.filter(gate).select("g").distinct().as[Long].collect()
+    val cand = try grams.filter(gate).select("g").distinct().as[Long].collect()
+      finally carrier.foreach(_.destroy())
     val hot = cand.map(g => java.lang.Math.floorMod(g, sc.buckets.toLong).toInt).distinct
     val idx = gramTable(spark, indexDir)
       .filter(col("bucket").isin(hot.map(Int.box).toSeq: _*))

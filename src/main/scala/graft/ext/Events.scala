@@ -342,14 +342,17 @@ object Events {
     * promoted, `.old` dropped). On startup: a present `stateDir` is the
     * truth (a stale `.next` is overwritten by the next write, a stale
     * `.old` dropped by the next swap); an ABSENT `stateDir` with a
-    * `.next` means the crash hit inside the swap, and since `.next` is
-    * written only after the closed partition committed, it is the
-    * post-batch state and is promoted ([[IndexFs.recover]]) — also at
-    * the very first batch, where there is no old state to set aside.
-    * Net contract: state is never half-written and never
-    * silently reset; each call commits one `batch=<n>` provenance
-    * partition (n = max existing + 1, so archived/deleted old
-    * partitions never collide). The returned frame reads the
+    * complete `.next` means the crash hit inside the swap, and since
+    * `.next` is written only after the closed partition committed, it
+    * is the post-batch state and is promoted ([[IndexFs.recover]]) —
+    * also at the very first batch, where there is no old state to set
+    * aside. A `.next` cut off inside its own write (possible only at the
+    * first batch, where no state was demoted) is deleted, and the retry
+    * recomputes the batch from the empty state. Net contract: state is
+    * never half-written and never silently reset; each call commits one
+    * `batch=<n>` provenance partition (n = max existing + 1, so
+    * archived/deleted old partitions never collide). The returned frame
+    * reads the
     * just-written partition, NOT the pre-swap state lineage (whose
     * input files the swap deletes).
     *
@@ -458,8 +461,9 @@ object Events {
     IndexFs.swap(spark, stateDir, stateDir + ".next")
   }
 
-  /** Complete a state swap that crashed with `stateDir` aside: a `.next`
-    * without a live state is the committed post-batch state. */
+  /** Complete a state swap that crashed with `stateDir` aside: a
+    * complete `.next` without a live state is the committed post-batch
+    * state ([[IndexFs.recover]]). */
   private def healState(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): Unit =
     IndexFs.recover(spark, stateDir, stateDir + ".next")

@@ -184,21 +184,43 @@ object IndexFs {
 
   /** Complete a swap that crashed between `rename(live, old)` and
     * `rename(tmp, live)` — the one window of [[swap]] where no live
-    * directory exists. The signature of that crash is unambiguous (live
-    * missing, a complete `tmp` present), so recovery is one rename.
+    * directory exists — or the first swap of a directory that never had
+    * a live copy. Recovery is one rename, but only of a `tmp` shown
+    * complete: the swap already demoted live (a `.old` exists; [[swap]]
+    * demotes only after `tmp` is written), or no Spark write is
+    * unfinished in `tmp` (no `_temporary` staging directory in it or in
+    * a table directory directly under it). A `tmp` cut off inside its
+    * own write — possible when there was no live copy to demote, as at
+    * the first state fold of [[Events.sessionizeIncrementalStored]] — is
+    * deleted instead, and the caller's verb writes it again.
     * Called at the top of every lifecycle entry point that reads or
     * appends a swapped directory: a reader after the crash self-heals
     * instead of failing on the missing path, and an APPEND after the
     * crash must heal first or its `mode("append")` write would mint a
     * fresh table containing only the batch — forking the index away
-    * from the orphaned tmp copy. Returns whether a recovery ran. A
+    * from the orphaned tmp copy. Returns whether a promotion ran. A
     * stale `.old` left by the same crash is deleted by the next swap.
     */
   def recover(spark: SparkSession, live: String, tmp: String): Boolean =
     !exists(spark, live) && exists(spark, tmp) && {
-      renameOrFail(spark, tmp, live, "swap recovery")
-      true
+      if (exists(spark, s"$live.old") || !unfinishedWrite(spark, tmp)) {
+        renameOrFail(spark, tmp, live, "swap recovery")
+        true
+      } else {
+        delete(spark, tmp)
+        false
+      }
     }
+
+  /** Whether a Spark write into `dir` (or into a table directory directly
+    * under it) has not committed: its `_temporary` staging is still
+    * there. The job commit removes it before it writes `_SUCCESS`. */
+  private def unfinishedWrite(spark: SparkSession, dir: String): Boolean = {
+    val f = fs(spark, dir)
+    val staging = "_temporary"
+    f.exists(new Path(dir, staging)) || f.listStatus(new Path(dir))
+      .exists(st => st.isDirectory && f.exists(new Path(st.getPath, staging)))
+  }
 
   /** The one tmp → old → live swap: drop a stale `.old`, demote live to
     * `.old` (when there is a live directory), promote `tmp`, drop
@@ -229,20 +251,27 @@ object IndexFs {
 
   /** The crash-safe carry of a control subdirectory (batch markers,
     * pending takedown requests): copy each file of `from` that `to`
-    * lacks. Copy, never move: the source stays complete until a swap
-    * demotes it, so a crash mid-carry loses nothing and a re-run skips
-    * what already arrived. Set semantics make a file carried twice
-    * harmless. No-op when `from` is absent.
+    * lacks, or holds at another length — a copy a crash cut off is
+    * copied again. Copy, never move: the source stays complete until a
+    * swap demotes it, so a crash mid-carry loses nothing and a re-run
+    * skips what already arrived whole. Set semantics make a file carried
+    * twice harmless. No-op when `from` is absent.
     */
   def carry(spark: SparkSession, from: String, to: String): Unit = {
     val f = fs(spark, from)
     val src = new Path(from)
-    if (f.exists(src)) f.listStatus(src).filterNot(_.isDirectory).foreach { st =>
-      val dst = new Path(to, st.getPath.getName)
-      if (!f.exists(dst)) {
-        beforeMutation(s"copy ${st.getPath} -> $dst")
-        require(org.apache.hadoop.fs.FileUtil.copy(f, st.getPath, f, dst, false,
-          spark.sparkContext.hadoopConfiguration), s"copy ${st.getPath} -> $dst failed")
+    val dstDir = new Path(to)
+    if (f.exists(src)) {
+      val arrived =
+        if (f.exists(dstDir)) f.listStatus(dstDir).map(st => st.getPath.getName -> st.getLen).toMap
+        else Map.empty[String, Long]
+      f.listStatus(src).filterNot(_.isDirectory).foreach { st =>
+        val dst = new Path(dstDir, st.getPath.getName)
+        if (!arrived.get(dst.getName).contains(st.getLen)) {
+          beforeMutation(s"copy ${st.getPath} -> $dst")
+          require(org.apache.hadoop.fs.FileUtil.copy(f, st.getPath, f, dst, false, true,
+            spark.sparkContext.hadoopConfiguration), s"copy ${st.getPath} -> $dst failed")
+        }
       }
     }
   }

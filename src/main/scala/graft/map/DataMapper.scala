@@ -47,19 +47,38 @@ class DataMapper(
     * `budgetBytes` — the audit costs a (key, long) aggregate per tree
     * edge where the build it guards would pay the full nested fold
     * before discovering the wall as an executor OOM (or MongoDB's
-    * 16 MB rejection two decades earlier). The check runs
-    * [[DocSizeAudit.maxDocBytes]], the very plan the budget step
-    * ([[graft.convert.SchemaConverter.enforceDocBudget]]) prices roots
-    * with, so a guarded migration compiles no new code for it. Only a
-    * root over budget pays a second query, for the error: it names the
-    * worst offenders (top 5 by estimated bytes) so the caller can
-    * re-plan — typically by demoting the root.
+    * 16 MB rejection two decades earlier). The check costs one pricing
+    * plan ([[DocSizeAudit.maxDocBytes]], a batch of one). Only a root
+    * over budget pays a second query, for the error: it names the worst
+    * offenders (top 5 by estimated bytes) so the caller can re-plan —
+    * typically by demoting the root.
     */
   def mapRootGuarded(
       root: CollectionNode,
       budgetBytes: Long = DocSizeAudit.MongoDocLimit): DataFrame = {
     val audit = new DocSizeAudit(spark, sfDir, db, loader)
-    if (audit.maxDocBytes(root) > budgetBytes) {
+    guarded(audit, root, audit.maxDocBytes(root), budgetBytes)
+  }
+
+  /** Build every root collection, each behind [[mapRootGuarded]]'s
+    * budget check: (collection name, nested DataFrame). A schema from
+    * [[graft.convert.SchemaConverter.enforceDocBudget]] carries its
+    * roots' prices ([[DocumentSchema.rootPrices]]), so this runs no
+    * pricing plan for it; any other schema has all its roots priced in
+    * one plan. */
+  def mapAllGuarded(
+      schema: DocumentSchema,
+      budgetBytes: Long = DocSizeAudit.MongoDocLimit): Seq[(String, DataFrame)] = {
+    val audit = new DocSizeAudit(spark, sfDir, db, loader)
+    val prices = schema.rootPrices.getOrElse(audit.maxDocBytes.prices(schema.roots))
+    schema.roots.zip(prices).map { case (r, p) => r.name -> guarded(audit, r, p, budgetBytes) }
+  }
+
+  /** [[mapRoot]] of a root whose largest document is priced at `price`
+    * bytes, or the refusal naming its worst offenders. */
+  private def guarded(audit: DocSizeAudit, root: CollectionNode, price: Long,
+      budgetBytes: Long): DataFrame = {
+    if (price > budgetBytes) {
       // control-plane action: ≤5 (key, bytes) rows cross the driver
       val worst = audit.estimateRoot(root).filter(col("est_doc_bytes") > budgetBytes)
         .orderBy(col("est_doc_bytes").desc)
@@ -74,13 +93,6 @@ class DataMapper(
     }
     mapRoot(root)
   }
-
-  /** Build every root collection, each behind [[mapRootGuarded]]'s
-    * budget pre-flight: (collection name, nested DataFrame). */
-  def mapAllGuarded(
-      schema: DocumentSchema,
-      budgetBytes: Long = DocSizeAudit.MongoDocLimit): Seq[(String, DataFrame)] =
-    schema.roots.map(r => r.name -> mapRootGuarded(r, budgetBytes))
 
   /** Build one root collection's nested DataFrame. */
   def mapRoot(root: CollectionNode): DataFrame = {

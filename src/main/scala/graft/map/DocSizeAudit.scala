@@ -1,6 +1,6 @@
 package graft.map
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -48,6 +48,13 @@ import graft.sources.Tables
   * build would use, with map-side partial sums. The estimate is exact
   * under the model (no sampling), so the guard's decision is
   * deterministic.
+  *
+  * Pricing plan: [[maxDocBytes]] prices a batch of roots in ONE plan:
+  * each root's per-document estimate carries an observed `max` (an
+  * [[org.apache.spark.sql.Observation]], accumulated inside the
+  * estimate's own last stage), and one no-op write drains the union of
+  * the estimates. A batch of n roots is one plan, not n, with no
+  * shuffle or stage for the maxima; a single root is a batch of one.
   */
 class DocSizeAudit(
     spark: SparkSession,
@@ -80,12 +87,23 @@ class DocSizeAudit(
     annotated.select(pkSelect :+ col(DocBytesCol).as("est_doc_bytes"): _*)
   }
 
-  /** Largest estimated document of one root tree (0 for an empty root
-    * table) — the scalar the budget guards compare.
+  /** Largest estimated document of each root tree (0 for an empty root
+    * table) — the scalar the budget guards compare. `maxDocBytes(root)`
+    * prices one root; `maxDocBytes.prices(roots)` prices a batch in one
+    * plan (class Scaladoc). Nothing is remembered between calls.
     */
-  def maxDocBytes(root: CollectionNode): Long = {
-    val r = estimateRoot(root).agg(max(col("est_doc_bytes"))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+  val maxDocBytes: DocPricer = new DocPricer {
+    def apply(root: CollectionNode): Long = prices(Seq(root)).head
+    override def prices(roots: Seq[CollectionNode]): Seq[Long] =
+      if (roots.isEmpty) Seq.empty
+      else {
+        val maxes = roots.map(_ => Observation())
+        roots.zip(maxes).map { case (r, m) =>
+          estimateRoot(r).select(col("est_doc_bytes"))
+            .observe(m, max(col("est_doc_bytes")).as("max"))
+        }.reduce(_ union _).write.format("noop").mode("overwrite").save()
+        maxes.map(m => Option(m.get("max")).fold(0L)(_.asInstanceOf[Long]))
+      }
   }
 
   /** Whole-schema audit: one row per root collection —

@@ -80,6 +80,16 @@ object ConversionKind {
   case object TwoWayEmbedded extends ConversionKind { val label = "two_way_embedded" }
 }
 
+/** The document-size price of root collections: `apply` prices one
+  * root, `prices` a batch of roots, in order. The default batch prices
+  * each root alone, so any `CollectionNode => Long` function literal is
+  * a pricer; [[graft.map.DocSizeAudit.maxDocBytes]] prices a whole batch
+  * in one Spark plan.
+  */
+trait DocPricer extends (CollectionNode => Long) {
+  def prices(roots: Seq[CollectionNode]): Seq[Long] = roots.map(this)
+}
+
 /** A node of the document-schema tree — the analog of the reference's
   * `Collection` (server/models/Collection.js:1-19). `attributes` is
   * name-only (the reference carries no types; Spark infers them from the
@@ -158,6 +168,23 @@ final case class CollectionNode(
   * (reference: server/models/NoSQLDatabase.js:3-28).
   */
 final case class DocumentSchema(name: String, roots: Seq[CollectionNode]) {
+
+  /** Each root's largest estimated document in bytes, aligned with
+    * `roots`, when the document-size budget step priced them
+    * ([[withRootPrices]]); None otherwise. Not part of equality, and
+    * `copy` drops it: a changed schema is priced again.
+    */
+  def rootPrices: Option[Seq[Long]] = prices
+  private var prices: Option[Seq[Long]] = None
+
+  /** This schema carrying `rootPrices`, one per root, in root order. */
+  def withRootPrices(rootPrices: Seq[Long]): DocumentSchema = {
+    require(rootPrices.size == roots.size,
+      s"${rootPrices.size} prices for ${roots.size} roots")
+    val priced = copy()
+    priced.prices = Some(rootPrices)
+    priced
+  }
 
   /** BFS across all roots — mirrors the reference's `getCollection`
     * (server/models/NoSQLDatabase.js:14-27), which returns the *first*

@@ -145,7 +145,12 @@ object Embedding {
       // the caller's keys would leave ties in shuffle-arrival order
       // (Spark's sort is not stable) whenever a sort key is not unique
       // per group; trailing attrs cost comparator time only on ties.
-      graft.plans.NestCollect.nest(child, key, ordered, ordered, outName)
+      // Null keys drop before nesting: the embedding joins on the key,
+      // so a null-keyed group never matches, and nested rows whose key
+      // is known non-null need no null filter — a whole-row copy stage
+      // — between the nesting and the join.
+      graft.plans.NestCollect.nest(
+        child.filter(col(key).isNotNull), key, ordered, ordered, outName)
   }
 
   /** Empty embedded array → null, so the JSON sink omits the key

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Attribut
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 
 /** Order-preserving grouped nesting (`group rows by FK into a sorted
@@ -33,16 +33,17 @@ import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
   *     practice at sf0.001 (150 grouped keys in one coalesced
   *     partition).
   *
-  * This operator instead *declares* its needs to the planner —
+  * This operator instead *declares* its distribution to the planner —
   * `requiredChildDistribution` = cluster by FK (one exchange, same as
-  * the aggregate), `requiredChildOrdering` = (FK, sortKeys) (one local
-  * Tungsten sort of narrow keys) — and then streams each partition in a
-  * single pass, cutting an array at every FK boundary. No hash map, no
-  * fallback path, no comparator over the collected structs; order is
-  * guaranteed by the operator contract rather than by unspecified
-  * aggregate-iteration behavior. Memory is bounded by the largest
-  * single group (inherent to materializing a document array — the skew
-  * escape hatch is [[graft.operators.Embedding.oneWayEmbedSalted]]).
+  * the aggregate) — sorts each partition by (FK, sortKeys) itself (one
+  * local Tungsten sort, the FK as its key prefix), and then streams the
+  * partition in a single pass, cutting an array at every FK boundary.
+  * No hash map, no fallback path, no comparator over the collected
+  * structs; order is guaranteed by the operator contract rather than
+  * by unspecified aggregate-iteration behavior. Memory is bounded by
+  * the largest single group (inherent to materializing a document
+  * array — the skew escape hatch is
+  * [[graft.operators.Embedding.oneWayEmbedSalted]]).
   */
 case class NestCollect(
     groupBy: Seq[Expression],
@@ -81,10 +82,6 @@ case class NestCollectExec(
   // One clustering exchange (the same one the aggregate form needs)...
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(groupBy) :: Nil
-  // ...plus a local sort on (fk, sortKeys) — narrow-key Tungsten radix
-  // sort, inserted by EnsureRequirements only when not already satisfied.
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
-    (groupBy.map(SortOrder(_, Ascending)) ++ sortOrder) :: Nil
 
   // group-local operator: the clustering stays visible downstream (the
   // parent join on the FK must not re-shuffle this side), as does the
@@ -100,7 +97,13 @@ case class NestCollectExec(
     val schema = child.output
     val numOut = groupByLocal.size + 1
     val outType = outAttr.dataType
-    child.execute().mapPartitions({ rows =>
+    // ...plus a local sort on (fk, sortKeys): the Tungsten sorter, run
+    // here rather than as a planned `Sort` — a planned one is a
+    // whole-stage-codegen stage of its own, one more generated class
+    // per nesting level for a loop that only hands the sorter's rows on.
+    val sorted = SortExec(groupBy.map(SortOrder(_, Ascending)) ++ sortOrder,
+      global = false, child).execute()
+    sorted.mapPartitions({ rows =>
       val keyProj = UnsafeProjection.create(groupByLocal, schema)
       val docProj = UnsafeProjection.create(docExprsLocal, schema)
       val resultProj = UnsafeProjection.create(

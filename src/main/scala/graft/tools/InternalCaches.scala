@@ -164,6 +164,11 @@ object InternalCaches {
   def liveCount(spark: SparkSession): Int =
     entries.keys.count(_._1 == spark.sparkContext.applicationId)
 
+  /** Number of tracked broadcasts of this session ([[trackBroadcast]];
+    * test observability). */
+  def trackedBroadcasts(spark: SparkSession): Int =
+    broadcasts.keys.count(_._1 == spark.sparkContext.applicationId)
+
   /** The input-file snapshot of every live internal cache entry of this
     * session (test observability; None where enumeration failed).
     */

@@ -169,6 +169,26 @@ class CrashPointSpec extends SparkSpec {
 
   enumerate("events first fold")(_ => ())(fold(_, batch1))(sessionView)
 
+  test("events first fold: a state write cut off inside its parquet write is redone, not promoted") {
+    val ref = Files.createTempDirectory("graft_crash_ref").toString
+    fold(ref, batch1)
+    val d = Files.createTempDirectory("graft_crash_next").toString
+    fold(d, batch1)
+    // the crash: the closed partition committed, and the first state
+    // write into state.next stopped before its job commit — the part
+    // files still in the write's _temporary staging, no _SUCCESS, and
+    // no state (nor .old) at all
+    val next = java.nio.file.Paths.get(s"$d/state.next")
+    Files.move(java.nio.file.Paths.get(s"$d/state"), next)
+    val staging = Files.createDirectories(next.resolve("_temporary/0/task_0"))
+    Files.list(next).iterator().asScala.toList.filter(Files.isRegularFile(_)).foreach { p =>
+      if (p.getFileName.toString.contains("_SUCCESS")) Files.delete(p)
+      else Files.move(p, staging.resolve(p.getFileName))
+    }
+    fold(d, batch1)
+    assert(sessionView(d) === sessionView(ref))
+  }
+
   enumerate("events fold")(fold(_, batch1))(fold(_, batch2))(sessionView)
 
   enumerate("events erase")(d => { fold(d, batch1); fold(d, batch2) })(d =>

@@ -131,6 +131,44 @@ class DocSizeAuditSpec extends SparkSpec {
     assert(calls.size === 8, "2 demoted roots, 2 demoted copies, 4 roots that fit")
   }
 
+  test("the batch price of every root and hoisted node equals its estimate's max") {
+    val (a, db, schema) = audit(sf)
+    // the decided roots, region demoted once (bare region, nation hoisted
+    // with its subtree), and every node hoisted bare (a 1-byte budget
+    // demotes all the way down)
+    val roots = (schema.roots ++
+      SchemaConverter.enforceDocBudget(db, schema, a.maxDocBytes, 20000L)._1.roots ++
+      SchemaConverter.enforceDocBudget(db, schema, a.maxDocBytes, 1L)._1.roots).distinct
+    assert(roots.size === 9)
+    val want = roots.map { r =>
+      a.estimateRoot(r).agg(max(col("est_doc_bytes"))).head().getLong(0)
+    }
+    assert(a.maxDocBytes.prices(roots) === want)
+    assert(roots.map(a.maxDocBytes(_)) === want, "a single root is a batch of one")
+  }
+
+  test("an empty root table prices 0, in a batch and alone") {
+    val (db, schema) = MigrationPipeline.converted(spark, sf)
+    val emptyPart = new DocSizeAudit(spark, sf, db, (s, dir, t) =>
+      if (t == "part") graft.sources.Tables.load(s, dir, t).limit(0)
+      else graft.sources.Tables.load(s, dir, t))
+    val full = new DocSizeAudit(spark, sf, db)
+    val prices = emptyPart.maxDocBytes.prices(schema.roots)
+    schema.roots.zip(prices).zip(full.maxDocBytes.prices(schema.roots)).foreach {
+      case ((r, p), f) =>
+        if (r.name == "part") assert(p === 0L) else assert(p === f && p > 0L, r.name)
+    }
+    assert(emptyPart.maxDocBytes(schema.roots.find(_.name == "part").get) === 0L)
+  }
+
+  test("enforceDocBudget returns its roots' prices; a changed schema carries none") {
+    val (a, db, schema) = audit(sf)
+    val (adjusted, _) = SchemaConverter.enforceDocBudget(db, schema, a.maxDocBytes, 20000L)
+    assert(adjusted.rootPrices === Some(a.maxDocBytes.prices(adjusted.roots)))
+    assert(adjusted.copy().rootPrices.isEmpty, "a copy is priced again")
+    assert(schema.rootPrices.isEmpty)
+  }
+
   test("summary audits every root with document counts") {
     val (a, _, schema) = audit(sf)
     val rows = a.summary(schema, budgetBytes = 20000L).collect()

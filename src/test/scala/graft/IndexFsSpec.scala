@@ -50,6 +50,46 @@ class IndexFsSpec extends SparkSpec {
     assert(!IndexFs.recover(spark, live, s"$live.compact"), "recovery is one-shot")
   }
 
+  test("recover deletes a tmp cut off inside its own write, and promotes a finished one") {
+    val root = Files.createTempDirectory("graft_swap_unfinished").toString
+    val live = s"$root/state"
+    val tmp = s"$live.next"
+    Seq(1L, 2L).toDF("v").write.parquet(tmp)
+    // no live copy and no .old: only the write itself shows whether tmp
+    // is whole — a finished write is promoted (a first swap's crash)
+    assert(IndexFs.recover(spark, live, tmp), "a finished tmp must be promoted")
+    assert(spark.read.parquet(live).count() === 2)
+    // the write cut off before its job commit: staging still present
+    IndexFs.delete(spark, live)
+    Seq(3L).toDF("v").write.parquet(tmp)
+    Files.delete(java.nio.file.Paths.get(tmp, "_SUCCESS"))
+    Files.createDirectories(java.nio.file.Paths.get(tmp, "_temporary", "0"))
+    assert(!IndexFs.recover(spark, live, tmp), "an unfinished tmp must not be promoted")
+    assert(!IndexFs.exists(spark, live) && !IndexFs.exists(spark, tmp),
+      "the unfinished tmp is deleted, for the verb to write again")
+  }
+
+  test("carry copies again a destination file a crash cut short, and only that one") {
+    val root = Files.createTempDirectory("graft_carry").toString
+    val from = java.nio.file.Paths.get(root, "from")
+    val to = java.nio.file.Paths.get(root, "to")
+    Files.createDirectories(from)
+    Files.createDirectories(to)
+    val bytes = Map("a" -> 700, "b" -> 900, "c" -> 300).map { case (n, len) =>
+      n -> Array.tabulate[Byte](len)(i => (i % 127).toByte) }
+    bytes.foreach { case (n, b) => Files.write(from.resolve(n), b) }
+    Files.write(to.resolve("a"), bytes("a"))
+    Files.write(to.resolve("b"), bytes("b").take(64))
+    val copies = scala.collection.mutable.ArrayBuffer.empty[String]
+    IndexFs.beforeMutation = copies += _
+    try IndexFs.carry(spark, from.toString, to.toString)
+    finally IndexFs.beforeMutation = _ => ()
+    assert(copies.size === 2, s"the whole copy of a is kept: $copies")
+    bytes.foreach { case (n, b) =>
+      assert(Files.readAllBytes(to.resolve(n)).sameElements(b), s"$n differs after carry")
+    }
+  }
+
   test("swap promotes .compact and drops .old") {
     val root = Files.createTempDirectory("graft_swap2").toString
     val live = s"$root/table"

@@ -68,6 +68,22 @@ class InternalCachesSpec extends SparkSpec {
     InternalCaches.release(spark)
   }
 
+  test("the Bloom span screen leaves no tracked broadcast behind, batch after batch") {
+    val idx = java.nio.file.Files.createTempDirectory("graft_bloom_bc").toString
+    graft.ext.Dedup.writeGramIndexBucketed(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog"),
+      (2L, "completely different historical content here")).toDF("doc_id", "text"),
+      idx, k = 3, buckets = 4)
+    val before = InternalCaches.trackedBroadcasts(spark)
+    (1 to 4).foreach { i =>
+      val batch = Seq((10L + i, s"batch $i says the quick brown fox jumps"))
+        .toDF("doc_id", "text")
+      assert(graft.ext.Dedup.duplicateSpansAgainstIndexBloom(batch, idx, k = 3)
+        .count() === 1, s"batch $i keeps its one copied span")
+    }
+    assert(InternalCaches.trackedBroadcasts(spark) === before)
+  }
+
   test("release unpersists tracked broadcasts without killing held frames") {
     val bc = InternalCaches.trackBroadcast(spark,
       spark.sparkContext.broadcast(Array(1L, 2L, 3L)))

@@ -18,13 +18,14 @@ import graft.workload.LogPipeline
   * layer. Every plan costs planning, code generation and job scheduling
   * whatever its data, so a layer that starts probing again (an
   * emptiness check before a write, a count query for row counts, a
-  * second pricing query per root) shows up here before it shows up as
-  * CPU time.
+  * pricing query per root or a guard that prices again what the budget
+  * priced) shows up here before it shows up as CPU time.
   */
 class MigrationPlanCountSpec extends SparkSpec {
   import spark.implicits._
 
-  test("a migration plans nothing to introspect, one guard plan per root, one write per collection") {
+  test("a migration plans nothing to introspect, one pricing plan per budget round, " +
+      "no guard plan, one write per collection") {
     val executions = new AtomicInteger
     val l = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -50,13 +51,19 @@ class MigrationPlanCountSpec extends SparkSpec {
         LogPipeline.applyWorkload(db0,
           LogPipeline.workloadStats(LogPipeline.tableMentions(stmts), rowCounts))
       }
-      val (schema, demotions) = SchemaConverter.enforceDocBudget(
-        db, SchemaConverter.convert(db), new DocSizeAudit(spark, sf, db).maxDocBytes, budget)
+      val ((schema, demotions), priced) = layer(SchemaConverter.enforceDocBudget(
+        db, SchemaConverter.convert(db), new DocSizeAudit(spark, sf, db).maxDocBytes, budget))
       assert(demotions === Seq("region" -> Seq("nation")))
+      // one round prices the decided roots, the next the two its
+      // demotion made
+      assert(priced === 2)
       val (frames, guarded) = layer(new DataMapper(spark, sf, db).mapAllGuarded(schema, budget))
+      // a schema the budget never priced costs the guard one plan
+      val (_, unpriced) = layer(new DataMapper(spark, sf, db).mapAllGuarded(schema.copy(), budget))
       val (written, sunk) = layer(JsonSink.write(frames, out))
       assert(introspected === 0)
-      assert(guarded === schema.roots.size)
+      assert(guarded === 0, "the guard reads the budget's prices")
+      assert(unpriced === 1)
       assert(written === schema.roots.map(_.name), "every collection is non-empty")
       assert(sunk === written.size)
     } finally spark.listenerManager.unregister(l)
