@@ -99,18 +99,15 @@ object SchemaConverter {
     def attributesFor(t: TableMeta, kind: ConversionKind, otherParent: Option[(TableMeta, String)]): Seq[String] =
       kind match {
         case ConversionKind.Root => t.columns
-        case ConversionKind.Referencing =>
-          val fkCols = t.foreignKeys.map(_.columnName).toSet
-          t.columns.map(c => if (fkCols.contains(c)) c + "_REF" else c)
-        case ConversionKind.OneWayEmbedded =>
-          t.columns.filterNot(t.foreignKeys.map(_.columnName).contains)
+        case ConversionKind.Referencing => t.referencingFields
+        case ConversionKind.OneWayEmbedded => t.columns.filterNot(t.fkColumns.contains)
         case ConversionKind.TwoWayEmbedded =>
           // child attrs minus both FKs ++ other parent attrs minus its
           // referenced key (server/DBMigration.js:304-309); a name
           // collision yields ONE document field holding the other
           // parent's value (JS overwrite — :563-569), so dedupe
           val (other, refCol) = otherParent.get
-          (t.columns.filterNot(t.foreignKeys.map(_.columnName).contains) ++
+          (t.columns.filterNot(t.fkColumns.contains) ++
             other.columns.filterNot(_ == refCol)).distinct
       }
 
@@ -219,15 +216,9 @@ object SchemaConverter {
       maxDocBytes: DocPricer,
       budgetBytes: Long): (DocumentSchema, Seq[(String, Seq[String])]) = {
     val priced = scala.collection.mutable.HashMap.empty[CollectionNode, Long]
-    def referencingNode(n: CollectionNode): CollectionNode = {
-      val t = db(n.name)
-      val fkCols = t.foreignKeys.map(_.columnName).toSet
-      n.copy(
-        kind = ConversionKind.Referencing,
-        attributes = t.columns.map(c => if (fkCols.contains(c)) c + "_REF" else c),
-        embeddedAttributesFrom = None,
-        parentFkColumn = None)
-    }
+    def referencingNode(n: CollectionNode): CollectionNode =
+      n.copy(kind = ConversionKind.Referencing, attributes = db(n.name).referencingFields,
+        embeddedAttributesFrom = None, parentFkColumn = None)
     var cur = schema
     val log = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[String])]
     var progress = true
@@ -252,13 +243,4 @@ object SchemaConverter {
           "own rows are too large for the target store"))
     (cur.withRootPrices(cur.roots.map(priced)), log.toSeq)
   }
-
-  /** Run the whole conversion with the document-size budget enforced —
-    * [[convert]] then [[enforceDocBudget]] in one call.
-    */
-  def convertWithBudget(
-      db: DatabaseMeta,
-      maxDocBytes: DocPricer,
-      budgetBytes: Long): (DocumentSchema, Seq[(String, Seq[String])]) =
-    enforceDocBudget(db, convert(db), maxDocBytes, budgetBytes)
 }

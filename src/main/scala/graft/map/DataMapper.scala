@@ -12,10 +12,12 @@ import graft.sources.Tables
   * The reference recurses top-down, issuing one full scan per tree node
   * and one point-lookup SQL query per parent row
   * (server/DBMigration.js:405-498, :524-575) — O(rows × depth) network
-  * round trips. Here the recursion becomes a bottom-up fold: deepest
-  * children first, each level exactly one shuffle
-  * (`groupBy(fk).agg(collect_list(struct(...)))`) plus one join, with no
-  * per-row boundary crossings. Tables referenced by multiple tree nodes
+  * round trips. Here the recursion becomes a bottom-up fold over the
+  * tree's edges, resolved by [[DocTree]] exactly as [[DocSizeAudit]]
+  * prices them: deepest children first, each level exactly one shuffle
+  * (the child grouped by its FK into an ordered array of documents,
+  * [[Embedding.oneWayEmbed]]) plus one join, with no per-row boundary
+  * crossings. Tables referenced by multiple tree nodes
   * are read once per node from Parquet (cheap — columnar scan with
   * pruning); at cluster scale each level's shuffle partitions by the FK.
   * Skewed parents are handled by the level itself: every embedding level
@@ -95,43 +97,22 @@ class DataMapper(
   }
 
   /** Build one root collection's nested DataFrame. */
-  def mapRoot(root: CollectionNode): DataFrame = {
-    val meta = db(root.name)
-    val base = root.kind match {
-      case ConversionKind.Referencing =>
-        Embedding.renameFkRefs(load(root.name), meta.foreignKeys.map(_.columnName))
-      case _ => load(root.name)
-    }
-    nestChildren(base, root)
-  }
+  def mapRoot(root: CollectionNode): DataFrame =
+    nestChildren(DocTree.rootFrame(db, root, load), root)
 
-  /** Recursively nest `node`'s embedded children into `df`. `df` must
-    * still carry the join column each child's FK references.
+  /** Nest `node`'s embedded children into `df`, deepest first: each
+    * edge's child frame ([[DocTree.Edge.frame]]) gets its own children
+    * nested, then folds into one array column of `df`. `df` must still
+    * carry the column each edge's FK references.
     */
   private def nestChildren(df: DataFrame, node: CollectionNode): DataFrame =
-    node.embedded.foldLeft(df) { (parentDf, child) =>
-      val childMeta = db(child.name)
-      // Bind by the recorded FK column when present (required when both
-      // of a junction's FKs reference the same parent table); fall back
-      // to referenced-table lookup for hand-built trees.
-      val fkToParent = child.parentFkColumn
-        .flatMap(c => childMeta.foreignKeys.find(_.columnName == c))
-        .orElse(childMeta.foreignKeys.find(_.referencedTable == node.name))
-        .getOrElse(throw new IllegalStateException(
-          s"${child.name} embedded under ${node.name} without an FK to it"))
-      val childDf = buildChild(child, fkToParent)
-      // Two-way children had their FK-to-parent moved to the reserved
-      // grouping column by joinOtherParent.
-      val groupCol =
-        if (childDf.columns.contains(Embedding.ParentFkCol)) Embedding.ParentFkCol
-        else fkToParent.columnName
-      // Sort the embedded array by the child's surviving PK columns so
-      // output is deterministic under parallelism.
-      val dropped = childMeta.foreignKeys.map(_.columnName).toSet
-      val sortKeys = childMeta.primaryKeys.filterNot(dropped.contains) match {
-        case Seq() => childDf.columns.toSeq.intersect(childMeta.columns).take(1)
-        case pks => pks
-      }
+    DocTree.edges(db, node).foldLeft(df) { (parentDf, e) =>
+      val childMeta = db(e.child.name)
+      val childDf = nestChildren(e.frame(load), e.child)
+      // Arrays order by the child's surviving PK columns first, then by
+      // every other document field, so output is deterministic under
+      // parallelism — also for a junction whose PK columns are all FKs.
+      val sortKeys = childMeta.primaryKeys.filterNot(childMeta.fkColumns.contains)
       // The auto path: a sampled fan-out pre-pass decides plain vs
       // salted per level. Control-plane short-circuit first: the
       // introspected row count upper-bounds any key's fan-out (the
@@ -141,33 +122,9 @@ class DataMapper(
       // entirely — at sf-scale testing no pre-pass runs at all; at
       // 100 TB it runs only on the levels where it could matter.
       if (childMeta.numOfRows < hotFanout)
-        Embedding.oneWayEmbed(
-          parentDf, fkToParent.referencedColumn, childDf,
-          groupCol, child.name, sortKeys)
+        Embedding.oneWayEmbed(parentDf, e.parentKey, childDf, e.groupCol, e.child.name, sortKeys)
       else
-        Embedding.oneWayEmbedAuto(
-          parentDf, fkToParent.referencedColumn, childDf,
-          groupCol, child.name, sortKeys,
-          hotFanout = hotFanout, sampleFraction = sampleFraction)
+        Embedding.oneWayEmbedAuto(parentDf, e.parentKey, childDf, e.groupCol, e.child.name,
+          sortKeys, hotFanout = hotFanout, sampleFraction = sampleFraction)
     }
-
-  /** Build a child's (pre-nesting) DataFrame: source rows, two-way
-    * enrichment with the other parent's attributes if applicable, then
-    * its own embedded children, keeping `fkToParent` for the group-by.
-    */
-  private def buildChild(child: CollectionNode, fkToParent: ForeignKeyMeta): DataFrame = {
-    val meta = db(child.name)
-    var df = load(child.name)
-    child.embeddedAttributesFrom.foreach { otherTable =>
-      val fkToOther = meta.foreignKeys
-        .find(fk => fk.referencedTable == otherTable && fk != fkToParent)
-        .getOrElse(throw new IllegalStateException(
-          s"${child.name}: no FK to two-way other parent $otherTable"))
-      df = Embedding.joinOtherParent(
-        df, fkToParent.columnName, fkToOther.columnName,
-        load(otherTable), fkToOther.referencedColumn)
-    }
-    nestChildren(df, child)
-  }
-
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model._
-import graft.operators.Embedding
 import graft.sources.Tables
 
 /** x70 — document-size pre-flight audit: estimate the serialized size of
@@ -43,6 +42,10 @@ import graft.sources.Tables
   * omits the key entirely (`Embedding.emptyToNull` + JSON-sink
   * omission, reference server/DBMigration.js:515-517).
   *
+  * The tree's edges, the child frames and their group columns come from
+  * [[DocTree]], the same resolution the build uses, so the audit prices
+  * the documents [[DataMapper]] makes.
+  *
   * Scale shape: one aggregate + one join per tree edge, shuffling
   * (key, long) pairs; at 100 TB each level partitions by the same FK the
   * build would use, with map-side partial sums. The estimate is exact
@@ -68,23 +71,18 @@ class DocSizeAudit(
 
   /** Per-document estimate for one root: the root table's primary-key
     * columns (original names, even for Referencing roots whose FK-PK
-    * columns the build renames `_REF`) plus `est_doc_bytes`.
+    * columns the build stores in the referencing shape) plus
+    * `est_doc_bytes`.
     */
   def estimateRoot(root: CollectionNode): DataFrame = {
     val meta = db(root.name)
-    val fkCols = meta.foreignKeys.map(_.columnName).toSet
-    val renamed = root.kind == ConversionKind.Referencing
-    // mirror the build's field names: a Referencing root's FK columns
-    // serialize as `c_REF` (4 extra name bytes each)
-    val base =
-      if (renamed) Embedding.renameFkRefs(load(root.name), meta.foreignKeys.map(_.columnName))
-      else load(root.name)
-    val annotated = annotate(base, root, excluded = Set.empty)
-    val pkSelect = meta.primaryKeys.map { pk =>
-      val c = if (renamed && fkCols.contains(pk)) pk + "_REF" else pk
-      col(c).as(pk)
-    }
-    annotated.select(pkSelect :+ col(DocBytesCol).as("est_doc_bytes"): _*)
+    // the build's field names: a Referencing root's FK columns serialize
+    // as `c_REF` (4 extra name bytes each)
+    val field: String => String =
+      if (root.kind == ConversionKind.Referencing) meta.referencingField else identity
+    annotate(DocTree.rootFrame(db, root, load), root, excluded = Set.empty)
+      .select(meta.primaryKeys.map(pk => col(field(pk)).as(pk)) :+
+        col(DocBytesCol).as("est_doc_bytes"): _*)
   }
 
   /** Largest estimated document of each root tree (0 for an empty root
@@ -122,41 +120,21 @@ class DocSizeAudit(
     }.reduce(_ unionByName _)
 
   /** Add [[DocBytesCol]] = full per-row document bytes (own fields plus
-    * all embedded subtrees). `excluded` names columns that are NOT part
-    * of the document at this level (the group-by FK the build drops).
-    * Same tree walk and FK resolution as [[DataMapper]] — the audit must
-    * price exactly the document the mapper would build.
+    * all embedded subtrees), folding each [[DocTree]] edge into a byte
+    * sum where [[DataMapper]] folds it into an array. `excluded` names
+    * columns that are NOT part of the document at this level (the
+    * group-by FK the build drops).
     */
   private def annotate(df: DataFrame, node: CollectionNode, excluded: Set[String]): DataFrame = {
     var cur = df
-    val contribCols = node.embedded.zipWithIndex.map { case (child, i) =>
-      val childMeta = db(child.name)
-      val fkToParent = child.parentFkColumn
-        .flatMap(c => childMeta.foreignKeys.find(_.columnName == c))
-        .orElse(childMeta.foreignKeys.find(_.referencedTable == node.name))
-        .getOrElse(throw new IllegalStateException(
-          s"${child.name} embedded under ${node.name} without an FK to it"))
-      var childDf = load(child.name)
-      child.embeddedAttributesFrom.foreach { otherTable =>
-        val fkToOther = childMeta.foreignKeys
-          .find(fk => fk.referencedTable == otherTable && fk != fkToParent)
-          .getOrElse(throw new IllegalStateException(
-            s"${child.name}: no FK to two-way other parent $otherTable"))
-        childDf = Embedding.joinOtherParent(
-          childDf, fkToParent.columnName, fkToOther.columnName,
-          load(otherTable), fkToOther.referencedColumn)
-      }
-      val groupCol =
-        if (childDf.columns.contains(Embedding.ParentFkCol)) Embedding.ParentFkCol
-        else fkToParent.columnName
-      val childAnnotated = annotate(childDf, child, Set(groupCol))
+    val contribCols = DocTree.edges(db, node).zipWithIndex.map { case (e, i) =>
       val contribName = s"__graft_contrib_$i"
-      val contrib = childAnnotated
-        .groupBy(col(groupCol).as("__graft_ck"))
-        .agg((lit(7L + utf8Len(child.name)) +
+      val contrib = annotate(e.frame(load), e.child, Set(e.groupCol))
+        .groupBy(col(e.groupCol).as("__graft_ck"))
+        .agg((lit(7L + utf8Len(e.child.name)) +
           sum(lit(4L) + col(DocBytesCol))).as(contribName))
       cur = cur
-        .join(contrib, cur(fkToParent.referencedColumn) === contrib("__graft_ck"), "left")
+        .join(contrib, cur(e.parentKey) === contrib("__graft_ck"), "left")
         .drop("__graft_ck")
       contribName
     }

@@ -55,6 +55,31 @@ final case class TableMeta(
     uaf: Long = 0L) {
   def numOfForeignKeys: Int = foreignKeys.size
   def isSelfReferencing: Boolean = foreignKeys.exists(_.referencedTable == name)
+  def fkColumns: Seq[String] = foreignKeys.map(_.columnName)
+
+  /** A column's field name when this table is kept as a Referencing
+    * collection: [[TableMeta.refField]] for an FK column, its own name
+    * for any other. */
+  def referencingField(column: String): String =
+    if (fkColumns.contains(column)) TableMeta.refField(column) else column
+
+  /** This table's document fields as a Referencing collection, in
+    * column order. */
+  def referencingFields: Seq[String] = columns.map(referencingField)
+
+  /** The column a Referencing collection's field holds: the inverse of
+    * [[referencingField]]. */
+  def referencingSource(field: String): String =
+    fkColumns.find(TableMeta.refField(_) == field).getOrElse(field)
+}
+
+object TableMeta {
+  /** P3 — the referencing shape: a Referencing collection stores each FK
+    * column `c` as the field `c_REF`, values unchanged
+    * (server/DBMigration.js:319-333; golden collection7.json
+    * `orderId_REF: 10248`).
+    */
+  def refField(fkColumn: String): String = fkColumn + "_REF"
 }
 
 /** Introspected relational database + the workload threshold `maf`
@@ -70,7 +95,8 @@ sealed trait ConversionKind { def label: String }
 object ConversionKind {
   /** 0-FK table → new root collection. */
   case object Root extends ConversionKind { val label = "root" }
-  /** Kept as top-level collection; FK columns renamed `c` → `c_REF`. */
+  /** Kept as top-level collection in the referencing shape
+    * ([[TableMeta.refField]]). */
   case object Referencing extends ConversionKind { val label = "referencing" }
   /** 1-FK table nested under its parent as an array of documents. */
   case object OneWayEmbedded extends ConversionKind { val label = "one_way_embedded" }

@@ -2,15 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.model.TableMeta
 
 /** The denormalization operators of the data plane (SURVEY.md §2.3).
   *
   * The reference computes every embedding with a driver-side nested loop —
   * one indexed `SELECT ... WHERE fk = ?` round-trip per outer row
   * (server/DBMigration.js:536-548, server/MySQLDBManager.js:284-312).
-  * Here each embedding level is exactly one shuffle
-  * (`groupBy(fk).agg(collect_list(struct(...)))`) plus one join, both
-  * planned by Catalyst: the child side shuffles on the FK, the parent
+  * Here each embedding level is exactly one shuffle (the child grouped
+  * by its FK into an ordered array of documents, [[nestByKey]]) plus one
+  * join, both planned by Catalyst: the child side shuffles on the FK, the parent
   * joins on its PK, and small parents are broadcast automatically. At
   * 100 TB the cost is O(data) with no per-row round trips; the one scale
   * hazard is per-parent array size (a parent with millions of children
@@ -29,9 +30,10 @@ object Embedding {
     * (server/DBMigration.js:515-517); Spark's JSON sink then omits null
     * fields, matching the reference's output byte shape.
     *
-    * @param childSortKeys columns (pre-drop) to order the embedded array
-    *   by, making output deterministic under parallelism; the reference
-    *   inherits source-scan order, which is unspecified — we pin it.
+    * @param childSortKeys columns (pre-drop) placed first in each
+    *   document and in its array order; every other document field
+    *   follows in column order ([[nestByKey]]). The reference inherits
+    *   source-scan order, which is unspecified — we pin it.
     */
   def oneWayEmbed(
       parent: DataFrame,
@@ -39,25 +41,10 @@ object Embedding {
       child: DataFrame,
       childFk: String,
       childName: String,
-      childSortKeys: Seq[String] = Seq.empty): DataFrame = {
-    val attrs = child.columns.filterNot(_ == childFk)
-    val nested = nestByKey(child, childFk, attrs, childName, childSortKeys)
-    parent
-      .join(nested, parent(parentKey) === nested(childFk), "left")
-      .drop(nested(childFk))
-      .withColumn(childName, emptyToNull(col(childName)))
-  }
+      childSortKeys: Seq[String] = Seq.empty): DataFrame =
+    attach(parent, parentKey, nestByKey(child, childFk, childSortKeys, childName),
+      childFk, childName)
 
-  /** J2 — two-way embedding join (server/DBMigration.js:282-317 schema,
-    * :524-575 data): junction table `child` has FKs to `parent` (the
-    * collection we are nesting under) and `otherParent`. Each embedded
-    * document is one `child ⋈ otherParent` match: child attributes minus
-    * *both* FK columns, plus the other parent's attributes minus its
-    * referenced key column. The fan-out is a genuine inner equi-join
-    * (golden collection2.json: salesorder docs under customer carry the
-    * shipper's companyName/phone). Result: `parent` with array column
-    * `childName`; empty arrays are omitted (null) as in J1.
-    */
   /** Reserved grouping-column name: the child's FK-to-parent is renamed
     * to this before the other-parent join, so an other-parent attribute
     * that happens to share the FK's name can survive into the documents
@@ -66,6 +53,16 @@ object Embedding {
     */
   private[graft] val ParentFkCol = "__graft_pfk"
 
+  /** J2 — two-way embedding join (server/DBMigration.js:282-317 schema,
+    * :524-575 data): junction table `child` has FKs to `parent` (the
+    * collection we are nesting under) and `otherParent`. Each embedded
+    * document is one `child ⋈ otherParent` match: child attributes minus
+    * *both* FK columns, plus the other parent's attributes minus its
+    * referenced key column. The fan-out is a genuine inner equi-join
+    * (golden collection2.json: salesorder docs under customer carry the
+    * shipper's companyName/phone). It is J1 over [[joinOtherParent]]'s
+    * rows, grouped by [[ParentFkCol]].
+    */
   def twoWayEmbed(
       parent: DataFrame,
       parentKey: String,
@@ -75,20 +72,15 @@ object Embedding {
       otherParent: DataFrame,
       otherKey: String,
       childName: String,
-      childSortKeys: Seq[String] = Seq.empty): DataFrame = {
-    val enriched = joinOtherParent(
-      child, childFkToParent, childFkToOther, otherParent, otherKey)
-    val attrs = enriched.columns.filterNot(_ == ParentFkCol)
-    val nested = nestByKey(enriched, ParentFkCol, attrs, childName, childSortKeys)
-    parent
-      .join(nested, parent(parentKey) === nested(ParentFkCol), "left")
-      .drop(nested(ParentFkCol))
-      .withColumn(childName, emptyToNull(col(childName)))
-  }
+      childSortKeys: Seq[String] = Seq.empty): DataFrame =
+    oneWayEmbed(parent, parentKey,
+      joinOtherParent(child, childFkToParent, childFkToOther, otherParent, otherKey),
+      ParentFkCol, childName, childSortKeys)
 
   /** The inner `child ⋈ otherParent` half of J2, exposed separately so the
-    * recursive mapper can enrich a child *before* nesting its own embedded
-    * children under it. Keeps `childFkToParent` (needed for the later
+    * document-tree walk ([[graft.map.DocTree.Edge.frame]]) can enrich a
+    * child *before* nesting its own embedded children under it. Moves
+    * `childFkToParent` to [[ParentFkCol]] (needed for the later
     * group-by), drops `childFkToOther` and the other parent's key.
     *
     * Name collisions (e.g. orderdetail.unitPrice vs product.unitPrice in
@@ -118,40 +110,52 @@ object Embedding {
       .drop(collisions.map(c => s"__graft_dup_$c").toSeq: _*)
   }
 
-  /** The nesting aggregate shared by J1/J2: group child rows by FK into a
-    * sorted array of structs — executed by the custom order-preserving
-    * operator [[graft.plans.NestCollect]] (one clustering exchange + one
-    * narrow-key local sort + a single streaming pass; see its Scaladoc
-    * for why neither `array_sort(collect_list)` nor
-    * sort-before-`collect_list` survives at scale).
+  /** The document fields of `child` grouped by `key`, in document
+    * order: the `sortKeys` present first, then every other field in
+    * column order. Arrays are ordered by ALL of them, keys first — the
+    * same total order the round-1 `array_sort` over the whole struct
+    * gave. Sorting only by the caller's keys would leave ties in
+    * shuffle-arrival order (Spark's sort is not stable) whenever a key
+    * is not unique per group, and empty keys order by every field;
+    * trailing fields cost comparator time only on ties. The field order
+    * is part of the document contract established in round 1 (and what
+    * the JSON sink emits), independent of how ordering is achieved.
+    */
+  private def docOrder(child: DataFrame, key: String, sortKeys: Seq[String]): Seq[String] = {
+    val attrs = child.columns.toSeq.filterNot(_ == key)
+    val keys = sortKeys.filter(attrs.contains)
+    keys ++ attrs.filterNot(keys.contains)
+  }
+
+  /** The nesting aggregate of J1/J2: group child rows by `key` into an
+    * array of structs in [[docOrder]] — executed by the custom
+    * order-preserving operator [[graft.plans.NestCollect]] (one
+    * clustering exchange + one narrow-key local sort + a single
+    * streaming pass; see its Scaladoc for why neither
+    * `array_sort(collect_list)` nor sort-before-`collect_list` survives
+    * at scale). Null keys drop before nesting: the embedding joins on
+    * the key, so a null-keyed group never matches, and nested rows whose
+    * key is known non-null need no null filter — a whole-row copy stage
+    * — between the nesting and the join.
     */
   private def nestByKey(
       child: DataFrame,
       key: String,
-      attrs: Seq[String],
-      outName: String,
-      sortKeys: Seq[String]): DataFrame = {
-    // Keep the sort keys first in the doc struct: the field order is part
-    // of the document contract established in round 1 (and what the JSON
-    // sink emits), independent of how ordering is achieved.
-    val keys = sortKeys.filter(attrs.contains)
-    val ordered = if (keys.isEmpty) attrs else keys ++ attrs.filterNot(keys.contains)
-    if (sortKeys.isEmpty) {
-      val doc = struct(ordered.map(col): _*)
-      child.groupBy(col(key)).agg(collect_list(doc).as(outName))
-    } else
-      // order by EVERY doc attr (keys first) — the same total order the
-      // round-1 array_sort over the whole struct gave. Sorting only by
-      // the caller's keys would leave ties in shuffle-arrival order
-      // (Spark's sort is not stable) whenever a sort key is not unique
-      // per group; trailing attrs cost comparator time only on ties.
-      // Null keys drop before nesting: the embedding joins on the key,
-      // so a null-keyed group never matches, and nested rows whose key
-      // is known non-null need no null filter — a whole-row copy stage
-      // — between the nesting and the join.
-      graft.plans.NestCollect.nest(
-        child.filter(col(key).isNotNull), key, ordered, ordered, outName)
+      sortKeys: Seq[String],
+      outName: String): DataFrame = {
+    val ordered = docOrder(child, key, sortKeys)
+    graft.plans.NestCollect.nest(
+      child.filter(col(key).isNotNull), key, ordered, ordered, outName)
   }
+
+  /** The tail every embedding shares: left-join the nested arrays to the
+    * parent on its key, drop the child's key and omit empty arrays. */
+  private def attach(parent: DataFrame, parentKey: String, nested: DataFrame,
+      key: String, childName: String): DataFrame =
+    parent
+      .join(nested, parent(parentKey) === nested(key), "left")
+      .drop(nested(key))
+      .withColumn(childName, emptyToNull(col(childName)))
 
   /** Empty embedded array → null, so the JSON sink omits the key
     * (reference: `if (res.length > 0)` — server/DBMigration.js:515-517).
@@ -159,20 +163,20 @@ object Embedding {
   private def emptyToNull(c: Column): Column = when(size(c) > 0, c)
 
   /** Skew-aware variant of the J1 nesting shuffle for the 100 TB path:
-    * a parent with millions of children turns the plain
-    * `groupBy(fk).agg(collect_list)` reduce task into a straggler (the
-    * partial-aggregation map side is fine — the hot key lands on ONE
-    * reducer). This salts the child rows into `salts` sub-groups, builds
-    * a PRE-SORTED chunk per (fk, salt) with [[graft.plans.NestCollect]]
-    * (the same narrow-key Tungsten sort + streaming cut as the normal
-    * path — no wide-struct comparator), then merges the k sorted chunks
-    * per parent with [[graft.functions.MergeSortedArrays]] in a second,
-    * `salts`-times-smaller shuffle: O(m·log k) comparator calls instead
-    * of the O(m·log m) full `array_sort(flatten(...))` re-sort. Output is
-    * identical to [[oneWayEmbed]] (arrays totally ordered by the doc
-    * struct's fields, sort keys first); the giant final row still
-    * exists — that is inherent to the reference's document model — but no
-    * single shuffle task is hot and no full-array re-sort runs.
+    * a parent with millions of children turns the plain nesting reduce
+    * task into a straggler (the hot key lands on ONE reducer). This
+    * salts the child rows into `salts` sub-groups by a hash of their
+    * document fields, builds a PRE-SORTED chunk per (fk, salt) with
+    * [[graft.plans.NestCollect]] (the same narrow-key Tungsten sort +
+    * streaming cut as the normal path — no wide-struct comparator), then
+    * merges the k sorted chunks per parent with
+    * [[graft.functions.MergeSortedArrays]] in a second, `salts`-times-
+    * smaller shuffle: O(m·log k) comparator calls instead of the
+    * O(m·log m) full `array_sort(flatten(...))` re-sort. Output is
+    * identical to [[oneWayEmbed]] (same [[docOrder]], same tail); the
+    * giant final row still exists — that is inherent to the reference's
+    * document model — but no single shuffle task is hot and no
+    * full-array re-sort runs.
     */
   def oneWayEmbedSalted(
       parent: DataFrame,
@@ -182,12 +186,9 @@ object Embedding {
       childName: String,
       childSortKeys: Seq[String],
       salts: Int = 16): DataFrame = {
-    require(childSortKeys.nonEmpty, "salted embedding needs sort keys for a deterministic merge")
-    val attrs = child.columns.toSeq.filterNot(_ == childFk)
-    val keys = childSortKeys.filter(attrs.contains)
-    val ordered = if (keys.isEmpty) attrs else keys ++ attrs.filterNot(keys.contains)
+    val ordered = docOrder(child, childFk, childSortKeys)
     val salted = child
-      .withColumn("__salt", pmod(hash(childSortKeys.map(col): _*), lit(salts)))
+      .withColumn("__salt", pmod(hash(ordered.map(col): _*), lit(salts)))
     val chunked = graft.plans.NestCollect
       .nestMulti(salted, Seq(childFk, "__salt"), ordered, ordered, "__chunk")
       .groupBy(col(childFk))
@@ -195,10 +196,7 @@ object Embedding {
       .select(col(childFk),
         graft.functions.MergeSortedArrays.merge_sorted_arrays(col("__chunks"))
           .as(childName))
-    parent
-      .join(chunked, parent(parentKey) === chunked(childFk), "left")
-      .drop(chunked(childFk))
-      .withColumn(childName, emptyToNull(col(childName)))
+    attach(parent, parentKey, chunked, childFk, childName)
   }
 
   /** Auto-salting J1: picks between [[oneWayEmbed]] and
@@ -220,9 +218,7 @@ object Embedding {
     * `hotFanout` ≥ 2/fraction threshold, so genuinely hot keys
     * (millions of children) are found with near-certainty; keys near
     * the threshold flip by sampling luck, which the identical-output
-    * contract makes safe. With empty `childSortKeys` the salted merge
-    * has no deterministic order to restore, so the plain path is used
-    * regardless (same rule as [[oneWayEmbedSalted]]'s require).
+    * contract makes safe.
     */
   def oneWayEmbedAuto(
       parent: DataFrame,
@@ -235,8 +231,7 @@ object Embedding {
       sampleFraction: Double = 0.001,
       salts: Int = 16): DataFrame = {
     require(hotFanout >= 1, "hotFanout must be >= 1")
-    if (childSortKeys.nonEmpty &&
-        estimateMaxFanout(child, childFk, sampleFraction) >= hotFanout)
+    if (estimateMaxFanout(child, childFk, sampleFraction) >= hotFanout)
       oneWayEmbedSalted(parent, parentKey, child, childFk, childName,
         childSortKeys, salts)
     else
@@ -260,10 +255,10 @@ object Embedding {
     if (m.isNullAt(0)) 0L else math.round(m.getLong(0) / fraction)
   }
 
-  /** P3 — referencing collections rename every FK column `c` → `c_REF`,
-    * values unchanged (server/DBMigration.js:319-333; golden
-    * collection7.json `orderId_REF: 10248`).
+  /** P3 — a referencing collection's rows: every FK column `c` renamed
+    * to its referencing field ([[graft.model.TableMeta.refField]]),
+    * values unchanged.
     */
   def renameFkRefs(df: DataFrame, fkColumns: Seq[String]): DataFrame =
-    fkColumns.foldLeft(df)((d, c) => d.withColumnRenamed(c, c + "_REF"))
+    fkColumns.foldLeft(df)((d, c) => d.withColumnRenamed(c, TableMeta.refField(c)))
 }

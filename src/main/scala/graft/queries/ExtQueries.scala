@@ -3464,7 +3464,7 @@ object ExtQueries {
              |GROUP BY source""".stripMargin)),
 
     // ---- x96: budget-enforced conversion decisions (round 12) --------
-    // q20 through the guarded standard flow: convertWithBudget demotes
+    // q20 through the guarded standard flow: enforceDocBudget demotes
     // any root whose largest priced document exceeds the budget
     // (children hoist to referencing roots, subtrees intact) and the
     // cascade repeats down the tree. 64 KB is chosen to exercise the

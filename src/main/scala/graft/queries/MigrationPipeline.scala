@@ -7,7 +7,7 @@ import graft.operators.Catalog
 import graft.sources.Tables
 import graft.workload.LogPipeline
 import graft.convert.SchemaConverter
-import graft.map.DataMapper
+import graft.map.{DataMapper, DocTree}
 
 /** The full migration pipeline (SURVEY.md §3.1) wired over the fixture
   * tables: introspect → workload analysis → schema conversion → data
@@ -174,16 +174,22 @@ object MigrationPipeline {
         col("n_rows"), col("n_nulls"), col("n_distinct_est"))
   }
 
+  /** The converted tree flattened depth-first, roots in order:
+    * (node, parent name, depth) — the rows of q20, x96 and x97. */
+  private def flatten(schema: DocumentSchema): Seq[(CollectionNode, Option[String], Int)] = {
+    def walk(n: CollectionNode, parent: Option[String], depth: Int)
+        : Seq[(CollectionNode, Option[String], Int)] =
+      (n, parent, depth) +: n.embedded.flatMap(walk(_, Some(n.name), depth + 1))
+    schema.roots.flatMap(walk(_, None, 0))
+  }
+
   /** Flatten the converted tree to (collection, kind, parent, depth) rows
     * for the decision-procedure query surface.
     */
   def decisions(spark: SparkSession, sfDir: String): DataFrame = {
     val (_, schema) = converted(spark, sfDir)
-    def walk(n: CollectionNode, parent: Option[String], depth: Int): Seq[(String, String, Option[String], Int)] =
-      (n.name, n.kind.label, parent, depth) +:
-        n.embedded.flatMap(c => walk(c, Some(n.name), depth + 1))
     import spark.implicits._
-    schema.roots.flatMap(r => walk(r, None, 0))
+    flatten(schema).map { case (n, parent, depth) => (n.name, n.kind.label, parent, depth) }
       .toDF("collection_name", "kind", "parent_name", "depth")
   }
 
@@ -203,12 +209,9 @@ object MigrationPipeline {
     val (_, schema, demotions) = convertedBudgeted(spark, sfDir, budgetBytes)
     val hoistedFrom = demotions
       .flatMap { case (root, children) => children.map(_ -> root) }.toMap
-    def walk(n: CollectionNode, parent: Option[String], depth: Int)
-        : Seq[(String, String, Option[String], Int, Option[String])] =
-      (n.name, n.kind.label, parent, depth, hoistedFrom.get(n.name)) +:
-        n.embedded.flatMap(c => walk(c, Some(n.name), depth + 1))
     import spark.implicits._
-    schema.roots.flatMap(r => walk(r, None, 0))
+    flatten(schema).map { case (n, parent, depth) =>
+      (n.name, n.kind.label, parent, depth, hoistedFrom.get(n.name)) }
       .toDF("collection_name", "kind", "parent_name", "depth", "hoisted_from")
   }
 
@@ -235,12 +238,9 @@ object MigrationPipeline {
     def forced(name: String): Boolean =
       nh.exists(_._1 == name) &&
         SchemaConverter.decide(db(name), db) != ConversionKind.Referencing
-    def walk(n: CollectionNode, parent: Option[String], depth: Int)
-        : Seq[(String, String, Option[String], Int, Boolean)] =
-      (n.name, n.kind.label, parent, depth, forced(n.name)) +:
-        n.embedded.flatMap(c => walk(c, Some(n.name), depth + 1))
     import spark.implicits._
-    schema.roots.flatMap(r => walk(r, None, 0))
+    flatten(schema).map { case (n, parent, depth) =>
+      (n.name, n.kind.label, parent, depth, forced(n.name)) }
       .toDF("collection_name", "kind", "parent_name", "depth", "advisory_forced")
   }
 
@@ -287,34 +287,21 @@ object MigrationPipeline {
       : Seq[(String, Option[String], String, String, String, String)] = {
     def structural(table: String, column: String): Boolean = {
       val t = db(table)
-      t.primaryKeys.contains(column) ||
-        t.foreignKeys.exists(_.columnName == column)
+      t.primaryKeys.contains(column) || t.fkColumns.contains(column)
     }
-    def rows(n: CollectionNode, parent: Option[String])
+    // `edge` is how `n` nests under `parent`; its FK to a two-way
+    // node's other parent names the one column of that parent not inlined
+    def rows(n: CollectionNode, parent: Option[String], edge: Option[DocTree.Edge])
         : Seq[(String, Option[String], String, String, String, String)] = {
       val t = db(n.name)
       val own = n.attributes.map { attr =>
-        // resolve the attribute to its source (table, column)
-        val (srcTable, srcCol) = n.embeddedAttributesFrom match {
-          case Some(otherName) =>
-            val other = db(otherName)
-            val refCol = t.foreignKeys
-              .filter(_.referencedTable == otherName)
-              .filterNot(fk => n.parentFkColumn.contains(fk.columnName))
-              .headOption.orElse(
-                t.foreignKeys.find(_.referencedTable == otherName))
-              .map(_.referencedColumn)
-            // two-way inline: the other parent's columns (minus its
-            // referenced key) win name collisions — the reference's
-            // JS-overwrite semantics (SchemaConverter.attributesFor)
-            if (other.columns.contains(attr) && !refCol.contains(attr))
-              (otherName, attr)
-            else (n.name, attr)
-          case None =>
-            if (attr.endsWith("_REF") &&
-                t.foreignKeys.exists(_.columnName == attr.stripSuffix("_REF")))
-              (n.name, attr.stripSuffix("_REF"))
-            else (n.name, attr)
+        // resolve the attribute to its source (table, column): a two-way
+        // node's inlined other-parent columns win name collisions — the
+        // reference's JS-overwrite semantics (SchemaConverter.attributesFor)
+        val (srcTable, srcCol) = edge.flatMap(_.toOther) match {
+          case Some(o) if o.referencedColumn != attr &&
+              db(o.referencedTable).columns.contains(attr) => (o.referencedTable, attr)
+          case _ => (n.name, t.referencingSource(attr))
         }
         val disposition =
           if (consts.contains((srcTable, srcCol)) && !structural(srcTable, srcCol))
@@ -322,9 +309,9 @@ object MigrationPipeline {
           else "field"
         (n.name, parent, attr, srcTable, srcCol, disposition)
       }
-      own ++ n.embedded.flatMap(ch => rows(ch, Some(n.name)))
+      own ++ DocTree.edges(db, n).flatMap(e => rows(e.child, Some(n.name), Some(e)))
     }
-    schema.roots.flatMap(r => rows(r, None))
+    schema.roots.flatMap(r => rows(r, None, None))
   }
 
   /** x106 — the `key_candidate` advisory wired into the conversion's

@@ -192,6 +192,42 @@ class DataMapperSpec extends SparkSpec {
       "x97 must reuse the profile scan templateFolded already registered")
   }
 
+  test("a junction whose PK columns are all FKs nests its arrays sorted by " +
+      "their document fields, whatever the input partitioning") {
+    import graft.model._
+    import spark.implicits._
+    // employeeterritory's shape: the PK is its two FKs, so after the
+    // two-way join no PK column survives into the embedded documents
+    def tm(name: String, cols: Seq[String], pks: Seq[String], fks: Seq[ForeignKeyMeta]) =
+      TableMeta(name, 4L, cols, pks, fks, isReferenced = fks.isEmpty,
+        referencingTables = if (fks.isEmpty) Seq("et") else Seq.empty)
+    val db = DatabaseMeta("t", Seq(
+      tm("employee", Seq("employeeId", "lastname"), Seq("employeeId"), Seq.empty),
+      tm("territory", Seq("territoryId", "tname"), Seq("territoryId"), Seq.empty),
+      tm("et", Seq("employeeId", "territoryId"), Seq("employeeId", "territoryId"),
+        Seq(ForeignKeyMeta("employeeId", "employee", "employeeId"),
+          ForeignKeyMeta("territoryId", "territory", "territoryId")))))
+    val territory = graft.convert.SchemaConverter.convert(db)
+      .roots.find(_.name == "territory").get
+    assert(territory.embedded.map(_.name) === Seq("et"))
+    val employee = Seq((1, "c"), (2, "a"), (3, "d"), (4, "b")).toDF("employeeId", "lastname")
+    val terr = Seq((1, "north"), (2, "south")).toDF("territoryId", "tname")
+    // four employees under territory 1, fed from ONE partition in
+    // descending document order, and the same rows spread over three
+    val desc = Seq((3, 1), (1, 1), (4, 1), (2, 1), (2, 2)).toDF("employeeId", "territoryId")
+      .coalesce(1)
+    val spread = desc.repartition(3, col("employeeId"))
+    def json(et: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val dfs = Map("employee" -> employee, "territory" -> terr, "et" -> et)
+      new graft.map.DataMapper(spark, "", db, (_, _, n) => dfs(n)).mapRoot(territory)
+        .orderBy("territoryId").toJSON.collect().toSeq
+    }
+    val a = json(desc)
+    assert(a.head === """{"territoryId":1,"tname":"north","et":[""" +
+      """{"lastname":"a"},{"lastname":"b"},{"lastname":"c"},{"lastname":"d"}]}""")
+    assert(json(spread) === a, "partitioning must not change the documents")
+  }
+
   test("date-normalizing parity loader formats temporal columns as Bangkok dates") {
     val (db, schema) = MigrationPipeline.converted(spark, sf)
     val mapper = new graft.map.DataMapper(spark, sf, db,

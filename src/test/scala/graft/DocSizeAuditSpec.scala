@@ -39,6 +39,38 @@ class DocSizeAuditSpec extends SparkSpec {
     }
   }
 
+  test("a same-parent junction is priced as the build nests it; a parent " +
+      "with no children is priced at its own fields only") {
+    import graft.model._
+    import spark.implicits._
+    // SchemaConverterSpec's follows junction: both FKs into user, nested
+    // once under the followee with the follower's uname inlined
+    val db = DatabaseMeta("t", Seq(
+      TableMeta("user", 3, Seq("uid", "uname"), Seq("uid"), Seq.empty,
+        isReferenced = true, referencingTables = Seq("follows")),
+      TableMeta("follows", 2, Seq("fid", "follower", "followee"), Seq("fid"),
+        Seq(ForeignKeyMeta("follower", "user", "uid"),
+          ForeignKeyMeta("followee", "user", "uid")),
+        isReferenced = false, referencingTables = Seq.empty)))
+    val user = SchemaConverter.convert(db).roots.find(_.name == "user").get
+    val dfs = Map(
+      "user" -> Seq((1L, "ann"), (2L, "bo"), (3L, "cy")).toDF("uid", "uname"),
+      "follows" -> Seq((10L, 1L, 2L), (11L, 3L, 2L)).toDF("fid", "follower", "followee"))
+    val loader = (_: org.apache.spark.sql.SparkSession, _: String, n: String) => dfs(n)
+    val est = new DocSizeAudit(spark, "", db, loader).estimateRoot(user)
+      .as[(Long, Long)].collect().toMap
+    // byte model: 5 frame; uid 2+3 name + 8; uname 2+5 name + len+5
+    def own(uname: String) = 5L + (5 + 8) + (7 + uname.length + 5)
+    assert(est(1L) === own("ann"), "ann follows someone but has no followers")
+    assert(est(3L) === own("cy"))
+    // bo's array: 7 + "follows", then 4 + a (fid, uname) doc per follower
+    // (both FKs dropped, the follower's name inlined)
+    assert(est(2L) === own("bo") + (7 + 7) + (4 + own("ann")) + (4 + own("cy")))
+    val built = new DataMapper(spark, "", db, loader).mapRoot(user)
+    assert(built.filter(col("follows").isNotNull).select("uid").as[Long].collect().toSeq === Seq(2L),
+      "the build nests exactly the edge the audit priced")
+  }
+
   test("the audit plan builds no documents: no nesting aggregate anywhere") {
     val (a, _, schema) = audit(sf)
     val region = schema.roots.find(_.name == "region").get

@@ -39,6 +39,17 @@ class EmbeddingSpec extends SparkSpec {
     assert(out(2).isNullAt(out(2).fieldIndex("links")))
   }
 
+  test("empty sort keys order arrays by every document field, plain and salted alike") {
+    val kids = Seq((12, 1, "b"), (11, 1, "b"), (10, 1, "a"), (13, 2, "z")).toDF("cid", "fk", "cname")
+      .coalesce(1)
+    val plain = Embedding.oneWayEmbed(parent, "pid", kids, "fk", "kids")
+    val first = plain.orderBy("pid").collect()(0)
+    val p1 = first.getSeq[Row](first.fieldIndex("kids"))
+    assert(p1.map(r => (r.getInt(0), r.getString(1))) === Seq((10, "a"), (11, "b"), (12, "b")))
+    val salted = Embedding.oneWayEmbedSalted(parent, "pid", kids, "fk", "kids", Seq.empty, salts = 3)
+    assert(salted.orderBy("pid").toJSON.collect().toSeq === plain.orderBy("pid").toJSON.collect().toSeq)
+  }
+
   test("renameFkRefs renames columns only, values pass through") {
     val out = Embedding.renameFkRefs(child, Seq("fk"))
     assert(out.columns.toSeq === Seq("cid", "fk_REF", "cname"))

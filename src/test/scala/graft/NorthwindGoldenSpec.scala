@@ -179,6 +179,28 @@ class NorthwindGoldenSpec extends SparkSpec {
       "employee attrs inlined (two-way; the archive's missing regionId is its known staleness)")
   }
 
+  test("cold tree: every root document's estimate is within 2x of its built JSON") {
+    // the audit must price the two-way edges (inlined other-parent
+    // attributes, the self-junction, the chained two-ways) the build nests
+    val db = mkDb(0L)
+    val audit = new graft.map.DocSizeAudit(spark, "", db, (_, _, name) => dfs(name))
+    import org.apache.spark.sql.functions._
+    for (root <- cold.roots) {
+      val key = db(root.name).primaryKeys.head
+      val built = mapper(db).mapRoot(root)
+      val actual = built.select(col(key),
+        octet_length(to_json(struct(built.columns.map(col): _*))).as("json_bytes"))
+      val joined = audit.estimateRoot(root).join(actual, key)
+        .select(col("est_doc_bytes"), col("json_bytes")).collect()
+      assert(joined.length === dfs(root.name).count(), root.name)
+      joined.foreach { r =>
+        val ratio = r.getLong(0).toDouble / r.getInt(1)
+        assert(ratio > 0.5 && ratio < 2.0,
+          s"${root.name}: est=${r.getLong(0)} json=${r.getInt(1)}")
+      }
+    }
+  }
+
   test("document template renders the reference UI's empty-valued JSON") {
     // the UI shape (NoSqlCollection.js:3-28): every attribute maps to
     // "", every embedded collection to a one-element array of its own

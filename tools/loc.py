@@ -9,7 +9,9 @@ literals are skipped, so a `//` or `/*` inside one is not a comment.
     python3 tools/loc.py [--files] [ROOT]
 
 prints the code lines of src/main and src/test (ROOT defaults to the
-repository root), and with --files every file's count first.
+repository root), and with --files every file's count first. An
+unknown flag, or a ROOT with no src/main, prints the usage line and
+exits with status 1.
 """
 import os
 import sys
@@ -54,10 +56,18 @@ def code_lines(path):
     return n
 
 
+USAGE = "usage: tools/loc.py [--files] [ROOT]"
+
+
 def main(argv):
     files = "--files" in argv
     args = [a for a in argv if a != "--files"]
     root = args[0] if args else os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+    # an unknown flag or a ROOT without src/main would count 0 lines
+    # silently; refuse instead
+    if len(args) > 1 or any(a.startswith("-") for a in args) or \
+            not os.path.isdir(os.path.join(root, "src/main")):
+        sys.exit(USAGE)
     for tree in ("src/main", "src/test"):
         total = 0
         for d, _, names in sorted(os.walk(os.path.join(root, tree))):
